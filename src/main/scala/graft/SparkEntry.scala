@@ -28,17 +28,6 @@ object SparkEntry {
   private val martCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
 
-  /** GRAFT_PROFILE-gated build timer (the dupClusters convention) — off
-    * the hot path entirely when the env var is unset.
-    */
-  private def prof[A](name: String)(f: => A): A =
-    if (sys.env.contains("GRAFT_PROFILE")) {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"PROFILE $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    } else f
-
   private def memo(s: SparkSession, dir: String, key: String)
       (build: => DataFrame): DataFrame = {
     // drop entries of stopped sessions: a long-lived JVM that restarts
@@ -48,7 +37,7 @@ object SparkEntry {
     // TrieMap guards the map structure; prewarmShared's two legs build
     // DISJOINT keys concurrently (getOrElseUpdate is atomic per key), and
     // the per-query fan-out afterwards is read-only
-    martCache.getOrElseUpdate((s, dir, key), prof(s"memo.$key") {
+    martCache.getOrElseUpdate((s, dir, key), {
       val df = build.persist()
       df.count() // eager: materialize once, before fan-out
       df
@@ -304,13 +293,7 @@ object SparkEntry {
     import scala.concurrent.duration.Duration
     val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val profiling = sys.env.contains("GRAFT_PROFILE")
-    def leg(name: String)(f: => Unit): Future[Unit] = Future {
-      val t0 = System.nanoTime()
-      f
-      if (profiling)
-        println(f"PROFILE prewarm.$name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
+    def leg(f: => Unit): Future[Unit] = Future(f)
     try {
       // the walked-runbook stores (era migrations text + mm, the serving
       // media catalog) are mutually independent like the two relation
@@ -319,11 +302,11 @@ object SparkEntry {
       // the sum. Stand-up cost is shared-build cost by design (demoRoot);
       // the battery rows time the fetch.
       val legs = Seq(
-        leg("dim") { dimSecurities(s, dir); () }, // int → fct → dim
-        leg("audit") { curationAudit(s, dir); () }, // dupClusters → audit
-        leg("era") { eraWalkRoots(s, dir); () },
-        leg("eramm") { eraWalkRootsMm(s, dir); () },
-        leg("mediastore") { mediaStoreRoot(s, dir); () })
+        leg { dimSecurities(s, dir); () }, // int → fct → dim
+        leg { curationAudit(s, dir); () }, // dupClusters → audit
+        leg { eraWalkRoots(s, dir); () },
+        leg { eraWalkRootsMm(s, dir); () },
+        leg { mediaStoreRoot(s, dir); () })
       legs.foreach(Await.result(_, Duration.Inf))
     } finally pool.shutdown()
   }
@@ -465,10 +448,8 @@ object SparkEntry {
     eraLandingLock.synchronized {
       demoRoot(s, dir, "eralanding") { base =>
         val docs = T.table(s, dir, "documents").select("doc_id", "text")
-        prof("era.land0")(
-          landOne(docs.filter("doc_id % 2 = 0"), s"$base/land0", "b0.parquet"))
-        prof("era.land1")(
-          landOne(docs.filter("doc_id % 2 = 1"), s"$base/land1", "b1.parquet"))
+        landOne(docs.filter("doc_id % 2 = 0"), s"$base/land0", "b0.parquet")
+        landOne(docs.filter("doc_id % 2 = 1"), s"$base/land1", "b1.parquet")
       }
     }
 
@@ -487,15 +468,13 @@ object SparkEntry {
     val base = demoRoot(s, dir, "erafeed") { base =>
       val docs = T.table(s, dir, "documents").select("doc_id", "text")
       val land = eraLandings(s, dir)
-      prof("era.drain0")(
-        IncrementalPacking.run(s, s"$land/land0", s"$base/ckpt0",
-          s"$base/root0", docs.schema,
-          nTokensSql = TextAnalysis.subwordCountSqlWith(Portable.subwordVocab),
-          payloadVocab = Some(Portable.subwordVocab)))
-      prof("era.migrate")(
-        PackingMigration.repackUnderVocab(s, s"$base/root0", s"$base/root1",
-          s"$land/land1", s"$base/ckpt1", docs.schema,
-          Portable.trainedFixtureVocab))
+      IncrementalPacking.run(s, s"$land/land0", s"$base/ckpt0",
+        s"$base/root0", docs.schema,
+        nTokensSql = TextAnalysis.subwordCountSqlWith(Portable.subwordVocab),
+        payloadVocab = Some(Portable.subwordVocab))
+      PackingMigration.repackUnderVocab(s, s"$base/root0", s"$base/root1",
+        s"$land/land1", s"$base/ckpt1", docs.schema,
+        Portable.trainedFixtureVocab)
       ()
     }
     Seq(s"$base/root0", s"$base/root1")
@@ -516,17 +495,15 @@ object SparkEntry {
     val base = demoRoot(s, dir, "erafeedmm") { base =>
       val docs = T.table(s, dir, "documents").select("doc_id", "text")
       val land = eraLandings(s, dir)
-      prof("eramm.drain0")(
-        IncrementalPacking.run(s, s"$land/land0", s"$base/ckpt0",
-          s"$base/root0", docs.schema,
-          nTokensSql = Packing.mmTokensSqlWith(Portable.subwordVocab),
-          payloadVocab = Some(Portable.subwordVocab),
-          mmCarriageSql = Some(Packing.MediaCarriageSql)))
-      prof("eramm.migrate")(
-        PackingMigration.repackUnderVocab(s, s"$base/root0", s"$base/root1",
-          s"$land/land1", s"$base/ckpt1", docs.schema,
-          Portable.trainedFixtureVocab,
-          mmCarriageSql = Some(Packing.MediaCarriageSql)))
+      IncrementalPacking.run(s, s"$land/land0", s"$base/ckpt0",
+        s"$base/root0", docs.schema,
+        nTokensSql = Packing.mmTokensSqlWith(Portable.subwordVocab),
+        payloadVocab = Some(Portable.subwordVocab),
+        mmCarriageSql = Some(Packing.MediaCarriageSql))
+      PackingMigration.repackUnderVocab(s, s"$base/root0", s"$base/root1",
+        s"$land/land1", s"$base/ckpt1", docs.schema,
+        Portable.trainedFixtureVocab,
+        mmCarriageSql = Some(Packing.MediaCarriageSql))
       ()
     }
     Seq(s"$base/root0", s"$base/root1")

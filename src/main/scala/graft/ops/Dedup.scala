@@ -496,14 +496,6 @@ object Dedup {
     * cluster with themselves) and a keeper flag.
     */
   def dupClusters(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    val profiling = sys.env.contains("GRAFT_PROFILE")
-    def prof[A](name: String)(f: => A): A =
-      if (profiling) {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"PROFILE dupClusters.$name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      } else f
     val sc = docs.sparkSession.sparkContext
     // eager localCheckpoint: materializes AND truncates lineage to a flat
     // LogicalRDD. persist() alone is not enough for the iterative loop —
@@ -525,15 +517,15 @@ object Dedup {
     def free(ids: Set[Int]): Unit =
       ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
     val fwd = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-    val (edges, edgeIds) = prof("edges")(checkpointTracked(fwd.unionByName(
-      fwd.select(col("dst").as("src"), col("src").as("dst")))))
+    val (edges, edgeIds) = checkpointTracked(fwd.unionByName(
+      fwd.select(col("dst").as("src"), col("src").as("dst"))))
     // propagate only over edge-connected nodes (the interesting minority,
     // typically ≪ corpus); isolated docs join back as self-clusters at the
     // end; the loop exits as soon as labels stop changing.
-    var (labels, labelIds) = prof("labels0")(checkpointTracked(
+    var (labels, labelIds) = checkpointTracked(
       edges.select(col("src").as("doc_id"))
         .distinct()
-        .withColumn("cluster_id", col("doc_id"))))
+        .withColumn("cluster_id", col("doc_id")))
     // everything checkpointed so far; freed wholesale if the loop throws
     // (a caller catching the failure would otherwise keep the blocks
     // pinned for the session lifetime)
@@ -555,10 +547,10 @@ object Dedup {
       // component, so the final fixpoint is unchanged: min doc_id.
       val jumpTo = viaEdges
         .select(col("doc_id").as("via_id"), col("cluster_id").as("via_cluster"))
-      val (propagated, propIds) = prof(s"round$iters")(checkpointTracked(viaEdges
+      val (propagated, propIds) = checkpointTracked(viaEdges
         .join(jumpTo, col("cluster_id") === col("via_id"), "left")
         .select(col("doc_id"),
-          coalesce(col("via_cluster"), col("cluster_id")).as("cluster_id"))))
+          coalesce(col("via_cluster"), col("cluster_id")).as("cluster_id")))
       live ++= propIds
       val changed = propagated
         .join(labels.withColumnRenamed("cluster_id", "old"), Seq("doc_id"))
@@ -568,8 +560,6 @@ object Dedup {
       labels = propagated
       labelIds = propIds
       converged = changed == 0
-      if (profiling)
-        println(s"PROFILE dupClusters round=$iters changed=$changed")
     } catch { case t: Throwable => free(live); throw t }
     // 50 rounds covers any realistic dup-cluster diameter; a graph that
     // still hasn't converged (pathological chain topology) must fail loudly

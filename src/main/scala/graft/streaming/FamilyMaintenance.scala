@@ -38,10 +38,11 @@ import org.apache.spark.sql.functions._
   * carried rows land at `batch=-1` (below every streaming epoch), so a
   * stream re-entering under a FRESH checkpoint appends `batch=0` beside
   * the history and its own-partition-excluded guard reads still see
-  * every carried row. One fresh era per compaction: each family's `run`
-  * refuses a fresh checkpoint while `batch>=0` directories remain
-  * ([[StoragePaths.hasEpochDirs]]), because the new era's ids restart
-  * at 0 and would overwrite them.
+  * every carried row. One fresh era per compaction: [[Drain]], the
+  * drain-side twin every family's `run` runs on, refuses a fresh
+  * checkpoint while `batch>=0` directories remain
+  * ([[Drain.run]]), because the new era's ids restart at 0
+  * and would overwrite them.
   *
   * What stays per-family: the store list itself (pinned against the
   * writer's `storePaths` so a store added to the writer cannot silently

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, StructField, StructType}
 
 import graft.ops.{Dedup, Similarity}
@@ -175,100 +174,71 @@ object IncrementalAnnIndex {
       embSchema: StructType,
       kmeansIters: Int = 0,
       numIdBuckets: Int = NumIdBuckets): DataFrame = {
-    // fresh-era guard (the shared StoragePaths.hasEpochDirs contract): a
-    // new checkpoint era's batch ids restart at 0 and would overwrite the
-    // previous era's assignment batches. Re-entry is via a generation
-    // whose history sits at batch=-1 (IvfMaintenance's retrain, or a
-    // plain StoreMaintenance.compact of the list store).
-    require(StoragePaths.exists(spark, checkpointDir) ||
-      !StoragePaths.hasEpochDirs(spark, listPath),
-      s"IncrementalAnnIndex.run: fresh checkpoint $checkpointDir over " +
-        s"list store $listPath which still holds batch>=0 directories — " +
-        "the new era would overwrite them; compact first (history " +
-        "belongs at batch=-1 before a fresh era)")
-    def exists(p: String): Boolean = StoragePaths.exists(spark, p)
-    val q = spark.readStream.schema(embSchema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // one row per vec_id even within the drain (a file and its
-          // re-crawl can land in the same AvailableNow batch) — BEFORE
-          // bootstrap too, or duplicated seed rows double the leader set
-          val uniq = batch.dropDuplicates("vec_id")
-          if (!exists(leaderPath)) {
-            // bootstrap exactly while no leaders exist — i.e. on the first
-            // NON-EMPTY batch. Keying on batchId == 0 as well would brick
-            // the stream if epoch 0 ever committed empty (a drain over a
-            // not-yet-populated landing dir): every later batch would die
-            // in readLeaders with no recovery short of deleting the
-            // checkpoint. The exists() guard alone already keeps a store
-            // re-entering service under a fresh checkpoint
-            // (post-compaction) on its frozen leaders — no retrain, no
-            // re-routing of existing assignments. A partial leader
-            // write from a crashed bootstrap is not silently trusted —
-            // readLeaders fails loudly on a wrong centroid count.
-            val trained = Similarity.trainLeaders(uniq, kmeansIters)
-            val n = trained.count()
-            require(n == Similarity.NumLists.toLong,
-              s"IncrementalAnnIndex bootstrap: got $n leaders, need " +
-                s"${Similarity.NumLists} — the bootstrap batch must " +
-                s"contain the seed vec_ids (< ${Similarity.NumLists})")
-            trained.write.mode("overwrite").parquet(leaderPath)
-          }
-          val cents = readLeaders(spark, leaderPath)
-          // the STORE's bucket count governs both the probe and the
-          // write — a compacted store re-entering service keeps its
-          // marker's count even if the session default changed, or the
-          // probe would look in the wrong partitions and re-admit ids.
-          // The marker is written AFTER the first data write (below), so
-          // marker-present ⇒ data-present. Flatness is a STRUCTURAL probe
-          // (data files directly under batch=N), not marker absence: a
-          // genuine legacy store stays flat (batch layouts cannot mix
-          // under one root, and correctness only needs the unpruned
-          // fallback probe), while a bucketed store whose marker write
-          // was lost to a crash replays into the bucketed branch and
-          // self-heals instead of being demoted to flat forever.
-          val storeBuckets = bucketCount(spark, listPath)
-          val legacyFlat = storeBuckets.isEmpty &&
-            StoragePaths.isFlatLayout(spark, listPath)
-          // first write wins for a re-landed vec_id (FAISS add
-          // semantics), checked against only the touched id buckets
-          // (see priorIds).
-          val fresh =
-            if (storeBuckets.isDefined || legacyFlat)
-              uniq.join(priorIds(spark, listPath, uniq, batchId),
-                Seq("vec_id"), "left_anti")
-            else uniq
-          val assigned = Similarity.assignWithLeadersRetaining(fresh, cents)
-            .select("vec_id", "list_id", "list_cos", "embedding", "norm")
-          if (legacyFlat)
-            assigned.write.mode("overwrite")
-              .parquet(s"$listPath/batch=$batchId")
-          else {
-            val buckets = storeBuckets.getOrElse(numIdBuckets)
-            // repartition ON the bucket column: one file per touched
-            // bucket per batch (a bucket lives in exactly one task), not
-            // one per (task × bucket)
-            assigned
-              .withColumn("id_bucket", idBucket(col("vec_id"), buckets))
-              .repartition(col("id_bucket"))
-              .write.mode("overwrite").partitionBy("id_bucket")
-              .parquet(s"$listPath/batch=$batchId")
-            if (storeBuckets.isEmpty)
-              StoragePaths.writeSmallFile(
-                spark, s"$listPath/$IdBucketsMarker", buckets.toString)
-          }
-        }
-        ()
+    val leaders = Drain.frozen(spark, leaderPath) { uniq =>
+      // the frozen leaders keep a store re-entering service under a fresh
+      // checkpoint (post-compaction) on its own quantizer — no retrain,
+      // no re-routing of existing assignments. A partial leader write
+      // from a crashed bootstrap is not silently trusted — readLeaders
+      // fails loudly on a wrong centroid count.
+      val trained = Similarity.trainLeaders(uniq, kmeansIters)
+      val n = trained.count()
+      require(n == Similarity.NumLists.toLong,
+        s"IncrementalAnnIndex bootstrap: got $n leaders, need " +
+          s"${Similarity.NumLists} — the bootstrap batch must " +
+          s"contain the seed vec_ids (< ${Similarity.NumLists})")
+      trained.write.mode("overwrite").parquet(leaderPath)
+    }(readLeaders(spark, leaderPath))
+    Drain.run(spark, "IncrementalAnnIndex.run",
+      spark.readStream.schema(embSchema).parquet(landingDir), checkpointDir,
+      Seq(listPath)) { (batch, batchId) =>
+      // one row per vec_id even within the drain (a file and its
+      // re-crawl can land in the same AvailableNow batch) — BEFORE
+      // bootstrap too, or duplicated seed rows double the leader set
+      val uniq = batch.dropDuplicates("vec_id")
+      val cents = leaders(uniq)
+      // the STORE's bucket count governs both the probe and the
+      // write — a compacted store re-entering service keeps its
+      // marker's count even if the session default changed, or the
+      // probe would look in the wrong partitions and re-admit ids.
+      // The marker is written AFTER the first data write (below), so
+      // marker-present ⇒ data-present. Flatness is a STRUCTURAL probe
+      // (data files directly under batch=N), not marker absence: a
+      // genuine legacy store stays flat (batch layouts cannot mix
+      // under one root, and correctness only needs the unpruned
+      // fallback probe), while a bucketed store whose marker write
+      // was lost to a crash replays into the bucketed branch and
+      // self-heals instead of being demoted to flat forever.
+      val storeBuckets = bucketCount(spark, listPath)
+      val legacyFlat = storeBuckets.isEmpty &&
+        StoragePaths.isFlatLayout(spark, listPath)
+      // first write wins for a re-landed vec_id (FAISS add
+      // semantics), checked against only the touched id buckets
+      // (see priorIds).
+      val fresh =
+        if (storeBuckets.isDefined || legacyFlat)
+          uniq.join(priorIds(spark, listPath, uniq, batchId),
+            Seq("vec_id"), "left_anti")
+        else uniq
+      val assigned = Similarity.assignWithLeadersRetaining(fresh, cents)
+        .select("vec_id", "list_id", "list_cos", "embedding", "norm")
+      if (legacyFlat)
+        assigned.write.mode("overwrite")
+          .parquet(s"$listPath/batch=$batchId")
+      else {
+        val buckets = storeBuckets.getOrElse(numIdBuckets)
+        // repartition ON the bucket column: one file per touched
+        // bucket per batch (a bucket lives in exactly one task), not
+        // one per (task × bucket)
+        assigned
+          .withColumn("id_bucket", idBucket(col("vec_id"), buckets))
+          .repartition(col("id_bucket"))
+          .write.mode("overwrite").partitionBy("id_bucket")
+          .parquet(s"$listPath/batch=$batchId")
+        if (storeBuckets.isEmpty)
+          StoragePaths.writeSmallFile(
+            spark, s"$listPath/$IdBucketsMarker", buckets.toString)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // a drain that landed nothing never creates the store — return an
-    // empty index, not a crash
-    if (exists(listPath))
-      spark.read.parquet(listPath).drop("batch", "id_bucket")
-    else spark.createDataFrame(new java.util.ArrayList[Row](), ListSchema)
+    }
+    StoragePaths.readOrEmpty(spark, listPath, ListSchema)
   }
 }

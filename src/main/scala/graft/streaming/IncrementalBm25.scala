@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.ops.Portable.tokensSpark
@@ -62,9 +61,6 @@ object IncrementalBm25 {
     */
   def storePaths(root: String): Seq[String] =
     Seq(postingsPath(root), statsPath(root), decidedPath(root))
-
-  private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[Row](), schema)
 
   /** doc_ids already indexed, touched-bucket pruned, excluding the
     * replaying batch's own partition — the first-write-wins guard
@@ -208,41 +204,26 @@ object IncrementalBm25 {
       checkpointDir: String,
       root: String,
       docSchema: StructType): DataFrame = {
-    require(StoragePaths.exists(spark, checkpointDir) ||
-      storePaths(root).forall(p => !StoragePaths.hasEpochDirs(spark, p)),
-      s"IncrementalBm25.run: fresh checkpoint $checkpointDir over store " +
-        s"$root which still holds batch>=0 directories — the new era " +
-        "would overwrite them; compact first (Bm25Maintenance.compact " +
-        "folds history to batch=-1)")
-    val q = spark.readStream.schema(docSchema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val uniq = batch.dropDuplicates("doc_id")
-          val guarded = uniq.join(
-            priorDocIds(spark, root, uniq.select("doc_id"), batchId),
-            Seq("doc_id"), "left_anti")
-            .localCheckpoint() // one guard decision; three writes below
-          if (!guarded.isEmpty) {
-            val (postings, delta) = indexBatch(guarded)
-            StoragePaths.writeBucketedStoreBatch(spark, postingsPath(root),
-              postings, "term", batchId, NumBuckets)
-            delta.coalesce(1).write.mode("overwrite")
-              .parquet(s"${statsPath(root)}/batch=$batchId")
-            StoragePaths.writeBucketedStoreBatch(spark, decidedPath(root),
-              guarded.select("doc_id"), "doc_id", batchId, NumBuckets,
-              legacyFlatFallback = false)
-          }
-        }
-        ()
+    Drain.run(spark, "IncrementalBm25.run",
+      spark.readStream.schema(docSchema).parquet(landingDir), checkpointDir,
+      storePaths(root)) { (batch, batchId) =>
+      val uniq = batch.dropDuplicates("doc_id")
+      val guarded = uniq.join(
+        priorDocIds(spark, root, uniq.select("doc_id"), batchId),
+        Seq("doc_id"), "left_anti")
+        .localCheckpoint() // one guard decision; three writes below
+      if (!guarded.isEmpty) {
+        val (postings, delta) = indexBatch(guarded)
+        StoragePaths.writeBucketedStoreBatch(spark, postingsPath(root),
+          postings, "term", batchId, NumBuckets)
+        delta.coalesce(1).write.mode("overwrite")
+          .parquet(s"${statsPath(root)}/batch=$batchId")
+        StoragePaths.writeBucketedStoreBatch(spark, decidedPath(root),
+          guarded.select("doc_id"), "doc_id", batchId, NumBuckets,
+          legacyFlatFallback = false)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    if (StoragePaths.exists(spark, postingsPath(root)))
-      spark.read.parquet(postingsPath(root)).drop("batch", "id_bucket")
-    else emptyOf(spark, StructType(Seq(
+    }
+    StoragePaths.readOrEmpty(spark, postingsPath(root), StructType(Seq(
       StructField("term", StringType), StructField("doc_id", LongType),
       StructField("tf", LongType), StructField("dl", LongType))))
   }

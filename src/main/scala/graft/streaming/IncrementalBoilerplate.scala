@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.ops.Dedup
@@ -57,9 +56,6 @@ object IncrementalBoilerplate {
     StructField("chunk_hash", LongType),
     StructField("chunk_hash2", LongType),
     StructField("df_docs", LongType)))
-
-  private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[Row](), schema)
 
   // ------------------------------------------------------------------ //
   // Family-root layout: one directory holding every store of a drain,  //
@@ -201,70 +197,49 @@ object IncrementalBoilerplate {
       docSchema: StructType,
       minDf: Int = Dedup.BoilerplateMinDf,
       metricsPath: Option[String] = None): DataFrame = {
-    // fresh-era guard (the shared StoragePaths.hasEpochDirs contract): a
-    // new checkpoint era's batch ids restart at 0, so its writes would
-    // silently overwrite the previous era's batch>=0 partitions — and a
-    // lost df delta silently under-counts every chunk it covered.
-    // Re-entry is via compaction (BoilerplateMaintenance folds history,
-    // summing the deltas, to batch=-1). A genuine crash-replay keeps its
-    // CHECKPOINT and passes.
-    require(StoragePaths.exists(spark, checkpointDir) ||
-      (Seq(dfPath, corpusPath,
-        IncrementalChunkDedup.docIdIndexPath(corpusPath)) ++
-        metricsPath.toSeq)
-        .forall(p => !StoragePaths.hasEpochDirs(spark, p)),
-      s"IncrementalBoilerplate.run: fresh checkpoint $checkpointDir over " +
-        s"stores ($dfPath, $corpusPath) which still hold batch>=0 " +
-        "directories — the new era would overwrite them; compact first " +
-        "(BoilerplateMaintenance.compact folds history to batch=-1)")
+    // a lost df delta silently under-counts every chunk it covered, so
+    // every store is guarded; re-entry is via BoilerplateMaintenance,
+    // which folds history, summing the deltas, to batch=-1
     val idPath = IncrementalChunkDedup.docIdIndexPath(corpusPath)
-    val q = spark.readStream.schema(docSchema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // first-write-wins on doc_id (the shared sidecar contract): a
-          // re-crawled document must neither re-emit rows nor inflate df
-          val guarded = batch.join(
-            IncrementalChunkDedup.priorDocIds(
-              spark, corpusPath, batch.select("doc_id"), batchId),
-            Seq("doc_id"), "left_anti")
-          // a fully re-crawl-guarded batch still flows through: its empty
-          // writes and its nDocs=0 metrics row keep the per-batch yield
-          // ledger gap-free (the IncrementalChunkDedup audit contract —
-          // "all re-crawls" and "never ran" must stay distinguishable)
-          //
-          // chunk ONCE per batch: the persisted occurrence relation feeds
-          // the touched-bucket probe AND the election/reassembly inside
-          // filterChunkedBatch (which takes ownership)
-          val uniq = guarded.dropDuplicates("doc_id")
-          val rows = Dedup.chunkRows(uniq).persist()
-          rows.count()
-          val prior = priorDf(spark, dfPath,
-            rows.select("chunk_hash"), batchId)
-          val r = filterChunkedBatch(uniq, rows, prior, minDf)
-          r.cleanDocs.write.mode("overwrite")
-            .parquet(s"$corpusPath/batch=$batchId")
-          StoragePaths.writeBucketedStoreBatch(spark, dfPath,
-            r.dfDeltas, "chunk_hash", batchId, NumDfBuckets)
-          StoragePaths.writeBucketedStoreBatch(spark, idPath,
-            r.cleanDocs.select("doc_id"), "doc_id", batchId, NumDfBuckets,
-            legacyFlatFallback = false)
-          metricsPath.foreach { mp =>
-            import spark.implicits._
-            Seq((batchId, r.nDocs, r.nOccurrences, r.nDropped))
-              .toDF("batch_id", "n_docs", "n_occurrences", "n_dropped")
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$mp/batch=$batchId")
-          }
-        }
-        ()
+    Drain.run(spark, "IncrementalBoilerplate.run",
+      spark.readStream.schema(docSchema).parquet(landingDir), checkpointDir,
+      Seq(dfPath, corpusPath, idPath) ++ metricsPath) { (batch, batchId) =>
+      // first-write-wins on doc_id (the shared sidecar contract): a
+      // re-crawled document must neither re-emit rows nor inflate df
+      val guarded = batch.join(
+        IncrementalChunkDedup.priorDocIds(
+          spark, corpusPath, batch.select("doc_id"), batchId),
+        Seq("doc_id"), "left_anti")
+      // a fully re-crawl-guarded batch still flows through: its empty
+      // writes and its nDocs=0 metrics row keep the per-batch yield
+      // ledger gap-free (the IncrementalChunkDedup audit contract —
+      // "all re-crawls" and "never ran" must stay distinguishable)
+      //
+      // chunk ONCE per batch: the persisted occurrence relation feeds
+      // the touched-bucket probe AND the election/reassembly inside
+      // filterChunkedBatch (which takes ownership)
+      val uniq = guarded.dropDuplicates("doc_id")
+      val rows = Dedup.chunkRows(uniq).persist()
+      rows.count()
+      val prior = priorDf(spark, dfPath,
+        rows.select("chunk_hash"), batchId)
+      val r = filterChunkedBatch(uniq, rows, prior, minDf)
+      r.cleanDocs.write.mode("overwrite")
+        .parquet(s"$corpusPath/batch=$batchId")
+      StoragePaths.writeBucketedStoreBatch(spark, dfPath,
+        r.dfDeltas, "chunk_hash", batchId, NumDfBuckets)
+      StoragePaths.writeBucketedStoreBatch(spark, idPath,
+        r.cleanDocs.select("doc_id"), "doc_id", batchId, NumDfBuckets,
+        legacyFlatFallback = false)
+      metricsPath.foreach { mp =>
+        import spark.implicits._
+        Seq((batchId, r.nDocs, r.nOccurrences, r.nDropped))
+          .toDF("batch_id", "n_docs", "n_occurrences", "n_dropped")
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$mp/batch=$batchId")
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    if (StoragePaths.exists(spark, corpusPath))
-      spark.read.parquet(corpusPath).drop("batch")
-    else emptyOf(spark, IncrementalChunkDedup.CorpusSchema)
+    }
+    StoragePaths.readOrEmpty(spark, corpusPath,
+      IncrementalChunkDedup.CorpusSchema)
   }
 }

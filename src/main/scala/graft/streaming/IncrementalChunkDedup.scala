@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.ops.Dedup
@@ -106,9 +105,6 @@ object IncrementalChunkDedup {
       docSchema: StructType): DataFrame =
     run(spark, landingDir, checkpointDir, chunkPathOf(root),
       corpusPathOf(root), docSchema, Some(metricsPathOf(root)))
-
-  private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[Row](), schema)
 
   /** Stored chunk hashes a batch could collide with, read with static
     * partition pruning to the batch hashes' touched `id_bucket`s
@@ -220,66 +216,44 @@ object IncrementalChunkDedup {
       corpusPath: String,
       docSchema: StructType,
       metricsPath: Option[String] = None): DataFrame = {
-    // fresh-era guard (the shared StoragePaths.hasEpochDirs contract): a
-    // new checkpoint era's batch ids restart at 0, so its writes would
-    // silently overwrite the previous era's batch>=0 partitions.
-    // Re-entry is via compaction (ChunkDedupMaintenance folds history to
-    // batch=-1). A genuine crash-replay keeps its CHECKPOINT and passes.
-    require(StoragePaths.exists(spark, checkpointDir) ||
-      (Seq(chunkPath, corpusPath, docIdIndexPath(corpusPath)) ++
-        metricsPath.toSeq)
-        .forall(p => !StoragePaths.hasEpochDirs(spark, p)),
-      s"IncrementalChunkDedup.run: fresh checkpoint $checkpointDir over " +
-        s"stores ($chunkPath, $corpusPath) which still hold batch>=0 " +
-        "directories — the new era would overwrite them; compact first " +
-        "(ChunkDedupMaintenance.compact folds history to batch=-1)")
-    def exists(p: String): Boolean = StoragePaths.exists(spark, p)
     val idPath = docIdIndexPath(corpusPath)
-    val q = spark.readStream.schema(docSchema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // first-write-wins on doc_id: a re-crawled document landing in
-          // a later batch is dropped whole, not re-admitted with empty
-          // text (its chunks are all stored — by its own prior copy)
-          val guarded = batch.join(
-            priorDocIds(spark, corpusPath, batch.select("doc_id"), batchId),
-            Seq("doc_id"), "left_anti")
-          // chunk ONCE per batch: the persisted occurrence relation feeds
-          // the touched-bucket probe AND the election/reassembly inside
-          // dedupChunkedBatch (which takes ownership and unpersists it)
-          val uniq = guarded.dropDuplicates("doc_id")
-          val rows = Dedup.chunkRows(uniq).persist()
-          rows.count()
-          val prior = priorChunkHashes(spark, chunkPath,
-            rows.select("chunk_hash"), batchId)
-          val r = dedupChunkedBatch(uniq, rows, prior)
-          r.cleanDocs.write.mode("overwrite")
-            .parquet(s"$corpusPath/batch=$batchId")
-          // the structural-flat probe and marker-after-data ordering live
-          // in the shared writer ([[StoragePaths.writeBucketedStoreBatch]])
-          // so the exactly-once/self-healing contract cannot fork across
-          // the store-keeping modules
-          StoragePaths.writeBucketedStoreBatch(spark, chunkPath,
-            r.newHashes, "chunk_hash", batchId, NumChunkBuckets)
-          StoragePaths.writeBucketedStoreBatch(spark, idPath,
-            r.cleanDocs.select("doc_id"), "doc_id", batchId, NumChunkBuckets,
-            legacyFlatFallback = false)
-          metricsPath.foreach { mp =>
-            import spark.implicits._
-            Seq((batchId, r.nDocs, r.nOccurrences, r.nKeptChunks))
-              .toDF("batch_id", "n_docs", "n_occurrences", "n_kept_chunks")
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$mp/batch=$batchId")
-          }
-        }
-        ()
+    Drain.run(spark, "IncrementalChunkDedup.run",
+      spark.readStream.schema(docSchema).parquet(landingDir), checkpointDir,
+      Seq(chunkPath, corpusPath, idPath) ++ metricsPath) { (batch, batchId) =>
+      // first-write-wins on doc_id: a re-crawled document landing in
+      // a later batch is dropped whole, not re-admitted with empty
+      // text (its chunks are all stored — by its own prior copy)
+      val guarded = batch.join(
+        priorDocIds(spark, corpusPath, batch.select("doc_id"), batchId),
+        Seq("doc_id"), "left_anti")
+      // chunk ONCE per batch: the persisted occurrence relation feeds
+      // the touched-bucket probe AND the election/reassembly inside
+      // dedupChunkedBatch (which takes ownership and unpersists it)
+      val uniq = guarded.dropDuplicates("doc_id")
+      val rows = Dedup.chunkRows(uniq).persist()
+      rows.count()
+      val prior = priorChunkHashes(spark, chunkPath,
+        rows.select("chunk_hash"), batchId)
+      val r = dedupChunkedBatch(uniq, rows, prior)
+      r.cleanDocs.write.mode("overwrite")
+        .parquet(s"$corpusPath/batch=$batchId")
+      // the structural-flat probe and marker-after-data ordering live
+      // in the shared writer ([[StoragePaths.writeBucketedStoreBatch]])
+      // so the exactly-once/self-healing contract cannot fork across
+      // the store-keeping modules
+      StoragePaths.writeBucketedStoreBatch(spark, chunkPath,
+        r.newHashes, "chunk_hash", batchId, NumChunkBuckets)
+      StoragePaths.writeBucketedStoreBatch(spark, idPath,
+        r.cleanDocs.select("doc_id"), "doc_id", batchId, NumChunkBuckets,
+        legacyFlatFallback = false)
+      metricsPath.foreach { mp =>
+        import spark.implicits._
+        Seq((batchId, r.nDocs, r.nOccurrences, r.nKeptChunks))
+          .toDF("batch_id", "n_docs", "n_occurrences", "n_kept_chunks")
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$mp/batch=$batchId")
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    if (exists(corpusPath)) spark.read.parquet(corpusPath).drop("batch")
-    else emptyOf(spark, CorpusSchema)
+    }
+    StoragePaths.readOrEmpty(spark, corpusPath, CorpusSchema)
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 import graft.ops.{Curation, Dedup}
@@ -457,103 +456,81 @@ object IncrementalCuration {
       corpusPath: String,
       docSchema: org.apache.spark.sql.types.StructType,
       metricsPath: Option[String] = None): DataFrame = {
-    // fresh-era guard (the shared StoragePaths.hasEpochDirs contract): a
-    // new checkpoint era's batch ids restart at 0, so its writes would
-    // silently overwrite the previous era's batch>=0 partitions — in
-    // every store INCLUDING the derived band sidecar. Re-entry is via
-    // compaction (CurationMaintenance folds history to batch=-1).
-    require(StoragePaths.exists(spark, checkpointDir) ||
-      (Seq(sigPath, bandIndexPath(sigPath), corpusPath) ++
-        metricsPath.toSeq)
-        .forall(p => !StoragePaths.hasEpochDirs(spark, p)),
-      s"IncrementalCuration.run: fresh checkpoint $checkpointDir over " +
-        s"stores ($sigPath, $corpusPath) which still hold batch>=0 " +
-        "directories — the new era would overwrite them; compact first " +
-        "(CurationMaintenance.compact folds history to batch=-1)")
-    def exists(p: String): Boolean = StoragePaths.exists(spark, p)
+    // the guard covers every store INCLUDING the derived band sidecar;
+    // re-entry is via CurationMaintenance, which folds history to batch=-1
     val bandPath = bandIndexPath(sigPath)
     val emptySigs = Dedup.minhashSignatures(
-      spark.createDataFrame(new java.util.ArrayList[Row](), docSchema))
-    val q = spark.readStream.schema(docSchema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val storeExists = exists(sigPath)
-          val sigBuckets = IncrementalAnnIndex.bucketCount(spark, sigPath)
-          // every store reader excludes this batch's own partition (same
-          // reasoning as IncrementalAnnIndex.run): foreachBatch is
-          // at-least-once, and a replay after a crash-post-write must not
-          // compare the batch against its own previously written rows —
-          // that would overwrite batch=N with an empty directory, silent
-          // data loss.
-          val view =
-            if (!storeExists) StoreView.ofSigs(emptySigs)
-            else StoreView(
-              Some(priorDocIds(spark, sigPath,
-                batch.select("doc_id"), batchId)),
-              touched => priorBandRows(spark, sigPath, touched, batchId),
-              refIds => priorSigRows(spark, sigPath, refIds, batchId))
-          val r = curateBatch(batch, view)
-          // per-batch overwrite = idempotent under foreachBatch replay
-          r.curated.write.mode("overwrite")
-            .parquet(s"$corpusPath/batch=$batchId")
-          // a GENUINELY flat store (data files directly under batch=N, the
-          // structural probe — not marker absence, which a crash between
-          // first bucketed write and marker write also produces) stays
-          // flat: batch layouts cannot mix under one root, and correctness
-          // only needs the unpruned fallback readers. Its sidecar (if a
-          // rebuild created one) still receives every batch, or the pruned
-          // band probe would go blind to post-rebuild history. A bucketed
-          // store missing only its marker replays bucketed and self-heals.
-          val legacyFlat = sigBuckets.isEmpty &&
-            StoragePaths.isFlatLayout(spark, sigPath)
-          if (legacyFlat) {
-            if (bandBucketCount(spark, bandPath).isDefined)
-              writeBandIndexBatch(r.keptSigs, bandPath, batchId,
-                bandBucketCount(spark, bandPath).get)
-            r.keptSigs.write.mode("overwrite")
-              .parquet(s"$sigPath/batch=$batchId")
-          } else {
-            val sb = sigBuckets.getOrElse(NumSigIdBuckets)
-            val bb = bandBucketCount(spark, bandPath)
-              .getOrElse(NumBandBuckets)
-            writeBandIndexBatch(r.keptSigs, bandPath, batchId, bb)
-            r.keptSigs
-              .withColumn("id_bucket",
-                IncrementalAnnIndex.idBucket(col("doc_id"), sb))
-              .repartition(col("id_bucket"))
-              .write.mode("overwrite").partitionBy("id_bucket")
-              .parquet(s"$sigPath/batch=$batchId")
-            // markers AFTER the first data writes: marker-present ⇒
-            // data-present (a crash in the window self-heals because the
-            // replay overwrites the same batch directories)
-            if (bandBucketCount(spark, bandPath).isEmpty)
-              StoragePaths.writeSmallFile(
-                spark, s"$bandPath/$BandBucketsMarker", bb.toString)
-            if (sigBuckets.isEmpty)
-              StoragePaths.writeSmallFile(spark,
-                s"$sigPath/${IncrementalAnnIndex.IdBucketsMarker}",
-                sb.toString)
-          }
-          metricsPath.foreach { mp =>
-            import spark.implicits._
-            Seq((batchId, r.nLanded, r.nUnique, r.nDuplicates, r.nCurated))
-              .toDF("batch_id", "n_landed", "n_unique", "n_duplicates",
-                "n_curated")
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$mp/batch=$batchId")
-          }
-        }
-        ()
+      StoragePaths.emptyOf(spark, docSchema))
+    Drain.run(spark, "IncrementalCuration.run",
+      spark.readStream.schema(docSchema).parquet(landingDir), checkpointDir,
+      Seq(sigPath, bandPath, corpusPath) ++ metricsPath) { (batch, batchId) =>
+      val storeExists = StoragePaths.exists(spark, sigPath)
+      val sigBuckets = IncrementalAnnIndex.bucketCount(spark, sigPath)
+      // every store reader excludes this batch's own partition (same
+      // reasoning as IncrementalAnnIndex.run): foreachBatch is
+      // at-least-once, and a replay after a crash-post-write must not
+      // compare the batch against its own previously written rows —
+      // that would overwrite batch=N with an empty directory, silent
+      // data loss.
+      val view =
+        if (!storeExists) StoreView.ofSigs(emptySigs)
+        else StoreView(
+          Some(priorDocIds(spark, sigPath,
+            batch.select("doc_id"), batchId)),
+          touched => priorBandRows(spark, sigPath, touched, batchId),
+          refIds => priorSigRows(spark, sigPath, refIds, batchId))
+      val r = curateBatch(batch, view)
+      // per-batch overwrite = idempotent under foreachBatch replay
+      r.curated.write.mode("overwrite")
+        .parquet(s"$corpusPath/batch=$batchId")
+      // a GENUINELY flat store (data files directly under batch=N, the
+      // structural probe — not marker absence, which a crash between
+      // first bucketed write and marker write also produces) stays
+      // flat: batch layouts cannot mix under one root, and correctness
+      // only needs the unpruned fallback readers. Its sidecar (if a
+      // rebuild created one) still receives every batch, or the pruned
+      // band probe would go blind to post-rebuild history. A bucketed
+      // store missing only its marker replays bucketed and self-heals.
+      val legacyFlat = sigBuckets.isEmpty &&
+        StoragePaths.isFlatLayout(spark, sigPath)
+      if (legacyFlat) {
+        if (bandBucketCount(spark, bandPath).isDefined)
+          writeBandIndexBatch(r.keptSigs, bandPath, batchId,
+            bandBucketCount(spark, bandPath).get)
+        r.keptSigs.write.mode("overwrite")
+          .parquet(s"$sigPath/batch=$batchId")
+      } else {
+        val sb = sigBuckets.getOrElse(NumSigIdBuckets)
+        val bb = bandBucketCount(spark, bandPath)
+          .getOrElse(NumBandBuckets)
+        writeBandIndexBatch(r.keptSigs, bandPath, batchId, bb)
+        r.keptSigs
+          .withColumn("id_bucket",
+            IncrementalAnnIndex.idBucket(col("doc_id"), sb))
+          .repartition(col("id_bucket"))
+          .write.mode("overwrite").partitionBy("id_bucket")
+          .parquet(s"$sigPath/batch=$batchId")
+        // markers AFTER the first data writes: marker-present ⇒
+        // data-present (a crash in the window self-heals because the
+        // replay overwrites the same batch directories)
+        if (bandBucketCount(spark, bandPath).isEmpty)
+          StoragePaths.writeSmallFile(
+            spark, s"$bandPath/$BandBucketsMarker", bb.toString)
+        if (sigBuckets.isEmpty)
+          StoragePaths.writeSmallFile(spark,
+            s"$sigPath/${IncrementalAnnIndex.IdBucketsMarker}",
+            sb.toString)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // a drain that landed nothing never creates the store: a legitimate
-    // first run over an empty crawl returns an empty corpus, not a crash
-    if (exists(corpusPath)) spark.read.parquet(corpusPath).drop("batch")
-    else spark.createDataFrame(new java.util.ArrayList[Row](), CorpusSchema)
+      metricsPath.foreach { mp =>
+        import spark.implicits._
+        Seq((batchId, r.nLanded, r.nUnique, r.nDuplicates, r.nCurated))
+          .toDF("batch_id", "n_landed", "n_unique", "n_duplicates",
+            "n_curated")
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$mp/batch=$batchId")
+      }
+    }
+    StoragePaths.readOrEmpty(spark, corpusPath, CorpusSchema)
   }
 
   /** Schema of the curated corpus store. */

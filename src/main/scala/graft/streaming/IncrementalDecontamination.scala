@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.ops.Similarity
@@ -48,9 +47,6 @@ object IncrementalDecontamination {
     StructField("n_test_hits", LongType),
     StructField("max_cos", DoubleType)))
 
-  private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-
   /** Register (or re-register) the frozen eval set: `(vec_id, embedding)`
     * written atomically-enough for a frozen store (tmp dir + rename would
     * be the multi-writer hardening; registration is a one-shot setup step
@@ -66,7 +62,7 @@ object IncrementalDecontamination {
     */
   def readEvalSet(spark: SparkSession, evalPath: String): DataFrame =
     if (StoragePaths.exists(spark, evalPath)) spark.read.parquet(evalPath)
-    else emptyOf(spark, StructType(Seq(
+    else StoragePaths.emptyOf(spark, StructType(Seq(
       StructField("vec_id", LongType),
       StructField("embedding",
         org.apache.spark.sql.types.ArrayType(
@@ -102,26 +98,18 @@ object IncrementalDecontamination {
     // the NEXT run)
     val evalEmb = readEvalSet(spark, evalPath).persist()
     evalEmb.count()
-    val q = spark.readStream.schema(schema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val uniq = batch.dropDuplicates("vec_id")
-          val flags = probeBatch(uniq.select("vec_id", "embedding"), evalEmb,
-            threshold).localCheckpoint()
-          flags.write.mode("overwrite").parquet(s"$flagsPath/batch=$batchId")
-          uniq.join(flags.select("vec_id"), Seq("vec_id"), "left_anti")
-            .write.mode("overwrite").parquet(s"$cleanPath/batch=$batchId")
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    // unguarded: its spec re-drains the landing dir under a fresh checkpoint
+    Drain.run(spark, "IncrementalDecontamination.run",
+      spark.readStream.schema(schema).parquet(landingDir), checkpointDir,
+      stores = Nil) { (batch, batchId) =>
+      val uniq = batch.dropDuplicates("vec_id")
+      val flags = probeBatch(uniq.select("vec_id", "embedding"), evalEmb,
+        threshold).localCheckpoint()
+      flags.write.mode("overwrite").parquet(s"$flagsPath/batch=$batchId")
+      uniq.join(flags.select("vec_id"), Seq("vec_id"), "left_anti")
+        .write.mode("overwrite").parquet(s"$cleanPath/batch=$batchId")
+    }
     evalEmb.unpersist(blocking = false)
-    if (StoragePaths.exists(spark, flagsPath))
-      spark.read.parquet(flagsPath).drop("batch")
-    else emptyOf(spark, FlagsSchema)
+    StoragePaths.readOrEmpty(spark, flagsPath, FlagsSchema)
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 
 import graft.ops.Dsir
@@ -62,9 +61,6 @@ object IncrementalDsir {
     StructField("key_micro", LongType),
     StructField("selected", BooleanType)))
 
-  private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-
   /** Persist a frozen ratio table `(bucket, ct, cr, lr_micro)`. */
   def writeRatioTable(lr: DataFrame, path: String): Unit =
     lr.select("bucket", "ct", "cr", "lr_micro")
@@ -111,60 +107,25 @@ object IncrementalDsir {
       checkpointDir: String,
       root: String,
       schema: StructType): DataFrame = {
-    // fresh-era guard (the shared StoragePaths.hasEpochDirs contract): a
-    // new checkpoint era's batch ids restart at 0 and would overwrite
-    // the previous era's ledger and selected batches. Re-entry is via a
-    // generation whose history sits at batch=-1 (DsirMaintenance's
-    // adopt/recalibrate carry).
-    require(StoragePaths.exists(spark, checkpointDir) ||
-      storePaths(root).forall(p => !StoragePaths.hasEpochDirs(spark, p)),
-      s"IncrementalDsir.run: fresh checkpoint $checkpointDir over " +
-        s"store $root which still holds batch>=0 directories — the new " +
-        "era would overwrite them; compact first (history belongs at " +
-        "batch=-1 before a fresh era)")
-    def exists(p: String): Boolean = StoragePaths.exists(spark, p)
-    // the table freezes at bootstrap and run() is its only writer, so one
-    // validated read serves the whole drain — re-validating (a full
-    // count() action) per micro-batch would put a fixed overhead on every
-    // small batch of a long drain (the [[IncrementalLmFilter]] pattern)
-    var frozen: Option[DataFrame] = None
-    val q = spark.readStream.schema(schema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val uniq = batch.dropDuplicates("doc_id")
-          if (frozen.isEmpty && !exists(ratioPath(root))) {
-            // bootstrap exactly while no table exists — store-absence
-            // keyed, never `batchId == 0` (an empty epoch 0 must not
-            // brick the stream); the overwrite write is replay-idempotent
-            val lr = Dsir.ratioTable(Dsir.featureCounts(uniq))
-            require(!lr.isEmpty,
-              "IncrementalDsir bootstrap: the first non-empty batch " +
-                "produced an empty ratio table — it must carry " +
-                "tokenizable text")
-            writeRatioTable(lr, ratioPath(root))
-          }
-          val lr = frozen.getOrElse {
-            val t = readRatioTable(spark, ratioPath(root))
-            frozen = Some(t)
-            t
-          }
-          val scored = scoreBatch(uniq, lr).localCheckpoint()
-          scored.write.mode("overwrite")
-            .parquet(s"${ledgerPath(root)}/batch=$batchId")
-          uniq.join(scored.filter(col("selected")).select("doc_id"),
-              Seq("doc_id"))
-            .write.mode("overwrite")
-            .parquet(s"${selectedPath(root)}/batch=$batchId")
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    if (StoragePaths.exists(spark, ledgerPath(root)))
-      spark.read.parquet(ledgerPath(root)).drop("batch")
-    else emptyOf(spark, LedgerSchema)
+    val lrTable = Drain.frozen(spark, ratioPath(root)) { uniq =>
+      val lr = Dsir.ratioTable(Dsir.featureCounts(uniq))
+      require(!lr.isEmpty,
+        "IncrementalDsir bootstrap: the first non-empty batch produced an " +
+          "empty ratio table — it must carry tokenizable text")
+      writeRatioTable(lr, ratioPath(root))
+    }(readRatioTable(spark, ratioPath(root)))
+    Drain.run(spark, "IncrementalDsir.run",
+      spark.readStream.schema(schema).parquet(landingDir), checkpointDir,
+      storePaths(root)) { (batch, batchId) =>
+      val uniq = batch.dropDuplicates("doc_id")
+      val scored = scoreBatch(uniq, lrTable(uniq)).localCheckpoint()
+      scored.write.mode("overwrite")
+        .parquet(s"${ledgerPath(root)}/batch=$batchId")
+      uniq.join(scored.filter(col("selected")).select("doc_id"),
+          Seq("doc_id"))
+        .write.mode("overwrite")
+        .parquet(s"${selectedPath(root)}/batch=$batchId")
+    }
+    StoragePaths.readOrEmpty(spark, ledgerPath(root), LedgerSchema)
   }
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.ops.{Pq, Similarity}
@@ -49,9 +48,6 @@ object IncrementalIvfPqIndex {
   def leaderPath(root: String): String = s"$root/leaders"
   def bookPath(root: String): String = s"$root/book"
   def codePath(root: String): String = s"$root/codes"
-
-  private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[Row](), schema)
 
   /** The frozen coarse quantizer `(list_id, lvec, lnorm)`, re-validated on
     * every read — a partial bootstrap write fails loudly instead of
@@ -108,89 +104,67 @@ object IncrementalIvfPqIndex {
       root: String,
       embSchema: StructType,
       numIdBuckets: Int = IncrementalAnnIndex.NumIdBuckets): DataFrame = {
-    // fresh-era guard (the shared StoragePaths.hasEpochDirs contract): a
-    // new checkpoint era's batch ids restart at 0 and would overwrite the
-    // previous era's code batches. Re-entry is via a generation whose
-    // history sits at batch=-1 (IvfPqMaintenance's retrain/re-encode, or
-    // a plain StoreMaintenance.compact of the code store).
-    require(StoragePaths.exists(spark, checkpointDir) ||
-      !StoragePaths.hasEpochDirs(spark, codePath(root)),
-      s"IncrementalIvfPqIndex.run: fresh checkpoint $checkpointDir over " +
-        s"store $root which still holds batch>=0 directories — the new " +
-        "era would overwrite them; compact first (history belongs at " +
-        "batch=-1 before a fresh era)")
-    def exists(p: String): Boolean = StoragePaths.exists(spark, p)
     val codes = codePath(root)
-    val q = spark.readStream.schema(embSchema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val uniq = batch.dropDuplicates("vec_id")
-          if (!exists(bookPath(root))) {
-            // bootstrap exactly while no codebook exists: leaders FIRST
-            // (the residual codebook is defined relative to them), book
-            // LAST — book-present ⇒ leaders-present, so the store-absence
-            // key covers both quantizers with one probe
-            val book = Pq.residualCodebook(uniq)
-            require(book.size == Pq.NumSubspaces * Pq.CodebookSize,
-              s"IncrementalIvfPqIndex bootstrap: got ${book.size} codebook " +
-                s"entries, need ${Pq.NumSubspaces * Pq.CodebookSize} — " +
-                "the bootstrap batch must carry the leader vec_ids " +
-                s"(< ${Similarity.NumLists}) and the residual seed ids " +
-                s"(${Similarity.NumLists} until " +
-                s"${Similarity.NumLists + Pq.CodebookSize})")
-            // validate BOTH quantizers before ANY durable write: the
-            // residual seeds can all be present while leader vec_ids are
-            // not, and a leader store written short would poison the root
-            // (book-present skips bootstrap forever, readLeaders then
-            // fails every batch — no later batch could heal it)
-            val ldrs = Similarity.ivfLeaders(uniq).localCheckpoint()
-            require(ldrs.count() == Similarity.NumLists.toLong,
-              s"IncrementalIvfPqIndex bootstrap: got ${ldrs.count()} " +
-                s"leaders, need ${Similarity.NumLists} — the bootstrap " +
-                s"batch must carry the leader vec_ids " +
-                s"(< ${Similarity.NumLists}); rejecting the batch " +
-                "without writing")
-            ldrs.coalesce(1).write.mode("overwrite")
-              .parquet(leaderPath(root))
-            IncrementalPqIndex.writeCodebook(spark, book, bookPath(root))
-          }
-          val leaders = readLeaders(spark, root)
-          val book = IncrementalPqIndex.readCodebook(spark, bookPath(root))
-          val storeBuckets = IncrementalAnnIndex.bucketCount(spark, codes)
-          // first write wins for a re-landed vec_id (FAISS add semantics)
-          val fresh =
-            if (storeBuckets.isDefined)
-              uniq.join(
-                IncrementalAnnIndex.priorIds(spark, codes, uniq, batchId),
-                Seq("vec_id"), "left_anti")
-            else uniq
-          val buckets = storeBuckets.getOrElse(numIdBuckets)
-          // index ADD stores EVERY vector's codes (the occupancy cap is a
-          // SEARCH guard, applied by searchStore over the probed lists)
-          val assign = Similarity.assignWithLeaders(fresh, leaders)
-            .select("vec_id", "list_id")
-          Pq.residualCodesFor(assign, fresh, leaders, book)
-            .withColumn("id_bucket",
-              IncrementalAnnIndex.idBucket(col("vec_id"), buckets))
-            .repartition(col("id_bucket"))
-            .write.mode("overwrite").partitionBy("id_bucket")
-            .parquet(s"$codes/batch=$batchId")
-          // marker AFTER the first data write: marker-present ⇒
-          // data-present (the house crash-window contract)
-          if (storeBuckets.isEmpty)
-            StoragePaths.writeSmallFile(spark,
-              s"$codes/${IncrementalAnnIndex.IdBucketsMarker}",
-              buckets.toString)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    if (StoragePaths.exists(spark, codes))
-      spark.read.parquet(codes).drop("batch", "id_bucket")
-    else emptyOf(spark, CodeSchema)
+    val quantizers = Drain.frozen(spark, bookPath(root)) { uniq =>
+      // leaders FIRST (the residual codebook is defined relative to
+      // them), book LAST — book-present ⇒ leaders-present, so the
+      // store-absence key covers both quantizers with one probe
+      val book = Pq.residualCodebook(uniq)
+      require(book.size == Pq.NumSubspaces * Pq.CodebookSize,
+        s"IncrementalIvfPqIndex bootstrap: got ${book.size} codebook " +
+          s"entries, need ${Pq.NumSubspaces * Pq.CodebookSize} — " +
+          "the bootstrap batch must carry the leader vec_ids " +
+          s"(< ${Similarity.NumLists}) and the residual seed ids " +
+          s"(${Similarity.NumLists} until " +
+          s"${Similarity.NumLists + Pq.CodebookSize})")
+      // validate BOTH quantizers before ANY durable write: the
+      // residual seeds can all be present while leader vec_ids are
+      // not, and a leader store written short would poison the root
+      // (book-present skips bootstrap forever, readLeaders then
+      // fails every batch — no later batch could heal it)
+      val ldrs = Similarity.ivfLeaders(uniq).localCheckpoint()
+      require(ldrs.count() == Similarity.NumLists.toLong,
+        s"IncrementalIvfPqIndex bootstrap: got ${ldrs.count()} " +
+          s"leaders, need ${Similarity.NumLists} — the bootstrap " +
+          s"batch must carry the leader vec_ids " +
+          s"(< ${Similarity.NumLists}); rejecting the batch " +
+          "without writing")
+      ldrs.coalesce(1).write.mode("overwrite")
+        .parquet(leaderPath(root))
+      IncrementalPqIndex.writeCodebook(spark, book, bookPath(root))
+    }((readLeaders(spark, root),
+      IncrementalPqIndex.readCodebook(spark, bookPath(root))))
+    Drain.run(spark, "IncrementalIvfPqIndex.run",
+      spark.readStream.schema(embSchema).parquet(landingDir), checkpointDir,
+      Seq(codes)) { (batch, batchId) =>
+      val uniq = batch.dropDuplicates("vec_id")
+      val (leaders, book) = quantizers(uniq)
+      val storeBuckets = IncrementalAnnIndex.bucketCount(spark, codes)
+      // first write wins for a re-landed vec_id (FAISS add semantics)
+      val fresh =
+        if (storeBuckets.isDefined)
+          uniq.join(
+            IncrementalAnnIndex.priorIds(spark, codes, uniq, batchId),
+            Seq("vec_id"), "left_anti")
+        else uniq
+      val buckets = storeBuckets.getOrElse(numIdBuckets)
+      // index ADD stores EVERY vector's codes (the occupancy cap is a
+      // SEARCH guard, applied by searchStore over the probed lists)
+      val assign = Similarity.assignWithLeaders(fresh, leaders)
+        .select("vec_id", "list_id")
+      Pq.residualCodesFor(assign, fresh, leaders, book)
+        .withColumn("id_bucket",
+          IncrementalAnnIndex.idBucket(col("vec_id"), buckets))
+        .repartition(col("id_bucket"))
+        .write.mode("overwrite").partitionBy("id_bucket")
+        .parquet(s"$codes/batch=$batchId")
+      // marker AFTER the first data write: marker-present ⇒
+      // data-present (the house crash-window contract)
+      if (storeBuckets.isEmpty)
+        StoragePaths.writeSmallFile(spark,
+          s"$codes/${IncrementalAnnIndex.IdBucketsMarker}",
+          buckets.toString)
+    }
+    StoragePaths.readOrEmpty(spark, codes, CodeSchema)
   }
 }

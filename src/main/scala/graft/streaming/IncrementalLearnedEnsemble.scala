@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 
 import graft.ops.{Curation, Dsir, LmPerplexity, QualityClassifier}
@@ -85,9 +84,6 @@ object IncrementalLearnedEnsemble {
     StructField("dsir_selected", BooleanType),
     StructField("kept", BooleanType)))
 
-  private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-
   /** The five frozen tables `(nbModel, nbPrior, lmModel, lmContexts,
     * lrTable)`, each read and loudly re-validated by its OWN family's
     * incremental module.
@@ -125,86 +121,54 @@ object IncrementalLearnedEnsemble {
       checkpointDir: String,
       root: String,
       schema: StructType): DataFrame = {
-    // fresh-era guard (the shared StoragePaths.hasEpochDirs contract): a
-    // new checkpoint era's batch ids restart at 0 and would overwrite
-    // the previous era's ledger and admitted batches. Re-entry is via a
-    // generation whose history sits at batch=-1
-    // (LearnedEnsembleMaintenance's carry).
-    require(StoragePaths.exists(spark, checkpointDir) ||
-      storePaths(root).forall(p => !StoragePaths.hasEpochDirs(spark, p)),
-      s"IncrementalLearnedEnsemble.run: fresh checkpoint $checkpointDir " +
-        s"over store $root which still holds batch>=0 directories — the " +
-        "new era would overwrite them; compact first (history belongs " +
-        "at batch=-1 before a fresh era)")
-    def exists(p: String): Boolean = StoragePaths.exists(spark, p)
-    // all five tables freeze at bootstrap and run() is their only writer:
-    // one validated read serves the whole drain
-    var frozen: Option[(DataFrame, DataFrame, DataFrame, DataFrame, DataFrame)] =
-      None
-    val bootKey = IncrementalQualityFilter.modelPath(nbRoot(root))
-    val q = spark.readStream.schema(schema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val uniq = batch.dropDuplicates("doc_id")
-          if (frozen.isEmpty && !exists(bootKey)) {
-            // bootstrap exactly while no NB model exists — the LAST table
-            // written below, so its absence re-runs the whole bootstrap
-            // and its presence implies every other table landed
-            require(uniq.columns.contains("source"),
-              "IncrementalLearnedEnsemble bootstrap: the training batch " +
-                "must carry the `source` label column (NB and LM seeds)")
-            require(uniq.columns.contains("lang"),
-              "IncrementalLearnedEnsemble bootstrap: the training batch " +
-                "must carry the `lang` label column (DSIR target slice)")
-            val lr = Dsir.ratioTable(Dsir.featureCounts(uniq))
-            require(!lr.isEmpty,
-              "IncrementalLearnedEnsemble bootstrap: the first non-empty " +
-                "batch produced an empty DSIR ratio table — it must " +
-                "carry tokenizable text")
-            val lmCounts = LmPerplexity.seedBigramCounts(uniq)
-              .localCheckpoint()
-            require(!lmCounts.isEmpty,
-              "IncrementalLearnedEnsemble bootstrap: the first non-empty " +
-                s"batch has no '${LmPerplexity.SeedSource}' documents " +
-                "with at least 2 tokens — the LM cannot train")
-            val nbModel = QualityClassifier.modelTable(uniq)
-            require(!nbModel.isEmpty,
-              "IncrementalLearnedEnsemble bootstrap: the first non-empty " +
-                "batch produced an empty NB model")
-            IncrementalDsir.writeRatioTable(
-              lr, IncrementalDsir.ratioPath(dsirRoot(root)))
-            IncrementalLmFilter.writeModel(
-              LmPerplexity.modelOf(lmCounts),
-              LmPerplexity.contextsOf(lmCounts), lmRoot(root))
-            // NB last: writeModel writes prior THEN model — the model
-            // file is the global bootstrap key
-            IncrementalQualityFilter.writeModel(
-              nbModel, QualityClassifier.priorRow(uniq), nbRoot(root))
-          }
-          val (nbModel, nbPrior, lmModel, lmContexts, lr) =
-            frozen.getOrElse {
-              val t = readTables(spark, root)
-              frozen = Some(t)
-              t
-            }
-          val scored = scoreBatch(uniq, nbModel, nbPrior, lmModel,
-            lmContexts, lr).localCheckpoint()
-          scored.write.mode("overwrite")
-            .parquet(s"${ledgerPath(root)}/batch=$batchId")
-          uniq.join(scored.filter(col("kept")).select("doc_id"),
-              Seq("doc_id"))
-            .write.mode("overwrite")
-            .parquet(s"${admittedPath(root)}/batch=$batchId")
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    if (StoragePaths.exists(spark, ledgerPath(root)))
-      spark.read.parquet(ledgerPath(root)).drop("batch")
-    else emptyOf(spark, LedgerSchema)
+    // the NB model is the LAST table written below, so its absence re-runs
+    // the whole bootstrap and its presence implies every other table landed
+    val tables = Drain.frozen(spark,
+        IncrementalQualityFilter.modelPath(nbRoot(root))) { uniq =>
+      require(uniq.columns.contains("source"),
+        "IncrementalLearnedEnsemble bootstrap: the training batch " +
+          "must carry the `source` label column (NB and LM seeds)")
+      require(uniq.columns.contains("lang"),
+        "IncrementalLearnedEnsemble bootstrap: the training batch " +
+          "must carry the `lang` label column (DSIR target slice)")
+      val lr = Dsir.ratioTable(Dsir.featureCounts(uniq))
+      require(!lr.isEmpty,
+        "IncrementalLearnedEnsemble bootstrap: the first non-empty " +
+          "batch produced an empty DSIR ratio table — it must " +
+          "carry tokenizable text")
+      val lmCounts = LmPerplexity.seedBigramCounts(uniq).localCheckpoint()
+      require(!lmCounts.isEmpty,
+        "IncrementalLearnedEnsemble bootstrap: the first non-empty " +
+          s"batch has no '${LmPerplexity.SeedSource}' documents " +
+          "with at least 2 tokens — the LM cannot train")
+      val nbModel = QualityClassifier.modelTable(uniq)
+      require(!nbModel.isEmpty,
+        "IncrementalLearnedEnsemble bootstrap: the first non-empty " +
+          "batch produced an empty NB model")
+      IncrementalDsir.writeRatioTable(
+        lr, IncrementalDsir.ratioPath(dsirRoot(root)))
+      IncrementalLmFilter.writeModel(
+        LmPerplexity.modelOf(lmCounts),
+        LmPerplexity.contextsOf(lmCounts), lmRoot(root))
+      // NB last: writeModel writes prior THEN model — the model file is
+      // the global bootstrap key
+      IncrementalQualityFilter.writeModel(
+        nbModel, QualityClassifier.priorRow(uniq), nbRoot(root))
+    }(readTables(spark, root))
+    Drain.run(spark, "IncrementalLearnedEnsemble.run",
+      spark.readStream.schema(schema).parquet(landingDir), checkpointDir,
+      storePaths(root)) { (batch, batchId) =>
+      val uniq = batch.dropDuplicates("doc_id")
+      val (nbModel, nbPrior, lmModel, lmContexts, lr) = tables(uniq)
+      val scored = scoreBatch(uniq, nbModel, nbPrior, lmModel,
+        lmContexts, lr).localCheckpoint()
+      scored.write.mode("overwrite")
+        .parquet(s"${ledgerPath(root)}/batch=$batchId")
+      uniq.join(scored.filter(col("kept")).select("doc_id"),
+          Seq("doc_id"))
+        .write.mode("overwrite")
+        .parquet(s"${admittedPath(root)}/batch=$batchId")
+    }
+    StoragePaths.readOrEmpty(spark, ledgerPath(root), LedgerSchema)
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 
 import graft.ops.LmPerplexity
@@ -62,9 +61,6 @@ object IncrementalLmFilter {
     StructField("n_bigrams", LongType),
     StructField("logprob_micro", LongType),
     StructField("selected", BooleanType)))
-
-  private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[Row](), schema)
 
   /** Persist the frozen model `(b1, b2, c2, lp_micro)` and its context
     * table `(b1, c1, oov_micro)`. The MODEL is the store-absence key the
@@ -133,63 +129,35 @@ object IncrementalLmFilter {
       checkpointDir: String,
       root: String,
       schema: StructType): DataFrame = {
-    // fresh-era guard (the shared StoragePaths.hasEpochDirs contract): a
-    // new checkpoint era's batch ids restart at 0 and would overwrite
-    // the previous era's ledger and admitted batches. Re-entry is via a
-    // generation whose history sits at batch=-1 (LmFilterMaintenance's
-    // adopt/retrain carry).
-    require(StoragePaths.exists(spark, checkpointDir) ||
-      storePaths(root).forall(p => !StoragePaths.hasEpochDirs(spark, p)),
-      s"IncrementalLmFilter.run: fresh checkpoint $checkpointDir over " +
-        s"store $root which still holds batch>=0 directories — the new " +
-        "era would overwrite them; compact first (history belongs at " +
-        "batch=-1 before a fresh era)")
-    def exists(p: String): Boolean = StoragePaths.exists(spark, p)
-    // the tables freeze at bootstrap and run() is their only writer, so
-    // one validated read serves the whole drain — re-validating (two
-    // counts + the orphan anti-join) per micro-batch would put a fixed
-    // 3-action overhead on every small batch of a long drain
-    var frozen: Option[(DataFrame, DataFrame)] = None
-    val q = spark.readStream.schema(schema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val uniq = batch.dropDuplicates("doc_id")
-          if (!exists(modelPath(root))) {
-            // bootstrap exactly while no model exists — store-absence
-            // keyed, never `batchId == 0`; training requires the label
-            require(uniq.columns.contains("source"),
-              "IncrementalLmFilter bootstrap: the training batch must " +
-                "carry the `source` label column")
-            val counts = LmPerplexity.seedBigramCounts(uniq).localCheckpoint()
-            require(!counts.isEmpty,
-              "IncrementalLmFilter bootstrap: the first non-empty batch " +
-                s"has no '${LmPerplexity.SeedSource}' documents with at " +
-                "least two tokens — nothing to train the LM on")
-            writeModel(LmPerplexity.modelOf(counts),
-              LmPerplexity.contextsOf(counts), root)
-          }
-          val (model, contexts) = frozen.getOrElse {
-            val m = readModel(spark, root)
-            frozen = Some(m)
-            m
-          }
-          val scored = scoreBatch(uniq, model, contexts).localCheckpoint()
-          scored.write.mode("overwrite")
-            .parquet(s"${ledgerPath(root)}/batch=$batchId")
-          uniq.join(scored.filter(col("selected")).select("doc_id"),
-              Seq("doc_id"))
-            .write.mode("overwrite")
-            .parquet(s"${admittedPath(root)}/batch=$batchId")
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    if (StoragePaths.exists(spark, ledgerPath(root)))
-      spark.read.parquet(ledgerPath(root)).drop("batch")
-    else emptyOf(spark, LedgerSchema)
+    // one validated read of the tables serves the whole drain —
+    // re-validating (two counts + the orphan anti-join) per micro-batch
+    // would put a fixed 3-action overhead on every small batch
+    val frozen = Drain.frozen(spark, modelPath(root)) { uniq =>
+      // training requires the label
+      require(uniq.columns.contains("source"),
+        "IncrementalLmFilter bootstrap: the training batch must " +
+          "carry the `source` label column")
+      val counts = LmPerplexity.seedBigramCounts(uniq).localCheckpoint()
+      require(!counts.isEmpty,
+        "IncrementalLmFilter bootstrap: the first non-empty batch " +
+          s"has no '${LmPerplexity.SeedSource}' documents with at " +
+          "least two tokens — nothing to train the LM on")
+      writeModel(LmPerplexity.modelOf(counts),
+        LmPerplexity.contextsOf(counts), root)
+    }(readModel(spark, root))
+    Drain.run(spark, "IncrementalLmFilter.run",
+      spark.readStream.schema(schema).parquet(landingDir), checkpointDir,
+      storePaths(root)) { (batch, batchId) =>
+      val uniq = batch.dropDuplicates("doc_id")
+      val (model, contexts) = frozen(uniq)
+      val scored = scoreBatch(uniq, model, contexts).localCheckpoint()
+      scored.write.mode("overwrite")
+        .parquet(s"${ledgerPath(root)}/batch=$batchId")
+      uniq.join(scored.filter(col("selected")).select("doc_id"),
+          Seq("doc_id"))
+        .write.mode("overwrite")
+        .parquet(s"${admittedPath(root)}/batch=$batchId")
+    }
+    StoragePaths.readOrEmpty(spark, ledgerPath(root), LedgerSchema)
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ingest.RawLoader
 import graft.models.{IntRussellDaily, StgDailyStocks}
@@ -58,42 +57,39 @@ object IncrementalMartStream {
       martPath: String,
       constituents: DataFrame,
       lookbackDays: Int = 4): DataFrame = {
-    def exists(p: String): Boolean = StoragePaths.exists(spark, p)
-    val q = RawLanding.normalizedStream(spark, landingDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // idempotent raw write: overwrite THIS batch's directory, so an
-          // at-least-once replay rewrites identical rows instead of
-          // appending duplicate grain
-          batch.write.mode("overwrite").partitionBy("DATE")
-            .parquet(s"$rawPath/batch=$batchId")
-          if (!exists(martPath)) {
-            // bootstrap is the one full-history scan (SURVEY ST3); readRaw =
-            // schema-merged, legacy TS-less files read with typed NULL TS
-            val staged = StgDailyStocks.build(
-              RawLoader.readRaw(spark, rawPath).drop("batch"))
-            IntRussellDaily.buildFull(staged, constituents)
-              .write.partitionBy("trade_date").parquet(martPath)
-          } else {
-            val existing = spark.read.parquet(martPath)
-            val martMax = existing.agg(max("trade_date")).head().getDate(0)
-            val staged = StgDailyStocks.build(RawLoader.heal(
-              prunedRaw(spark, rawPath, martMax, lookbackDays)))
-            val slice = IntRussellDaily.buildIncremental(
-              staged, constituents, existing, lookbackDays,
-              knownMaxDate = Some(martMax))
-            // align column order with the stored mart (partition column
-            // moves last on disk) before the partition-overwrite merge
-            MergeWriter.mergeByDatePartition(spark,
-              slice.select(existing.columns.map(col): _*), martPath)
-          }
-        }
-        ()
+    // the fresh-era guard covers raw: a fresh checkpoint would re-drain
+    // every file still in the landing dir into raw/batch=0 beside the
+    // previous era's batch=1..N, and the next slice would read each of
+    // those bars twice
+    Drain.run(spark, "IncrementalMartStream.maintainIntDaily",
+      RawLanding.normalizedStream(spark, landingDir), checkpointDir,
+      Seq(rawPath)) { (batch, batchId) =>
+      // idempotent raw write: overwrite THIS batch's directory, so an
+      // at-least-once replay rewrites identical rows instead of
+      // appending duplicate grain
+      batch.write.mode("overwrite").partitionBy("DATE")
+        .parquet(s"$rawPath/batch=$batchId")
+      if (!StoragePaths.exists(spark, martPath)) {
+        // bootstrap is the one full-history scan (SURVEY ST3); readRaw =
+        // schema-merged, legacy TS-less files read with typed NULL TS
+        val staged = StgDailyStocks.build(
+          RawLoader.readRaw(spark, rawPath).drop("batch"))
+        IntRussellDaily.buildFull(staged, constituents)
+          .write.partitionBy("trade_date").parquet(martPath)
+      } else {
+        val existing = spark.read.parquet(martPath)
+        val martMax = existing.agg(max("trade_date")).head().getDate(0)
+        val staged = StgDailyStocks.build(RawLoader.heal(
+          prunedRaw(spark, rawPath, martMax, lookbackDays)))
+        val slice = IntRussellDaily.buildIncremental(
+          staged, constituents, existing, lookbackDays,
+          knownMaxDate = Some(martMax))
+        // align column order with the stored mart (partition column
+        // moves last on disk) before the partition-overwrite merge
+        MergeWriter.mergeByDatePartition(spark,
+          slice.select(existing.columns.map(col): _*), martPath)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     spark.read.parquet(martPath)
   }
 }

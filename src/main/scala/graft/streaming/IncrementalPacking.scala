@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.ops.Packing
@@ -81,9 +80,6 @@ object IncrementalPacking {
     StructField("bin", LongType),
     StructField("bin_offset", LongType)))
 
-  private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-
   /** The shard count this store was created with. */
   def storedShards(spark: SparkSession, root: String): Option[Int] =
     StoragePaths.readSmallFile(spark, shardsMarker(root)).map(_.trim.toInt)
@@ -157,7 +153,7 @@ object IncrementalPacking {
     val path = cursorPath(root)
     val schema = StructType(Seq(
       StructField("shard", LongType), StructField("cum_tokens", LongType)))
-    if (!StoragePaths.exists(spark, path)) emptyOf(spark, schema)
+    if (!StoragePaths.exists(spark, path)) StoragePaths.emptyOf(spark, schema)
     else {
       val all = spark.read.parquet(path)
         .filter(col("batch").cast("long") < beforeBatchId)
@@ -324,13 +320,13 @@ object IncrementalPacking {
         "no sidecar; read it with payloadStreams"))
     val path = payloadsPath(root)
     if (!StoragePaths.exists(spark, path))
-      emptyOf(spark, org.apache.spark.sql.types.StructType(Seq(
+      StoragePaths.emptyOf(spark, StructType(Seq(
         StructField("shard", LongType), StructField("bin", LongType),
         StructField("n_docs", LongType), StructField("bin_tokens", LongType),
         StructField("input_ids", org.apache.spark.sql.types.ArrayType(
           LongType, containsNull = false)),
         StructField("media_slots", org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.StructType(Seq(
+          StructType(Seq(
             StructField("slot", LongType),
             StructField("media_ref", LongType))), containsNull = false)))))
     else
@@ -374,7 +370,7 @@ object IncrementalPacking {
         "payloadStreamsMm"))
     val path = payloadsPath(root)
     if (!StoragePaths.exists(spark, path))
-      emptyOf(spark, org.apache.spark.sql.types.StructType(Seq(
+      StoragePaths.emptyOf(spark, StructType(Seq(
         StructField("shard", LongType), StructField("bin", LongType),
         StructField("n_docs", LongType), StructField("bin_tokens", LongType),
         StructField("input_ids", org.apache.spark.sql.types.ArrayType(
@@ -466,11 +462,7 @@ object IncrementalPacking {
     * the batch operator's stats over the concatenated corpus.
     */
   def storeStats(spark: SparkSession, root: String): DataFrame = {
-    val bins =
-      if (StoragePaths.exists(spark, binsPath(root)))
-        spark.read.parquet(binsPath(root)).drop("batch")
-      else emptyOf(spark, BinsSchema)
-    bins
+    StoragePaths.readOrEmpty(spark, binsPath(root), BinsSchema)
       .groupBy("shard", "bin")
       .agg(count(lit(1)).as("bin_docs"), sum("n_tokens").as("bin_tokens"))
       .groupBy("shard")
@@ -514,7 +506,7 @@ object IncrementalPacking {
         spark.read.parquet(binsPath(root))
           .filter(col("batch").cast("long") <= hw)
           .drop("batch")
-      case _ => emptyOf(spark, BinsSchema)
+      case _ => StoragePaths.emptyOf(spark, BinsSchema)
     }
 
   /** Latest batch id present in the bins store — the natural epoch pin
@@ -649,154 +641,125 @@ object IncrementalPacking {
     val runMode: String =
       if (payloadVocab.isEmpty) "0"
       else mmCarriageSql.fold("1")(c => payloadsModeMm(c, mmMediaRefSql))
-    // fresh-era guard (the shared StoragePaths.hasEpochDirs contract): a
-    // new checkpoint era's batch ids restart at 0 and would overwrite
-    // the previous era's bin and cursor batches — silently un-packing
-    // shipped bins. Re-entry is via PackingMaintenance's batch=-1 carry
-    // (the cursor read is compaction-safe, and the carry brings the
-    // frozen _shards/_budget markers along).
-    require(StoragePaths.exists(spark, checkpointDir) ||
-      storePaths(root).forall(p => !StoragePaths.hasEpochDirs(spark, p)),
-      s"IncrementalPacking.run: fresh checkpoint $checkpointDir over " +
-        s"store $root which still holds batch>=0 directories — the new " +
-        "era would overwrite them; compact first (history belongs at " +
-        "batch=-1 before a fresh era)")
-    val q = spark.readStream.schema(schema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        def prof[A](name: String)(f: => A): A =
-          if (sys.env.contains("GRAFT_PROFILE")) {
-            val t0 = System.nanoTime()
-            val r = f
-            println(f"PROFILE pack.$name#$batchId " +
-              f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-            r
-          } else f
-        if (!prof("isEmpty")(batch.isEmpty)) {
-          prof("markers")(storedShards(spark, root) match {
-            case Some(n) =>
-              // the shard count is frozen at bootstrap: silently
-              // re-routing documents under a different count would strand
-              // every existing bin assignment
-              require(n == shards,
-                s"IncrementalPacking: store at $root was created with $n " +
-                  s"shards, got $shards — pass the stored count")
-            case None =>
-              // markers FIRST, before any data write: data-present ⇒
-              // marker-present (tokens-source, then payloads, then budget,
-              // then shards — `_shards` is the bootstrap key, so a crash
-              // between any two re-runs this branch and overwrites all)
-              StoragePaths.writeSmallFile(spark, tokensSourceMarker(root),
-                tokensSourceId(nTokensSql))
-              StoragePaths.writeSmallFile(spark, payloadsMarker(root),
-                runMode)
-              StoragePaths.writeSmallFile(
-                spark, budgetMarker(root), Packing.Budget.toString)
-              StoragePaths.writeSmallFile(
-                spark, shardsMarker(root), shards.toString)
-          })
-          prof("guards") {
-          storedBudget(spark, root) match {
-            case Some(b) =>
-              // the budget is frozen with the shard count: packBatch bins
-              // against the live Packing.Budget, so a binary rebuilt with
-              // a different budget must not extend this store
-              require(b == Packing.Budget,
-                s"IncrementalPacking: store at $root was packed at " +
-                  s"budget $b, this binary has ${Packing.Budget} — " +
-                  "rebuild with the stored budget")
-            case None =>
-              // pre-marker store (packed by this same constant): heal by
-              // recording the only budget that has ever touched it
-              StoragePaths.writeSmallFile(
-                spark, budgetMarker(root), Packing.Budget.toString)
-          }
-          storedTokensSource(spark, root) match {
-            case Some(src) =>
-              // the token source is frozen with the budget: the cursor
-              // history is a running sum in the source's unit, so a
-              // different source (or vocabulary) must not extend it
-              require(src == tokensSourceId(nTokensSql),
-                s"IncrementalPacking: store at $root was packed under " +
-                  s"token source $src, this run passes " +
-                  s"${tokensSourceId(nTokensSql)} — pack with the stored " +
-                  "source (or compact to a fresh root to re-price)")
-            case None =>
-              // pre-marker store: before the marker existed, run() had no
-              // token-source knob, so the only source that has ever
-              // touched it is the whitespace default — record THAT, and
-              // let the check above catch a non-default caller
-              StoragePaths.writeSmallFile(spark, tokensSourceMarker(root),
-                tokensSourceId(Packing.WhitespaceTokensSql))
-              require(
-                tokensSourceId(nTokensSql) ==
-                  tokensSourceId(Packing.WhitespaceTokensSql),
-                s"IncrementalPacking: pre-marker store at $root was packed " +
-                  "on whitespace counts; cannot continue it under a " +
-                  "different token source")
-          }
-          storedPayloadsMode(spark, root) match {
-            case Some(mode) =>
-              // payload materialization is frozen with the rest of the
-              // config: a store that drained batches without fragments
-              // must not start writing them mid-history (payloadStreams
-              // would silently serve a feed missing the early batches'
-              // tokens), one that has them must not stop (the feed would
-              // silently freeze while bins keep growing), and an mm store
-              // must keep its carriage + ref configuration (a changed ref
-              // expression keys a different catalog with identical tokens)
-              require(mode == runMode,
-                s"IncrementalPacking: store at $root froze payload mode " +
-                  s"'$mode' at bootstrap, this run drains under " +
-                  s"'$runMode' — continue with the stored configuration " +
-                  "(or compact to a fresh root)")
-            case None =>
-              // pre-marker store: infer the only history it can have had
-              // from the payloads store itself (fragments exist iff every
-              // prior drain passed a vocabulary — partial histories were
-              // impossible because payloadVocab also pins nTokensSql,
-              // which the _tokens_source marker froze from batch 0; mm
-              // stores postdate the marker, so the healed mode is "1"/"0")
-              val had = StoragePaths.exists(spark, payloadsPath(root))
-              StoragePaths.writeSmallFile(spark, payloadsMarker(root),
-                if (had) "1" else "0")
-              require((if (had) "1" else "0") == runMode,
-                s"IncrementalPacking: pre-marker store at $root healed " +
-                  s"to payload mode '${if (had) "1" else "0"}' (" +
-                  (if (had) "fragments present" else "no fragments") +
-                  s"), this run drains under '$runMode' — continue with " +
-                  "the stored history's choice")
-          }
-          }
-          val uniq = batch.dropDuplicates("doc_id")
-          val (bins, nextCursor) =
-            packBatch(uniq, cursor(spark, root, batchId), shards, nTokensSql)
-          val stable = prof("binsCkpt")(bins.localCheckpoint())
-          val cursorStable = prof("cursorCkpt")(nextCursor.localCheckpoint())
-          prof("binsWrite")(stable.write.mode("overwrite")
-            .parquet(s"${binsPath(root)}/batch=$batchId"))
-          prof("cursorWrite")(cursorStable.coalesce(1).write.mode("overwrite")
-            .parquet(s"${cursorPath(root)}/batch=$batchId"))
-          payloadVocab.foreach { v =>
-            // the batch's payload fragments off the SAME materialized
-            // bins (a pure function of (batch, cursor) like the bins
-            // themselves, so the overwrite is replay-idempotent); the mm
-            // sidecar rides the same one packing window
-            prof("payloadWrite")(
-              mmCarriageSql.fold(payloadsFromBins(uniq, stable, v))(c =>
-                payloadsMmFromBins(uniq, stable, v, c, mmMediaRefSql))
-                .write.mode("overwrite")
-                .parquet(s"${payloadsPath(root)}/batch=$batchId"))
-          }
-        }
-        ()
+    // re-entry is via PackingMaintenance's batch=-1 carry (the cursor read
+    // is compaction-safe, and the carry brings the frozen _shards/_budget
+    // markers along)
+    Drain.run(spark, "IncrementalPacking.run",
+      spark.readStream.schema(schema).parquet(landingDir), checkpointDir,
+      storePaths(root)) { (batch, batchId) =>
+      storedShards(spark, root) match {
+        case Some(n) =>
+          // the shard count is frozen at bootstrap: silently
+          // re-routing documents under a different count would strand
+          // every existing bin assignment
+          require(n == shards,
+            s"IncrementalPacking: store at $root was created with $n " +
+              s"shards, got $shards — pass the stored count")
+        case None =>
+          // markers FIRST, before any data write: data-present ⇒
+          // marker-present (tokens-source, then payloads, then budget,
+          // then shards — `_shards` is the bootstrap key, so a crash
+          // between any two re-runs this branch and overwrites all)
+          StoragePaths.writeSmallFile(spark, tokensSourceMarker(root),
+            tokensSourceId(nTokensSql))
+          StoragePaths.writeSmallFile(spark, payloadsMarker(root),
+            runMode)
+          StoragePaths.writeSmallFile(
+            spark, budgetMarker(root), Packing.Budget.toString)
+          StoragePaths.writeSmallFile(
+            spark, shardsMarker(root), shards.toString)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    if (StoragePaths.exists(spark, binsPath(root)))
-      spark.read.parquet(binsPath(root)).drop("batch")
-    else emptyOf(spark, BinsSchema)
+      storedBudget(spark, root) match {
+        case Some(b) =>
+          // the budget is frozen with the shard count: packBatch bins
+          // against the live Packing.Budget, so a binary rebuilt with
+          // a different budget must not extend this store
+          require(b == Packing.Budget,
+            s"IncrementalPacking: store at $root was packed at " +
+              s"budget $b, this binary has ${Packing.Budget} — " +
+              "rebuild with the stored budget")
+        case None =>
+          // pre-marker store (packed by this same constant): heal by
+          // recording the only budget that has ever touched it
+          StoragePaths.writeSmallFile(
+            spark, budgetMarker(root), Packing.Budget.toString)
+      }
+      storedTokensSource(spark, root) match {
+        case Some(src) =>
+          // the token source is frozen with the budget: the cursor
+          // history is a running sum in the source's unit, so a
+          // different source (or vocabulary) must not extend it
+          require(src == tokensSourceId(nTokensSql),
+            s"IncrementalPacking: store at $root was packed under " +
+              s"token source $src, this run passes " +
+              s"${tokensSourceId(nTokensSql)} — pack with the stored " +
+              "source (or compact to a fresh root to re-price)")
+        case None =>
+          // pre-marker store: before the marker existed, run() had no
+          // token-source knob, so the only source that has ever
+          // touched it is the whitespace default — record THAT, and
+          // let the check above catch a non-default caller
+          StoragePaths.writeSmallFile(spark, tokensSourceMarker(root),
+            tokensSourceId(Packing.WhitespaceTokensSql))
+          require(
+            tokensSourceId(nTokensSql) ==
+              tokensSourceId(Packing.WhitespaceTokensSql),
+            s"IncrementalPacking: pre-marker store at $root was packed " +
+              "on whitespace counts; cannot continue it under a " +
+              "different token source")
+      }
+      storedPayloadsMode(spark, root) match {
+        case Some(mode) =>
+          // payload materialization is frozen with the rest of the
+          // config: a store that drained batches without fragments
+          // must not start writing them mid-history (payloadStreams
+          // would silently serve a feed missing the early batches'
+          // tokens), one that has them must not stop (the feed would
+          // silently freeze while bins keep growing), and an mm store
+          // must keep its carriage + ref configuration (a changed ref
+          // expression keys a different catalog with identical tokens)
+          require(mode == runMode,
+            s"IncrementalPacking: store at $root froze payload mode " +
+              s"'$mode' at bootstrap, this run drains under " +
+              s"'$runMode' — continue with the stored configuration " +
+              "(or compact to a fresh root)")
+        case None =>
+          // pre-marker store: infer the only history it can have had
+          // from the payloads store itself (fragments exist iff every
+          // prior drain passed a vocabulary — partial histories were
+          // impossible because payloadVocab also pins nTokensSql,
+          // which the _tokens_source marker froze from batch 0; mm
+          // stores postdate the marker, so the healed mode is "1"/"0")
+          val had = StoragePaths.exists(spark, payloadsPath(root))
+          StoragePaths.writeSmallFile(spark, payloadsMarker(root),
+            if (had) "1" else "0")
+          require((if (had) "1" else "0") == runMode,
+            s"IncrementalPacking: pre-marker store at $root healed " +
+              s"to payload mode '${if (had) "1" else "0"}' (" +
+              (if (had) "fragments present" else "no fragments") +
+              s"), this run drains under '$runMode' — continue with " +
+              "the stored history's choice")
+      }
+      val uniq = batch.dropDuplicates("doc_id")
+      val (bins, nextCursor) =
+        packBatch(uniq, cursor(spark, root, batchId), shards, nTokensSql)
+      val stable = bins.localCheckpoint()
+      val cursorStable = nextCursor.localCheckpoint()
+      stable.write.mode("overwrite")
+        .parquet(s"${binsPath(root)}/batch=$batchId")
+      cursorStable.coalesce(1).write.mode("overwrite")
+        .parquet(s"${cursorPath(root)}/batch=$batchId")
+      payloadVocab.foreach { v =>
+        // the batch's payload fragments off the SAME materialized
+        // bins (a pure function of (batch, cursor) like the bins
+        // themselves, so the overwrite is replay-idempotent); the mm
+        // sidecar rides the same one packing window
+        mmCarriageSql.fold(payloadsFromBins(uniq, stable, v))(c =>
+          payloadsMmFromBins(uniq, stable, v, c, mmMediaRefSql))
+          .write.mode("overwrite")
+          .parquet(s"${payloadsPath(root)}/batch=$batchId")
+      }
+    }
+    StoragePaths.readOrEmpty(spark, binsPath(root), BinsSchema)
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.ops.Pq
@@ -40,9 +39,6 @@ object IncrementalPqIndex {
     StructField("vec_id", LongType) +:
       ((0 until Pq.NumSubspaces).map(m => StructField(s"code_$m", LongType)) :+
         StructField("pq_code", LongType)))
-
-  private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[Row](), schema)
 
   /** Persist a trained codebook `(m, k, cvec, cnorm2)`. */
   def writeCodebook(spark: SparkSession, book: Seq[Pq.CodebookEntry],
@@ -93,65 +89,43 @@ object IncrementalPqIndex {
       codePath: String,
       embSchema: StructType,
       numIdBuckets: Int = IncrementalAnnIndex.NumIdBuckets): DataFrame = {
-    // fresh-era guard (the shared StoragePaths.hasEpochDirs contract): a
-    // new checkpoint era's batch ids restart at 0 and would overwrite the
-    // previous era's code batches. Re-entry is via a generation whose
-    // history sits at batch=-1 (PqMaintenance's re-encode, or a plain
-    // StoreMaintenance.compact of the code store).
-    require(StoragePaths.exists(spark, checkpointDir) ||
-      !StoragePaths.hasEpochDirs(spark, codePath),
-      s"IncrementalPqIndex.run: fresh checkpoint $checkpointDir over code " +
-        s"store $codePath which still holds batch>=0 directories — the " +
-        "new era would overwrite them; compact first (history belongs at " +
-        "batch=-1 before a fresh era)")
-    def exists(p: String): Boolean = StoragePaths.exists(spark, p)
-    val q = spark.readStream.schema(embSchema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val uniq = batch.dropDuplicates("vec_id")
-          if (!exists(bookPath)) {
-            // bootstrap exactly while no codebook exists — the first
-            // non-empty batch must carry the seed vec_ids
-            val book = Pq.codebook(uniq)
-            require(book.size == Pq.NumSubspaces * Pq.CodebookSize,
-              s"IncrementalPqIndex bootstrap: got ${book.size} codebook " +
-                s"entries, need ${Pq.NumSubspaces * Pq.CodebookSize} — " +
-                s"the bootstrap batch must contain the seed vec_ids " +
-                s"(< ${Pq.CodebookSize})")
-            writeCodebook(spark, book, bookPath)
-          }
-          val book = readCodebook(spark, bookPath)
-          val storeBuckets = IncrementalAnnIndex.bucketCount(spark, codePath)
-          // first write wins for a re-landed vec_id (FAISS add semantics)
-          val fresh =
-            if (storeBuckets.isDefined)
-              uniq.join(
-                IncrementalAnnIndex.priorIds(spark, codePath, uniq, batchId),
-                Seq("vec_id"), "left_anti")
-            else uniq
-          val buckets = storeBuckets.getOrElse(numIdBuckets)
-          Pq.codesWith(fresh, book)
-            .withColumn("id_bucket",
-              IncrementalAnnIndex.idBucket(col("vec_id"), buckets))
-            .repartition(col("id_bucket"))
-            .write.mode("overwrite").partitionBy("id_bucket")
-            .parquet(s"$codePath/batch=$batchId")
-          // marker AFTER the first data write: marker-present ⇒
-          // data-present (the house crash-window contract)
-          if (storeBuckets.isEmpty)
-            StoragePaths.writeSmallFile(spark,
-              s"$codePath/${IncrementalAnnIndex.IdBucketsMarker}",
-              buckets.toString)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    if (exists(codePath))
-      spark.read.parquet(codePath).drop("batch", "id_bucket")
-    else emptyOf(spark, CodeSchema)
+    val book = Drain.frozen(spark, bookPath) { uniq =>
+      // the first non-empty batch must carry the seed vec_ids
+      val book = Pq.codebook(uniq)
+      require(book.size == Pq.NumSubspaces * Pq.CodebookSize,
+        s"IncrementalPqIndex bootstrap: got ${book.size} codebook " +
+          s"entries, need ${Pq.NumSubspaces * Pq.CodebookSize} — " +
+          s"the bootstrap batch must contain the seed vec_ids " +
+          s"(< ${Pq.CodebookSize})")
+      writeCodebook(spark, book, bookPath)
+    }(readCodebook(spark, bookPath))
+    Drain.run(spark, "IncrementalPqIndex.run",
+      spark.readStream.schema(embSchema).parquet(landingDir), checkpointDir,
+      Seq(codePath)) { (batch, batchId) =>
+      val uniq = batch.dropDuplicates("vec_id")
+      val codebook = book(uniq)
+      val storeBuckets = IncrementalAnnIndex.bucketCount(spark, codePath)
+      // first write wins for a re-landed vec_id (FAISS add semantics)
+      val fresh =
+        if (storeBuckets.isDefined)
+          uniq.join(
+            IncrementalAnnIndex.priorIds(spark, codePath, uniq, batchId),
+            Seq("vec_id"), "left_anti")
+        else uniq
+      val buckets = storeBuckets.getOrElse(numIdBuckets)
+      Pq.codesWith(fresh, codebook)
+        .withColumn("id_bucket",
+          IncrementalAnnIndex.idBucket(col("vec_id"), buckets))
+        .repartition(col("id_bucket"))
+        .write.mode("overwrite").partitionBy("id_bucket")
+        .parquet(s"$codePath/batch=$batchId")
+      // marker AFTER the first data write: marker-present ⇒
+      // data-present (the house crash-window contract)
+      if (storeBuckets.isEmpty)
+        StoragePaths.writeSmallFile(spark,
+          s"$codePath/${IncrementalAnnIndex.IdBucketsMarker}",
+          buckets.toString)
+    }
+    StoragePaths.readOrEmpty(spark, codePath, CodeSchema)
   }
 }

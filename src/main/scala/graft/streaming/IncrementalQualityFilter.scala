@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 
 import graft.ops.QualityClassifier
@@ -60,9 +59,6 @@ object IncrementalQualityFilter {
     StructField("score_micro", LongType),
     StructField("selected", BooleanType)))
 
-  private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-
   /** Persist a frozen model `(bucket, n_seed, n_crawl, w_micro)` and its
     * 1-row prior `(n_docs_seed, n_docs_crawl, prior_micro)`. The MODEL is
     * the store-absence key the bootstrap guard probes, so it is written
@@ -119,53 +115,30 @@ object IncrementalQualityFilter {
       checkpointDir: String,
       root: String,
       schema: StructType): DataFrame = {
-    // fresh-era guard (the shared StoragePaths.hasEpochDirs contract): a
-    // new checkpoint era's batch ids restart at 0 and would overwrite
-    // the previous era's ledger and admitted batches. Re-entry is via a
-    // generation whose history sits at batch=-1
-    // (QualityFilterMaintenance's adopt/retrain carry).
-    require(StoragePaths.exists(spark, checkpointDir) ||
-      storePaths(root).forall(p => !StoragePaths.hasEpochDirs(spark, p)),
-      s"IncrementalQualityFilter.run: fresh checkpoint $checkpointDir " +
-        s"over store $root which still holds batch>=0 directories — the " +
-        "new era would overwrite them; compact first (history belongs " +
-        "at batch=-1 before a fresh era)")
-    def exists(p: String): Boolean = StoragePaths.exists(spark, p)
-    val q = spark.readStream.schema(schema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val uniq = batch.dropDuplicates("doc_id")
-          if (!exists(modelPath(root))) {
-            // bootstrap exactly while no model exists — store-absence
-            // keyed, never `batchId == 0`; training requires the label
-            require(uniq.columns.contains("source"),
-              "IncrementalQualityFilter bootstrap: the training batch " +
-                "must carry the `source` label column")
-            val model = QualityClassifier.modelTable(uniq)
-            require(!model.isEmpty,
-              "IncrementalQualityFilter bootstrap: the first non-empty " +
-                "batch produced an empty model — it must carry " +
-                "tokenizable text")
-            writeModel(model, QualityClassifier.priorRow(uniq), root)
-          }
-          val (model, prior) = readModel(spark, root)
-          val scored = scoreBatch(uniq, model, prior).localCheckpoint()
-          scored.write.mode("overwrite")
-            .parquet(s"${ledgerPath(root)}/batch=$batchId")
-          uniq.join(scored.filter(col("selected")).select("doc_id"),
-              Seq("doc_id"))
-            .write.mode("overwrite")
-            .parquet(s"${admittedPath(root)}/batch=$batchId")
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    if (StoragePaths.exists(spark, ledgerPath(root)))
-      spark.read.parquet(ledgerPath(root)).drop("batch")
-    else emptyOf(spark, LedgerSchema)
+    val frozen = Drain.frozen(spark, modelPath(root)) { uniq =>
+      // training requires the label
+      require(uniq.columns.contains("source"),
+        "IncrementalQualityFilter bootstrap: the training batch must " +
+          "carry the `source` label column")
+      val model = QualityClassifier.modelTable(uniq)
+      require(!model.isEmpty,
+        "IncrementalQualityFilter bootstrap: the first non-empty batch " +
+          "produced an empty model — it must carry tokenizable text")
+      writeModel(model, QualityClassifier.priorRow(uniq), root)
+    }(readModel(spark, root))
+    Drain.run(spark, "IncrementalQualityFilter.run",
+      spark.readStream.schema(schema).parquet(landingDir), checkpointDir,
+      storePaths(root)) { (batch, batchId) =>
+      val uniq = batch.dropDuplicates("doc_id")
+      val (model, prior) = frozen(uniq)
+      val scored = scoreBatch(uniq, model, prior).localCheckpoint()
+      scored.write.mode("overwrite")
+        .parquet(s"${ledgerPath(root)}/batch=$batchId")
+      uniq.join(scored.filter(col("selected")).select("doc_id"),
+          Seq("doc_id"))
+        .write.mode("overwrite")
+        .parquet(s"${admittedPath(root)}/batch=$batchId")
+    }
+    StoragePaths.readOrEmpty(spark, ledgerPath(root), LedgerSchema)
   }
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 
 import graft.ops.{Dedup, Similarity}
@@ -70,9 +69,6 @@ object IncrementalSemDedup {
     StructField("list_id", LongType),
     StructField("dup_of", LongType),
     StructField("kept", BooleanType)))
-
-  private def emptyLedger(spark: SparkSession): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[Row](), LedgerSchema)
 
   /** Store sub-paths under one root: frozen leaders, the id-bucketed
     * admitted-vector store (the deduped corpus), the id-bucketed
@@ -184,74 +180,63 @@ object IncrementalSemDedup {
       kmeansIters: Int = 0,
       maxListOccupancy: Int = Similarity.MaxListOccupancy,
       numIdBuckets: Int = IncrementalAnnIndex.NumIdBuckets): DataFrame = {
-    def exists(p: String): Boolean = StoragePaths.exists(spark, p)
-    val (leaders, lists, heads, ledger) =
-      (leaderPath(root), listPath(root), headsPath(root), ledgerPath(root))
+    val (lists, heads, ledger) =
+      (listPath(root), headsPath(root), ledgerPath(root))
     val decided = decidedPath(root)
-    val q = spark.readStream.schema(embSchema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val uniq = batch.dropDuplicates("vec_id")
-          if (!exists(leaders)) {
-            // bootstrap on the first non-empty batch, exists-guarded (the
-            // IncrementalAnnIndex reasoning: batchId==0 alone would brick
-            // a stream whose epoch 0 committed empty)
-            val trained = Similarity.trainLeaders(uniq, kmeansIters)
-            require(trained.count() == Similarity.NumLists.toLong,
-              "IncrementalSemDedup bootstrap: the bootstrap batch must " +
-                s"contain the seed vec_ids (< ${Similarity.NumLists})")
-            trained.write.mode("overwrite").parquet(leaders)
-          }
-          val cents = IncrementalAnnIndex.readLeaders(spark, leaders)
-          // first-write-wins on vec_id against the DECIDED store (kept
-          // and dropped alike): a re-crawl neither re-decides nor
-          // re-enters the ledger (store-exists guard first — the flat
-          // fallback reader would die on a path that isn't there yet)
-          val guarded =
-            if (!exists(decided)) uniq
-            else uniq.join(
-              IncrementalAnnIndex.priorIds(spark, decided,
-                uniq.select("vec_id"), batchId),
-              Seq("vec_id"), "left_anti")
-          val assigned = Similarity.assignWithLeadersRetaining(guarded, cents)
-          val r = dedupBatch(assigned,
-            readHeads(spark, root, batchId), tau, maxListOccupancy)
-          r.ledger.write.mode("overwrite").parquet(s"$ledger/batch=$batchId")
-          val buckets = IncrementalAnnIndex.bucketCount(spark, lists)
-          val n = buckets.getOrElse(numIdBuckets)
-          r.admitted
-            .withColumn("id_bucket",
-              IncrementalAnnIndex.idBucket(col("vec_id"), n))
-            .repartition(col("id_bucket"))
-            .write.mode("overwrite").partitionBy("id_bucket")
-            .parquet(s"$lists/batch=$batchId")
-          // marker AFTER the first data write (marker-present ⇒
-          // data-present; a crash in the window self-heals on replay)
-          if (buckets.isEmpty)
-            StoragePaths.writeSmallFile(spark,
-              s"$lists/${IncrementalAnnIndex.IdBucketsMarker}", n.toString)
-          // every decided id — kept or dropped — into the membership store
-          val dBuckets = IncrementalAnnIndex.bucketCount(spark, decided)
-          val dn = dBuckets.getOrElse(numIdBuckets)
-          r.ledger.select("vec_id")
-            .withColumn("id_bucket",
-              IncrementalAnnIndex.idBucket(col("vec_id"), dn))
-            .repartition(col("id_bucket"))
-            .write.mode("overwrite").partitionBy("id_bucket")
-            .parquet(s"$decided/batch=$batchId")
-          if (dBuckets.isEmpty)
-            StoragePaths.writeSmallFile(spark,
-              s"$decided/${IncrementalAnnIndex.IdBucketsMarker}", dn.toString)
-          r.newHead.write.mode("overwrite").parquet(s"$heads/batch=$batchId")
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    if (exists(ledger)) spark.read.parquet(ledger).drop("batch")
-    else emptyLedger(spark)
+    val leaders = Drain.frozen(spark, leaderPath(root)) { uniq =>
+      val trained = Similarity.trainLeaders(uniq, kmeansIters)
+      require(trained.count() == Similarity.NumLists.toLong,
+        "IncrementalSemDedup bootstrap: the bootstrap batch must " +
+          s"contain the seed vec_ids (< ${Similarity.NumLists})")
+      trained.write.mode("overwrite").parquet(leaderPath(root))
+    }(IncrementalAnnIndex.readLeaders(spark, leaderPath(root)))
+    // unguarded: its re-entry (reenterSuperseded) carries only the heads
+    Drain.run(spark, "IncrementalSemDedup.run",
+      spark.readStream.schema(embSchema).parquet(landingDir), checkpointDir,
+      stores = Nil) { (batch, batchId) =>
+      val uniq = batch.dropDuplicates("vec_id")
+      val cents = leaders(uniq)
+      // first-write-wins on vec_id against the DECIDED store (kept
+      // and dropped alike): a re-crawl neither re-decides nor
+      // re-enters the ledger (store-exists guard first — the flat
+      // fallback reader would die on a path that isn't there yet)
+      val guarded =
+        if (!StoragePaths.exists(spark, decided)) uniq
+        else uniq.join(
+          IncrementalAnnIndex.priorIds(spark, decided,
+            uniq.select("vec_id"), batchId),
+          Seq("vec_id"), "left_anti")
+      val assigned = Similarity.assignWithLeadersRetaining(guarded, cents)
+      val r = dedupBatch(assigned,
+        readHeads(spark, root, batchId), tau, maxListOccupancy)
+      r.ledger.write.mode("overwrite").parquet(s"$ledger/batch=$batchId")
+      val buckets = IncrementalAnnIndex.bucketCount(spark, lists)
+      val n = buckets.getOrElse(numIdBuckets)
+      r.admitted
+        .withColumn("id_bucket",
+          IncrementalAnnIndex.idBucket(col("vec_id"), n))
+        .repartition(col("id_bucket"))
+        .write.mode("overwrite").partitionBy("id_bucket")
+        .parquet(s"$lists/batch=$batchId")
+      // marker AFTER the first data write (marker-present ⇒
+      // data-present; a crash in the window self-heals on replay)
+      if (buckets.isEmpty)
+        StoragePaths.writeSmallFile(spark,
+          s"$lists/${IncrementalAnnIndex.IdBucketsMarker}", n.toString)
+      // every decided id — kept or dropped — into the membership store
+      val dBuckets = IncrementalAnnIndex.bucketCount(spark, decided)
+      val dn = dBuckets.getOrElse(numIdBuckets)
+      r.ledger.select("vec_id")
+        .withColumn("id_bucket",
+          IncrementalAnnIndex.idBucket(col("vec_id"), dn))
+        .repartition(col("id_bucket"))
+        .write.mode("overwrite").partitionBy("id_bucket")
+        .parquet(s"$decided/batch=$batchId")
+      if (dBuckets.isEmpty)
+        StoragePaths.writeSmallFile(spark,
+          s"$decided/${IncrementalAnnIndex.IdBucketsMarker}", dn.toString)
+      r.newHead.write.mode("overwrite").parquet(s"$heads/batch=$batchId")
+    }
+    StoragePaths.readOrEmpty(spark, ledger, LedgerSchema)
   }
 }

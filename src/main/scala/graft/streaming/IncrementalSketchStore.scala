@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Incremental aggregate maintenance via MERGEABLE partials — the third
   * leg of the incremental suite (next to [[IncrementalCuration]] and
@@ -74,8 +73,7 @@ object IncrementalSketchStore {
     */
   def dailyReport(spark: SparkSession, sketchPath: String): DataFrame =
     if (!StoragePaths.exists(spark, sketchPath))
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), ReportSchema)
+      StoragePaths.emptyOf(spark, ReportSchema)
     else spark.read.parquet(sketchPath).drop("batch")
       .groupBy("day")
       .agg(
@@ -212,70 +210,40 @@ object IncrementalSketchStore {
         s"of ${want._3} — destination is not servable")
   }
 
-  /** The fresh-era guard both drains share: a new checkpoint era's batch
-    * ids restart at 0 and would overwrite the previous era's partials —
-    * silent loss of whole days' counts. Re-entry is via the folds
-    * ([[foldDaily]] / [[foldCms]] land at `batch=-1`, below every
-    * epoch).
-    */
-  private def requireFreshEraSafe(
-      spark: SparkSession, checkpointDir: String, storePath: String,
-      what: String): Unit =
-    require(StoragePaths.exists(spark, checkpointDir) ||
-      !StoragePaths.hasEpochDirs(spark, storePath),
-      s"IncrementalSketchStore.$what: fresh checkpoint $checkpointDir " +
-        s"over store $storePath which still holds batch>=0 directories — " +
-        "the new era would overwrite them; compact first " +
-        "(SketchStoreMaintenance.maintain folds history to batch=-1 and " +
-        "publishes the generation the drain re-enters)")
-
   /** Drain the landing dir, appending each micro-batch's CMS partial —
-    * the frequency-sketch twin of [[run]].
+    * the frequency-sketch twin of [[run]]. A fresh checkpoint over live
+    * `batch>=0` partials is refused ([[Drain.run]]): re-entry
+    * is via the folds ([[foldDaily]] / [[foldCms]] land at `batch=-1`).
     */
   def runCms(
       spark: SparkSession,
       landingDir: String,
       checkpointDir: String,
       cmsPath: String,
-      eventSchema: org.apache.spark.sql.types.StructType): Unit = {
-    requireFreshEraSafe(spark, checkpointDir, cmsPath, "runCms")
-    val q = spark.readStream.schema(eventSchema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          cmsPartials(batch).coalesce(1).write.mode("overwrite")
-            .parquet(s"$cmsPath/batch=$batchId")
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      eventSchema: org.apache.spark.sql.types.StructType): Unit =
+    Drain.run(spark, "IncrementalSketchStore.runCms",
+      spark.readStream.schema(eventSchema).parquet(landingDir), checkpointDir,
+      Seq(cmsPath)) { (batch, batchId) =>
+      cmsPartials(batch).coalesce(1).write.mode("overwrite")
+        .parquet(s"$cmsPath/batch=$batchId")
+    }
 
-  /** Drain the landing dir, appending each micro-batch's partials. */
+  /** Drain the landing dir, appending each micro-batch's partials (the
+    * same fresh-era guard as [[runCms]]).
+    */
   def run(
       spark: SparkSession,
       landingDir: String,
       checkpointDir: String,
       sketchPath: String,
       eventSchema: org.apache.spark.sql.types.StructType): DataFrame = {
-    requireFreshEraSafe(spark, checkpointDir, sketchPath, "run")
-    val q = spark.readStream.schema(eventSchema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // per-batch overwrite = idempotent under foreachBatch replay
-          partials(batch).write.mode("overwrite")
-            .parquet(s"$sketchPath/batch=$batchId")
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, "IncrementalSketchStore.run",
+      spark.readStream.schema(eventSchema).parquet(landingDir), checkpointDir,
+      Seq(sketchPath)) { (batch, batchId) =>
+      // per-batch overwrite = idempotent under foreachBatch replay
+      partials(batch).write.mode("overwrite")
+        .parquet(s"$sketchPath/batch=$batchId")
+    }
     dailyReport(spark, sketchPath)
   }
 }

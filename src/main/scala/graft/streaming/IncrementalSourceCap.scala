@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.ops.{Portable, Sampling}
@@ -65,9 +64,6 @@ object IncrementalSourceCap {
   def storePaths(root: String): Seq[String] =
     Seq(countsPath(root), decidedPath(root), corpusPath(root))
 
-  private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-
   /** Spent budget per source for the batch's own source set, read with
     * touched-bucket pruning and summed across batch deltas (excluding the
     * replaying batch's own partition). One row per touched source.
@@ -87,12 +83,12 @@ object IncrementalSourceCap {
         StoragePaths.readTouchedBuckets(spark, path, "id_bucket", touched)
           .map(_.filter(col("batch").cast("long") =!= excludeBatchId)
             .groupBy("source").agg(sum("n_admitted").as("n_spent")))
-          .getOrElse(emptyOf(spark, StructType(Seq(
+          .getOrElse(StoragePaths.emptyOf(spark, StructType(Seq(
             StructField("source", StringType),
             StructField("n_spent", LongType)))))
       case None =>
         if (!StoragePaths.exists(spark, path))
-          emptyOf(spark, StructType(Seq(
+          StoragePaths.emptyOf(spark, StructType(Seq(
             StructField("source", StringType),
             StructField("n_spent", LongType))))
         else spark.read.parquet(path)
@@ -213,68 +209,50 @@ object IncrementalSourceCap {
       docSchema: StructType,
       cap: Int = Sampling.SourceCapK,
       numBuckets: Int = NumSourceBuckets): DataFrame = {
-    // fresh-era guard (the shared StoragePaths.hasEpochDirs contract): a
-    // new checkpoint era's batch ids restart at 0, so its writes would
-    // silently overwrite the previous era's batch>=0 partitions — and a
-    // lost spent delta silently re-opens an exhausted source's budget.
-    // Re-entry is via compaction (SourceCapMaintenance folds history,
-    // summing the deltas, to batch=-1).
-    require(StoragePaths.exists(spark, checkpointDir) ||
-      storePaths(root).forall(p => !StoragePaths.hasEpochDirs(spark, p)),
-      s"IncrementalSourceCap.run: fresh checkpoint $checkpointDir over " +
-        s"store $root which still holds batch>=0 directories — the new " +
-        "era would overwrite them; compact first " +
-        "(SourceCapMaintenance.compact folds history to batch=-1)")
+    // a lost spent delta silently re-opens an exhausted source's budget;
+    // re-entry is via SourceCapMaintenance, which folds history, summing
+    // the deltas, to batch=-1
     val (counts, decided, corpus) =
       (countsPath(root), decidedPath(root), corpusPath(root))
-    val q = spark.readStream.schema(docSchema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val uniq = batch.dropDuplicates("doc_id")
-          // first-write-wins on doc_id, kept AND dropped alike: a
-          // re-crawl neither re-enters the corpus nor re-spends budget
-          val guarded = uniq.join(
-            priorDocIds(spark, root, uniq.select("doc_id"), batchId),
-            Seq("doc_id"), "left_anti")
-          val spent = spentBudget(spark, root,
-            guarded.select("source"), batchId)
-          val r = admitBatch(guarded, spent, cap)
-          r.admitted.write.mode("overwrite")
-            .parquet(s"$corpus/batch=$batchId")
-          val cb = IncrementalAnnIndex.bucketCount(spark, counts)
-          val cn = cb.getOrElse(numBuckets)
-          r.deltas
-            .withColumn("id_bucket",
-              IncrementalAnnIndex.idBucket(xxhash64(col("source")), cn))
-            .repartition(col("id_bucket"))
-            .write.mode("overwrite").partitionBy("id_bucket")
-            .parquet(s"$counts/batch=$batchId")
-          // marker AFTER the first data write (the structural-probe heal
-          // contract — see IncrementalChunkDedup)
-          if (cb.isEmpty)
-            StoragePaths.writeSmallFile(spark,
-              s"$counts/${IncrementalAnnIndex.IdBucketsMarker}", cn.toString)
-          val db = IncrementalAnnIndex.bucketCount(spark, decided)
-          val dn = db.getOrElse(numBuckets)
-          guarded.select("doc_id")
-            .withColumn("id_bucket",
-              IncrementalAnnIndex.idBucket(col("doc_id"), dn))
-            .repartition(col("id_bucket"))
-            .write.mode("overwrite").partitionBy("id_bucket")
-            .parquet(s"$decided/batch=$batchId")
-          if (db.isEmpty)
-            StoragePaths.writeSmallFile(spark,
-              s"$decided/${IncrementalAnnIndex.IdBucketsMarker}", dn.toString)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    if (StoragePaths.exists(spark, corpus))
-      spark.read.parquet(corpus).drop("batch")
-    else emptyOf(spark, docSchema)
+    Drain.run(spark, "IncrementalSourceCap.run",
+      spark.readStream.schema(docSchema).parquet(landingDir), checkpointDir,
+      storePaths(root)) { (batch, batchId) =>
+      val uniq = batch.dropDuplicates("doc_id")
+      // first-write-wins on doc_id, kept AND dropped alike: a
+      // re-crawl neither re-enters the corpus nor re-spends budget
+      val guarded = uniq.join(
+        priorDocIds(spark, root, uniq.select("doc_id"), batchId),
+        Seq("doc_id"), "left_anti")
+      val spent = spentBudget(spark, root,
+        guarded.select("source"), batchId)
+      val r = admitBatch(guarded, spent, cap)
+      r.admitted.write.mode("overwrite")
+        .parquet(s"$corpus/batch=$batchId")
+      val cb = IncrementalAnnIndex.bucketCount(spark, counts)
+      val cn = cb.getOrElse(numBuckets)
+      r.deltas
+        .withColumn("id_bucket",
+          IncrementalAnnIndex.idBucket(xxhash64(col("source")), cn))
+        .repartition(col("id_bucket"))
+        .write.mode("overwrite").partitionBy("id_bucket")
+        .parquet(s"$counts/batch=$batchId")
+      // marker AFTER the first data write (the structural-probe heal
+      // contract — see IncrementalChunkDedup)
+      if (cb.isEmpty)
+        StoragePaths.writeSmallFile(spark,
+          s"$counts/${IncrementalAnnIndex.IdBucketsMarker}", cn.toString)
+      val db = IncrementalAnnIndex.bucketCount(spark, decided)
+      val dn = db.getOrElse(numBuckets)
+      guarded.select("doc_id")
+        .withColumn("id_bucket",
+          IncrementalAnnIndex.idBucket(col("doc_id"), dn))
+        .repartition(col("id_bucket"))
+        .write.mode("overwrite").partitionBy("id_bucket")
+        .parquet(s"$decided/batch=$batchId")
+      if (db.isEmpty)
+        StoragePaths.writeSmallFile(spark,
+          s"$decided/${IncrementalAnnIndex.IdBucketsMarker}", dn.toString)
+    }
+    StoragePaths.readOrEmpty(spark, corpus, docSchema)
   }
 }

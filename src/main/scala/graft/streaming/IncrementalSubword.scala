@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.ops.{Portable, SubwordTrain, TextAnalysis}
@@ -60,9 +59,6 @@ object IncrementalSubword {
     StructField("n_words", LongType),
     StructField("n_subwords", LongType),
     StructField("n_unk", LongType)))
-
-  private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[Row](), schema)
 
   /** Persist a frozen vocabulary as `(pid, piece)` rows — pid is the
     * 1-based position in the trained inventory, the exact id assignment
@@ -140,53 +136,23 @@ object IncrementalSubword {
       root: String,
       schema: StructType,
       nMerges: Int = SubwordTrain.DefaultMerges): DataFrame = {
-    // fresh-era guard (the shared StoragePaths.hasEpochDirs contract):
-    // re-entry is via a generation whose history sits at batch=-1
-    // (SubwordMaintenance's adopt/retrain carry)
-    require(StoragePaths.exists(spark, checkpointDir) ||
-      storePaths(root).forall(p => !StoragePaths.hasEpochDirs(spark, p)),
-      s"IncrementalSubword.run: fresh checkpoint $checkpointDir over " +
-        s"store $root which still holds batch>=0 directories — the new " +
-        "era would overwrite them; compact first (history belongs at " +
-        "batch=-1 before a fresh era)")
-    def exists(p: String): Boolean = StoragePaths.exists(spark, p)
-    // the vocabulary freezes at bootstrap and run() is its only writer, so
-    // one validated read serves the whole drain (the [[IncrementalDsir]]
-    // once-per-drain validation pattern)
-    var frozen: Option[Seq[String]] = None
-    val q = spark.readStream.schema(schema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val uniq = batch.dropDuplicates("doc_id")
-          if (frozen.isEmpty && !exists(vocabPath(root))) {
-            // bootstrap exactly while no vocabulary exists —
-            // store-absence keyed, never `batchId == 0`; the overwrite
-            // write is replay-idempotent (training is deterministic)
-            val v = SubwordTrain.trainedVocab(uniq, nMerges)
-            require(v.nonEmpty,
-              "IncrementalSubword bootstrap: the first non-empty batch " +
-                "trained an empty vocabulary — it must carry tokenizable " +
-                "text")
-            writeVocab(spark, v, vocabPath(root))
-          }
-          val v = frozen.getOrElse {
-            val t = readVocab(spark, vocabPath(root))
-            frozen = Some(t)
-            t
-          }
-          scoreBatch(uniq, v).localCheckpoint()
-            .write.mode("overwrite")
-            .parquet(s"${ledgerPath(root)}/batch=$batchId")
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    if (StoragePaths.exists(spark, ledgerPath(root)))
-      spark.read.parquet(ledgerPath(root)).drop("batch")
-    else emptyOf(spark, LedgerSchema)
+    val vocab = Drain.frozen(spark, vocabPath(root)) { uniq =>
+      // training is deterministic, so a replayed bootstrap rewrites the
+      // identical vocabulary
+      val v = SubwordTrain.trainedVocab(uniq, nMerges)
+      require(v.nonEmpty,
+        "IncrementalSubword bootstrap: the first non-empty batch trained " +
+          "an empty vocabulary — it must carry tokenizable text")
+      writeVocab(spark, v, vocabPath(root))
+    }(readVocab(spark, vocabPath(root)))
+    Drain.run(spark, "IncrementalSubword.run",
+      spark.readStream.schema(schema).parquet(landingDir), checkpointDir,
+      storePaths(root)) { (batch, batchId) =>
+      val uniq = batch.dropDuplicates("doc_id")
+      scoreBatch(uniq, vocab(uniq)).localCheckpoint()
+        .write.mode("overwrite")
+        .parquet(s"${ledgerPath(root)}/batch=$batchId")
+    }
+    StoragePaths.readOrEmpty(spark, ledgerPath(root), LedgerSchema)
   }
 }

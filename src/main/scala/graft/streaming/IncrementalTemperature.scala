@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
 
 import graft.ops.Portable.SampleMod
@@ -71,9 +70,6 @@ object IncrementalTemperature {
     StructField("threshold", LongType),
     StructField("kept", BooleanType)))
 
-  private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-
   /** Persist a frozen threshold table `(stratum, n_total, threshold)`. */
   def writeThresholds(th: DataFrame, path: String): Unit =
     th.select("stratum", "n_total", "threshold")
@@ -135,54 +131,30 @@ object IncrementalTemperature {
       root: String,
       schema: StructType,
       stratumCol: String = "lang"): DataFrame = {
-    // fresh-era guard (the shared StoragePaths.hasEpochDirs contract): a
-    // new checkpoint era's batch ids restart at 0 and would overwrite
-    // the previous era's ledger and kept batches. Re-entry is via a
-    // generation whose history sits at batch=-1 (TemperatureMaintenance's
-    // adopt/recalibrate carry).
-    require(StoragePaths.exists(spark, checkpointDir) ||
-      storePaths(root).forall(p => !StoragePaths.hasEpochDirs(spark, p)),
-      s"IncrementalTemperature.run: fresh checkpoint $checkpointDir over " +
-        s"store $root which still holds batch>=0 directories — the new " +
-        "era would overwrite them; compact first (history belongs at " +
-        "batch=-1 before a fresh era)")
-    def exists(p: String): Boolean = StoragePaths.exists(spark, p)
-    val q = spark.readStream.schema(schema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val uniq = batch.dropDuplicates("doc_id")
-          if (!exists(thresholdsPath(root))) {
-            // bootstrap exactly while no table exists — store-absence
-            // keyed, never `batchId == 0` (an empty epoch 0 must not
-            // brick the stream); the overwrite write is replay-idempotent
-            // temperatureThresholds derives the mix from REAL strata only,
-            // so the keep-everything invariant readThresholds re-validates
-            // holds for every bootstrap corpus with any non-null stratum
-            val th = Sampling.temperatureThresholds(uniq, stratumCol)
-            require(!th.isEmpty,
-              "IncrementalTemperature bootstrap: the first non-empty " +
-                "batch produced no strata — it must carry a non-null " +
-                s"'$stratumCol' column")
-            writeThresholds(th, thresholdsPath(root))
-          }
-          val th = readThresholds(spark, thresholdsPath(root))
-          val assigned = assignBatch(uniq, th, stratumCol).localCheckpoint()
-          assigned.write.mode("overwrite")
-            .parquet(s"${ledgerPath(root)}/batch=$batchId")
-          uniq.join(assigned.filter(col("kept")).select("doc_id"),
-              Seq("doc_id"))
-            .write.mode("overwrite")
-            .parquet(s"${keptPath(root)}/batch=$batchId")
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    if (StoragePaths.exists(spark, ledgerPath(root)))
-      spark.read.parquet(ledgerPath(root)).drop("batch")
-    else emptyOf(spark, LedgerSchema)
+    val thresholds = Drain.frozen(spark, thresholdsPath(root)) { uniq =>
+      // temperatureThresholds derives the mix from REAL strata only, so
+      // the keep-everything invariant readThresholds validates holds for
+      // every bootstrap corpus with any non-null stratum
+      val th = Sampling.temperatureThresholds(uniq, stratumCol)
+      require(!th.isEmpty,
+        "IncrementalTemperature bootstrap: the first non-empty batch " +
+          s"produced no strata — it must carry a non-null '$stratumCol' " +
+          "column")
+      writeThresholds(th, thresholdsPath(root))
+    }(readThresholds(spark, thresholdsPath(root)))
+    Drain.run(spark, "IncrementalTemperature.run",
+      spark.readStream.schema(schema).parquet(landingDir), checkpointDir,
+      storePaths(root)) { (batch, batchId) =>
+      val uniq = batch.dropDuplicates("doc_id")
+      val assigned =
+        assignBatch(uniq, thresholds(uniq), stratumCol).localCheckpoint()
+      assigned.write.mode("overwrite")
+        .parquet(s"${ledgerPath(root)}/batch=$batchId")
+      uniq.join(assigned.filter(col("kept")).select("doc_id"),
+          Seq("doc_id"))
+        .write.mode("overwrite")
+        .parquet(s"${keptPath(root)}/batch=$batchId")
+    }
+    StoragePaths.readOrEmpty(spark, ledgerPath(root), LedgerSchema)
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.ops.Dedup
@@ -68,9 +67,6 @@ object IncrementalWinnow {
   def decidedPath(root: String): String = s"$root/decided"
   def corpusPath(root: String): String = s"$root/docs"
   def ledgerPath(root: String): String = s"$root/ledger"
-
-  private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[Row](), schema)
 
   /** Bucket-pruned, key-narrowed read of a store keyed by `keyCol` —
     * the shared [[StoragePaths.prunedStore]] probe with this module's
@@ -242,51 +238,36 @@ object IncrementalWinnow {
       checkpointDir: String,
       root: String,
       docSchema: StructType): DataFrame = {
-    require(StoragePaths.exists(spark, checkpointDir) ||
-      storePaths(root).forall(p => !StoragePaths.hasEpochDirs(spark, p)),
-      s"IncrementalWinnow.run: fresh checkpoint $checkpointDir over store " +
-        s"$root which still holds batch>=0 directories — the new era " +
-        "would overwrite them; compact first (WinnowMaintenance.compact " +
-        "folds history to batch=-1)")
-    val q = spark.readStream.schema(docSchema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val uniq = batch.dropDuplicates("doc_id")
-          val decided = priorDecided(spark, root, uniq.select("doc_id"), batchId)
-          val guarded = uniq.join(decided, Seq("doc_id"), "left_anti")
-            .localCheckpoint() // decide once; three consumers below
-          if (!guarded.isEmpty) {
-            // fingerprint the batch ONCE; the persisted relation feeds the
-            // probe-key derivation AND every decision pass inside
-            // decideFingerprinted (which takes ownership and unpersists)
-            val batchFps = batchFingerprints(guarded)
-            val storeFps = priorFingerprints(spark, root,
-              batchFps.select("h"), batchId).localCheckpoint()
-            val candIds = storeFps.select(col("doc_id")).distinct()
-            val storeSizes = priorSizes(spark, root, candIds, batchId)
-            val r = decideFingerprinted(guarded, batchFps, storeFps, storeSizes)
-            r.admitted.write.mode("overwrite")
-              .parquet(s"${corpusPath(root)}/batch=$batchId")
-            StoragePaths.writeBucketedStoreBatch(spark, fpPath(root),
-              r.newFps, "h", batchId, NumBuckets)
-            StoragePaths.writeBucketedStoreBatch(spark, sizesPath(root),
-              r.newSizes, "doc_id", batchId, NumBuckets)
-            StoragePaths.writeBucketedStoreBatch(spark, decidedPath(root),
-              guarded.select("doc_id"), "doc_id", batchId, NumBuckets,
-              legacyFlatFallback = false)
-            r.ledger.write.mode("overwrite")
-              .parquet(s"${ledgerPath(root)}/batch=$batchId")
-          }
-        }
-        ()
+    Drain.run(spark, "IncrementalWinnow.run",
+      spark.readStream.schema(docSchema).parquet(landingDir), checkpointDir,
+      storePaths(root)) { (batch, batchId) =>
+      val uniq = batch.dropDuplicates("doc_id")
+      val decided = priorDecided(spark, root, uniq.select("doc_id"), batchId)
+      val guarded = uniq.join(decided, Seq("doc_id"), "left_anti")
+        .localCheckpoint() // decide once; three consumers below
+      if (!guarded.isEmpty) {
+        // fingerprint the batch ONCE; the persisted relation feeds the
+        // probe-key derivation AND every decision pass inside
+        // decideFingerprinted (which takes ownership and unpersists)
+        val batchFps = batchFingerprints(guarded)
+        val storeFps = priorFingerprints(spark, root,
+          batchFps.select("h"), batchId).localCheckpoint()
+        val candIds = storeFps.select(col("doc_id")).distinct()
+        val storeSizes = priorSizes(spark, root, candIds, batchId)
+        val r = decideFingerprinted(guarded, batchFps, storeFps, storeSizes)
+        r.admitted.write.mode("overwrite")
+          .parquet(s"${corpusPath(root)}/batch=$batchId")
+        StoragePaths.writeBucketedStoreBatch(spark, fpPath(root),
+          r.newFps, "h", batchId, NumBuckets)
+        StoragePaths.writeBucketedStoreBatch(spark, sizesPath(root),
+          r.newSizes, "doc_id", batchId, NumBuckets)
+        StoragePaths.writeBucketedStoreBatch(spark, decidedPath(root),
+          guarded.select("doc_id"), "doc_id", batchId, NumBuckets,
+          legacyFlatFallback = false)
+        r.ledger.write.mode("overwrite")
+          .parquet(s"${ledgerPath(root)}/batch=$batchId")
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    if (StoragePaths.exists(spark, corpusPath(root)))
-      spark.read.parquet(corpusPath(root)).drop("batch")
-    else emptyOf(spark, docSchema)
+    }
+    StoragePaths.readOrEmpty(spark, corpusPath(root), docSchema)
   }
 }

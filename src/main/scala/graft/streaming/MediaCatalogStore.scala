@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType}
 
 import graft.ops.Packing
@@ -75,9 +74,6 @@ object MediaCatalogStore {
     StructField("n_bytes", LongType),
     StructField("payload", BinaryType)))
 
-  private def emptyCatalog(spark: SparkSession): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[Row](), CatalogSchema)
-
   /** Land a whole catalog relation as the bucketed serving layout in one
     * shot — the bootstrap path. `media` is [[graft.ops.Multimodal.media]]'s
     * shape. The rows land at `batch=-1` ([[StoreMaintenance
@@ -132,16 +128,6 @@ object MediaCatalogStore {
       root: String,
       schema: StructType,
       buckets: Int = DefaultBuckets): DataFrame = {
-    // fresh-era guard (the shared StoragePaths.hasEpochDirs contract): a
-    // new checkpoint era's batch ids restart at 0 and would overwrite the
-    // previous era's catalog batches — silently dropping served bytes.
-    // Re-entry is via MediaCatalogMaintenance's batch=-1 carry.
-    require(StoragePaths.exists(spark, checkpointDir) ||
-      storePaths(root).forall(p => !StoragePaths.hasEpochDirs(spark, p)),
-      s"MediaCatalogStore.run: fresh checkpoint $checkpointDir over " +
-        s"catalog $root which still holds batch>=0 directories — the new " +
-        "era would overwrite them; compact first (history belongs at " +
-        "batch=-1 before a fresh era)")
     // a crashed write() leaves batch=-1 data WITHOUT its marker; the
     // bucket count the bootstrap hashed with is then unknowable, and
     // draining would stamp the default over it — the membership probe
@@ -157,44 +143,36 @@ object MediaCatalogStore {
         "write(); delete the partial bootstrap and rewrite it before " +
         "draining (stamping a default count over unknown-bucketed data " +
         "would corrupt the pruned probes)")
-    val q = spark.readStream.schema(schema).parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // one row per media_id even within the drain (a file and its
-          // re-crawl can land in the same AvailableNow batch)
-          val uniq = batch
-            .select(col("media_id"), col("media_type"), col("n_bytes"),
-              col("payload"))
-            .dropDuplicates("media_id")
-          // first write wins for a re-landed media_id, checked against
-          // only the touched id buckets (see priorIds); TAKEN-DOWN ids
-          // are refused the same way — a tombstone outlives the bytes it
-          // removed, so a re-crawl of a retracted asset cannot re-admit
-          // it (the guard that makes retraction a takedown, not a gap
-          // the next drain fills back in). Both probes are
-          // touched-bucket pruned.
-          val fresh = uniq
-            .join(priorIds(spark, root, uniq, batchId),
-              Seq("media_id"), "left_anti")
-            .join(StoragePaths.prunedStore(spark, tombstonesPath(root),
-              "media_id", uniq,
-              StructType(Seq(StructField("media_id", LongType))),
-              excludeBatchId = None, semiJoinKeys = false),
-              Seq("media_id"), "left_anti")
-          StoragePaths.writeBucketedStoreBatch(spark, mediaPath(root),
-            fresh, "media_id", batchId, buckets,
-            legacyFlatFallback = false)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    if (StoragePaths.exists(spark, mediaPath(root)))
-      spark.read.parquet(mediaPath(root)).drop("batch", "id_bucket")
-    else emptyCatalog(spark)
+    // re-entry is via MediaCatalogMaintenance's batch=-1 carry
+    Drain.run(spark, "MediaCatalogStore.run",
+      spark.readStream.schema(schema).parquet(landingDir), checkpointDir,
+      storePaths(root)) { (batch, batchId) =>
+      // one row per media_id even within the drain (a file and its
+      // re-crawl can land in the same AvailableNow batch)
+      val uniq = batch
+        .select(col("media_id"), col("media_type"), col("n_bytes"),
+          col("payload"))
+        .dropDuplicates("media_id")
+      // first write wins for a re-landed media_id, checked against
+      // only the touched id buckets (see priorIds); TAKEN-DOWN ids
+      // are refused the same way — a tombstone outlives the bytes it
+      // removed, so a re-crawl of a retracted asset cannot re-admit
+      // it (the guard that makes retraction a takedown, not a gap
+      // the next drain fills back in). Both probes are
+      // touched-bucket pruned.
+      val fresh = uniq
+        .join(priorIds(spark, root, uniq, batchId),
+          Seq("media_id"), "left_anti")
+        .join(StoragePaths.prunedStore(spark, tombstonesPath(root),
+          "media_id", uniq,
+          StructType(Seq(StructField("media_id", LongType))),
+          excludeBatchId = None, semiJoinKeys = false),
+          Seq("media_id"), "left_anti")
+      StoragePaths.writeBucketedStoreBatch(spark, mediaPath(root),
+        fresh, "media_id", batchId, buckets,
+        legacyFlatFallback = false)
+    }
+    StoragePaths.readOrEmpty(spark, mediaPath(root), CatalogSchema)
   }
 
   /** The catalog slice a feed's refs touch: the store read pruned to the
@@ -242,7 +220,7 @@ object MediaCatalogStore {
         else Some(spark.read.option("basePath", path).parquet(legacy: _*)
           .select("media_id", "media_type", "n_bytes", "payload"))
       }
-      .getOrElse(emptyCatalog(spark))
+      .getOrElse(StoragePaths.emptyOf(spark, CatalogSchema))
   }
 
   /** The byte fetch against the store: [[Packing.fetchMediaPayloads]]'s

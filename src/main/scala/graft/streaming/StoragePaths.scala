@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Filesystem-probe helper shared by the streaming store maintainers
   * ([[IncrementalMartStream]], [[IncrementalCuration]]) — one place to fix
@@ -12,6 +13,20 @@ private[graft] object StoragePaths {
     val hp = new Path(p)
     hp.getFileSystem(spark.sessionState.newHadoopConf()).exists(hp)
   }
+
+  /** The typed empty frame of `schema`. */
+  def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(new java.util.ArrayList[Row](), schema)
+
+  /** A store's rows without its layout columns (`batch`, `id_bucket`),
+    * or the typed empty frame of `schema` when the store was never
+    * written — a drain that landed nothing returns an empty result, not
+    * a crash.
+    */
+  def readOrEmpty(spark: SparkSession, path: String,
+      schema: StructType): DataFrame =
+    if (exists(spark, path)) spark.read.parquet(path).drop("batch", "id_bucket")
+    else emptyOf(spark, schema)
 
   /** Write a small metadata file (store markers, generation manifests).
     * The name should start with `_` so Spark's file listing and partition
@@ -30,9 +45,9 @@ private[graft] object StoragePaths {
 
   /** True iff the store holds any streaming-epoch (`batch>=0`)
     * directory — the partitions a NEW checkpoint era would re-number
-    * from 0 and overwrite. The fresh-era guard every accumulating-store
-    * `run` shares: re-entry is only safe after maintenance folds history
-    * to `batch=-1` ([[StoreMaintenance.CompactedBatch]]).
+    * from 0 and overwrite. The probe behind [[Drain.run]]'s fresh-era
+    * guard: re-entry is only safe after maintenance folds history to
+    * `batch=-1` ([[StoreMaintenance.CompactedBatch]]).
     */
   def hasEpochDirs(spark: SparkSession, path: String): Boolean = {
     val hp = new Path(path)
@@ -89,7 +104,7 @@ private[graft] object StoragePaths {
       spark: SparkSession,
       root: String,
       bucketCol: String,
-      touched: Seq[Int]): Option[org.apache.spark.sql.DataFrame] = {
+      touched: Seq[Int]): Option[DataFrame] = {
     val dirs = touchedBucketDirs(spark, root, bucketCol, touched)
     if (dirs.isEmpty) None
     else Some(spark.read.option("basePath", root).parquet(dirs: _*))
@@ -140,7 +155,7 @@ private[graft] object StoragePaths {
   def writeBucketedStoreBatch(
       spark: SparkSession,
       storePath: String,
-      rows: org.apache.spark.sql.DataFrame,
+      rows: DataFrame,
       keyCol: String,
       batchId: Long,
       defaultBuckets: Int,
@@ -188,15 +203,14 @@ private[graft] object StoragePaths {
       spark: SparkSession,
       path: String,
       keyCol: String,
-      keys: org.apache.spark.sql.DataFrame,
-      resultSchema: org.apache.spark.sql.types.StructType,
+      keys: DataFrame,
+      resultSchema: StructType,
       excludeBatchId: Option[Long],
-      semiJoinKeys: Boolean): org.apache.spark.sql.DataFrame = {
+      semiJoinKeys: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.col
     val outCols = resultSchema.fieldNames.toSeq.map(col)
-    def empty = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), resultSchema)
-    def shape(rows: org.apache.spark.sql.DataFrame) = {
+    def empty = emptyOf(spark, resultSchema)
+    def shape(rows: DataFrame) = {
       val excluded = excludeBatchId match {
         case Some(b) => rows.filter(col("batch").cast("long") =!= b)
         case None => rows

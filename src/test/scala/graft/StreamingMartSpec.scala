@@ -85,4 +85,33 @@ class StreamingMartSpec extends SparkSpec {
     assert(pruned.count() == 4)
     assert(pruned.select(min(col("DATE"))).head().getDate(0).toString == "2024-01-04")
   }
+
+  test("a fresh checkpoint over a drained raw store is refused and raw is untouched") {
+    val landing = Files.createTempDirectory("mart-landing")
+    val ckpt = Files.createTempDirectory("mart-ckpt").toString + "/c"
+    val raw = Files.createTempDirectory("mart-raw").toString + "/raw"
+    val mart = Files.createTempDirectory("mart-out").toString + "/int_daily"
+    val const = T.constituents(spark, sf)
+    // bootstrap, then one cycle: raw holds batch=0 and batch=1
+    Files.writeString(landing.resolve("d1.json"),
+      Seq(barJson("S01", "2024-01-02", 10.0),
+        barJson("S01", "2024-01-03", 11.0)).mkString("\n"))
+    IncrementalMartStream.maintainIntDaily(
+      spark, landing.toString, ckpt, raw, mart, const)
+    Files.writeString(landing.resolve("d2.json"),
+      barJson("S01", "2024-01-04", 12.0))
+    IncrementalMartStream.maintainIntDaily(
+      spark, landing.toString, ckpt, raw, mart, const)
+    val rawRows = spark.read.parquet(raw).count()
+    assert(rawRows == 3)
+    // a fresh checkpoint would re-drain both files into raw/batch=0 beside
+    // batch=1, so raw would hold the 01-04 bar twice
+    val ckpt2 = Files.createTempDirectory("mart-ckpt2").toString + "/c"
+    val err = intercept[IllegalArgumentException] {
+      IncrementalMartStream.maintainIntDaily(
+        spark, landing.toString, ckpt2, raw, mart, const)
+    }
+    assert(err.getMessage.contains("fresh checkpoint"), err.getMessage)
+    assert(spark.read.parquet(raw).count() == rawRows)
+  }
 }
