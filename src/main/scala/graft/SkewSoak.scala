@@ -46,14 +46,7 @@ object SkewSoak {
 
   def main(args: Array[String]): Unit = {
     val baseN = if (args.nonEmpty) args(0).toLong else 3000L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-skew-soak")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runner.session()
 
     val ops: Seq[(String, DataFrame => Long)] = Seq(
       ("minhash_pairs", d => Dedup.minhashPairs(d).count()),

@@ -28,8 +28,8 @@ object SparkEntry {
   private val martCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
 
-  private def memo(s: SparkSession, dir: String, key: String)
-      (build: => DataFrame): DataFrame = {
+  private def held(s: SparkSession, dir: String, key: String)
+      (materialize: => DataFrame): DataFrame = {
     // drop entries of stopped sessions: a long-lived JVM that restarts
     // sessions (test suites) must not pin dead sessions' cached plans
     martCache.filterInPlace { case ((sess, _, _), _) =>
@@ -37,27 +37,29 @@ object SparkEntry {
     // TrieMap guards the map structure; prewarmShared's two legs build
     // DISJOINT keys concurrently (getOrElseUpdate is atomic per key), and
     // the per-query fan-out afterwards is read-only
-    martCache.getOrElseUpdate((s, dir, key), {
+    martCache.getOrElseUpdate((s, dir, key), materialize)
+  }
+
+  private def memo(s: SparkSession, dir: String, key: String)
+      (build: => DataFrame): DataFrame =
+    held(s, dir, key) {
       val df = build.persist()
       df.count() // eager: materialize once, before fan-out
       df
-    })
-  }
+    }
 
-  /** [[memo]] + plan flattening for the k-rows/query-sized ANN search
-    * results: their LOGICAL plans are enormous (codebook literal arrays,
-    * a window, a cross join), and every consumer action re-analyzes and
-    * cache-matches that tree — measured ~0.4 s of driver time per action
-    * on the ADC relation, ~1 s per recall-gate run. `localCheckpoint`
-    * cuts the plan to a flat LogicalRDD whose lookups are O(1)-ish; the
-    * blocks are result-sized. GRAFT_PLAN_LAZY (PlanDump only) keeps the
-    * full plan so committed evidence shows the real search shape.
+  /** [[memo]]'s lifetime with plan flattening instead of a cache, for the
+    * k-rows/query-sized ANN search results: their LOGICAL plans are
+    * enormous (codebook literal arrays, a window, a cross join), and every
+    * consumer action re-analyzes and cache-matches that tree — measured
+    * ~0.4 s of driver time per action on the ADC relation, ~1 s per
+    * recall-gate run. The eager `localCheckpoint` cuts the plan to a flat
+    * LogicalRDD whose lookups are O(1)-ish and already holds its
+    * result-sized blocks, so the relation is held once, not cached again.
     */
   private def memoFlat(s: SparkSession, dir: String, key: String)
       (build: => DataFrame): DataFrame =
-    memo(s, dir, key)(
-      if (sys.env.contains("GRAFT_PLAN_LAZY")) build
-      else build.localCheckpoint())
+    held(s, dir, key)(build.localCheckpoint())
 
   private def intDaily(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "int")(
@@ -94,11 +96,11 @@ object SparkEntry {
     * pipeline, the n-gram Jaccard row and the split-contamination row
     * (r15 tokenized the corpus once per consumer: 4 passes per battery).
     * Unlike the bounded model tables this relation is CORPUS-SIZED, so
-    * it gets a BOUNDED lifetime: the battery's last consumer in sorted
-    * bench order (`split_contamination`) frees it explicitly after its
-    * own result materializes ([[freeMemo]]) — the free-what-you-allocate
-    * discipline the operators keep internally. A fetch after the free
-    * simply rebuilds.
+    * it gets a BOUNDED lifetime: the battery's last consumer in the
+    * runner's sorted pass ([[Runner.pass]]), `split_contamination`, frees
+    * it explicitly after its own result materializes ([[freeMemo]]) — the
+    * free-what-you-allocate discipline the operators keep internally. A
+    * fetch after the free simply rebuilds.
     */
   private def docShingles(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "docshingles")(
@@ -226,9 +228,10 @@ object SparkEntry {
   /** The exact cosine top-k ground truth — shared by its own checked
     * query (`sim_brute_topk`) and the PQ recall gate
     * (`sim_pq_recall_err`), which grades approximate search against it.
-    * Memoized NOT prewarmed: the battery runs queries in sorted-name
-    * order, so the quadratic exact search is charged to `sim_brute_topk`
-    * (the query that IS that search) and the gate reads the cache.
+    * Memoized NOT prewarmed: [[Runner.pass]] runs the battery in
+    * sorted-name order, so the quadratic exact search is charged to
+    * `sim_brute_topk` (the query that IS that search) and the gate reads
+    * the held relation.
     */
   private def bruteTopK(s: SparkSession, dir: String): DataFrame =
     memoFlat(s, dir, "brutetopk")(
@@ -800,7 +803,7 @@ object SparkEntry {
     "split_contamination" -> ((s, dir) => {
       // contaminatedTrainDocsFrom materializes eagerly, so the shared
       // shingle relation can be freed here — this row is the relation's
-      // LAST consumer in sorted bench order (bounded lifetime)
+      // LAST consumer in Runner.pass's sorted order (bounded lifetime)
       val out = HashSplit.contaminatedTrainDocsFrom(
         T.table(s, dir, "documents"), docShingles(s, dir))
       freeMemo(s, dir, "docshingles")

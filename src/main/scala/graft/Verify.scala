@@ -1,42 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Usage: `Verify <sfDir> <outDir> [name ...]`. Trailing names restrict the
+  * dump to those rows (a dev aid; the driver passes none and dumps the full
+  * battery). A row that throws is reported on stderr; the dump goes on and
+  * exits 0.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [name ...]")
+    val Array(sfDir, outDir) = args.take(2)
+    val names = Option(args.drop(2).toSeq).filter(_.nonEmpty)
+    val spark = Runner.session()
     new java.io.File(outDir).mkdirs()
-    // dev-only subset filter (comma-separated names); the driver sets no
-    // env and always dumps the full battery
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      // a typo'd or empty filter silently dumping nothing would let a
-      // stale outDir pass for a fresh run — fail loudly instead
-      val unknown = names -- SparkEntry.queries.keySet
-      require(names.nonEmpty && unknown.isEmpty,
-        s"SPARK_GRAFT_QUERIES selects no known queries (unknown: " +
-          s"${unknown.mkString(",")})")
-    }
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    Runner.failures("verify", Runner.pass(spark, sfDir, names) { (name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    })
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

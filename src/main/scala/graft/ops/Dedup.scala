@@ -187,18 +187,11 @@ object Dedup {
     * ContextCleaner frees THOSE automatically once the returned frame is
     * unreachable — so the operator leaks nothing it allocated.
     */
-  private[ops] def materializeFreeing(result: DataFrame, legs: DataFrame*): DataFrame =
-    // GRAFT_PLAN_LAZY (PlanDump only): return the UN-checkpointed plan so
-    // committed plan evidence shows the real operator shape instead of an
-    // 8-line `Scan ExistingRDD` stub (r15 judge finding #5). The legs stay
-    // persisted — the lazy result still reads them — so this mode leaks by
-    // design and must never be set for a real run.
-    if (sys.env.contains("GRAFT_PLAN_LAZY")) result
-    else {
-      val out = result.localCheckpoint() // eager
-      legs.foreach(_.unpersist(blocking = false))
-      out
-    }
+  private[ops] def materializeFreeing(result: DataFrame, legs: DataFrame*): DataFrame = {
+    val out = result.localCheckpoint() // eager
+    legs.foreach(_.unpersist(blocking = false))
+    out
+  }
 
   /** The `key` values of `rel` with more than `maxDf` rows — the
     * boilerplate set a df cap drops. Spelled as a partially-aggregated

@@ -177,4 +177,14 @@ class SharedSeamSpec extends SparkSpec {
     assertSame(Multimodal.decodeFeaturesFrom(spark, m).toDF(),
       Multimodal.decodeFeatures(spark, docs).toDF())
   }
+
+  test("a memoFlat relation is held once: its checkpoint is not cached again") {
+    // the eager localCheckpoint already holds the search result's blocks;
+    // a cache over it would hold the same rows a second time
+    val held = SparkEntry.queries("sim_brute_topk")(spark, sf)
+    val plan = held.select("*").queryExecution.optimizedPlan
+    assert(plan.find(_.isInstanceOf[
+      org.apache.spark.sql.execution.columnar.InMemoryRelation]).isEmpty,
+      plan.treeString)
+  }
 }

@@ -10,7 +10,9 @@ entries are recovered by regex, so such a round may be missing its first
 few queries (rendered as "-").
 """
 import json
+import os
 import re
+import subprocess
 import sys
 
 PAIR = re.compile(r'"([a-z0-9_]+)":([0-9]+\.[0-9]+)')
@@ -47,6 +49,41 @@ def load_ab(path):
         return None
 
 
+# what the bench executes: engine sources and the build that compiles them
+ENGINE = [":/src/main", ":/build.sbt", ":/project"]
+
+
+def git(cwd, *args):
+    try:
+        p = subprocess.run(["git", *args], cwd=cwd, capture_output=True,
+                           text=True)
+    except OSError:
+        return None
+    return p.stdout.strip() if p.returncode == 0 else None
+
+
+def ab_staleness(path, ab):
+    """Whether the A/B pair still measures the code of the artifact that
+    carries it: "current", "stale" (engine or build code changed between the
+    pair's cur_ref and the artifact's commit) or "unverified" (either ref
+    does not resolve). The artifact's commit is the last commit that wrote
+    it, or HEAD while it is uncommitted or modified."""
+    path = os.path.abspath(path)
+    cwd = os.path.dirname(path)
+    art = None
+    if git(cwd, "status", "--porcelain", "--", path) == "":
+        art = git(cwd, "log", "-1", "--format=%H", "--", path) or None
+    art = git(cwd, "rev-parse", "--verify", "-q", (art or "HEAD") + "^{commit}")
+    cur = git(cwd, "rev-parse", "--verify", "-q",
+              str(ab.get("cur_ref", "")) + "^{commit}")
+    if not art or not cur:
+        return "unverified"
+    changed = git(cwd, "diff", "--name-only", cur, art, "--", *ENGINE)
+    if changed is None:
+        return "unverified"
+    return "stale" if changed else "current"
+
+
 def main():
     paths = sys.argv[1:]
     rounds = [(re.sub(r".*BENCH_|.*bench_|.*/|\.json|_local", "", p) or p,
@@ -67,11 +104,19 @@ def main():
     for path in paths:
         ab = load_ab(path)
         if ab:
+            state = ab_staleness(path, ab)
+            trust = {
+                "current": "trust this ratio over the raw cross-host columns",
+                "stale": "STALE: engine or build code changed since "
+                         f"{ab['cur_ref']}, so the ratio does not measure "
+                         "this artifact's code",
+                "unverified": "unverified: the pair's ref or the artifact's "
+                              "commit does not resolve here",
+            }[state]
             print(f"(same-host Δ in {path}: {ab['cur_ref']} = "
                   f"{ab['same_host_ratio']:.2f}× of {ab['prev_ref']} — "
                   f"best {ab['cur_best']:.1f}s vs {ab['prev_best']:.1f}s, "
-                  f"interleaved on one host; trust this ratio over the "
-                  f"raw cross-host columns)")
+                  f"interleaved on one host; {trust})")
 
 
 if __name__ == "__main__":
