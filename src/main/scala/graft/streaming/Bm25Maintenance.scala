@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 import graft.streaming.FamilyMaintenance.{Carry, StoreSpec}
 
 /** The compaction loop for [[IncrementalBm25]]'s accumulating index
@@ -17,92 +15,23 @@ import graft.streaming.FamilyMaintenance.{Carry, StoreSpec}
   * sum ([[FamilyMaintenance.Carry.Fold]] — the additive store's
   * lossless carry, verified by exact integer equality of
   * `(n_docs, sum_dl)`, which also resets the per-read fold to O(1)).
-  * The carry list is pinned against [[IncrementalBm25.storePaths]].
+  * The posting store is measured first: at ~one posting dir per drained
+  * batch × buckets, the default trips once the store's listing cost —
+  * not its data — dominates a probe. Bucket re-sizing keeps per-query
+  * posting I/O bounded by the probed terms' document frequency instead
+  * of total corpus bulk.
   *
   * A compacted generation is a complete [[IncrementalBm25]] root at
   * `batch=-1`, and `run` REFUSES a fresh checkpoint while `batch>=0`
   * directories remain — one fresh era per compaction.
   */
-object Bm25Maintenance {
-
-  /** Compact when the posting store holds more files than this. At ~one
-    * posting dir per drained batch × buckets, the default trips after the
-    * store's listing cost — not its data — dominates a probe.
-    */
-  val DefaultMaxFiles = 512L
-
-  /** Target bytes per bucket after compaction — the unit a probe reads.
-    * [[maintain]] grows a store's bucket count to hold this line, which
-    * is what keeps per-query posting I/O bounded by the probed terms'
-    * document frequency instead of total corpus bulk: a frozen bucket
-    * count over a 100× corpus means every probe reads 100× more
-    * off-vocabulary postings, however healthy the file count looks.
-    */
-  val TargetBucketBytes: Long = 64L << 20
-
-  final case class Report(
-      postingFiles: Long,
-      postingBytes: Long,
-      compacted: Boolean,
-      generation: Option[String])
-
-  private val family = FamilyMaintenance.Family(
-    what = "Bm25Maintenance",
-    measureStore = "postings",
-    stores = Seq(
-      StoreSpec("postings", IncrementalBm25.postingsPath _,
-        Carry.Rows(Some("term"), IncrementalBm25.NumBuckets)),
-      StoreSpec("stats", IncrementalBm25.statsPath _,
-        Carry.Fold(Nil, Seq("n_docs", "sum_dl"))),
-      StoreSpec("decided", IncrementalBm25.decidedPath _,
-        Carry.Rows(Some("doc_id"), IncrementalBm25.NumBuckets))),
-    pinStorePaths = Some(IncrementalBm25.storePaths _))
-
-  /** The live generation's path — a full [[IncrementalBm25]] root. */
-  def currentRoot(spark: SparkSession, genRoot: String): String =
-    FamilyMaintenance.currentRoot(spark, genRoot)
-
-  /** Adopt a flat [[IncrementalBm25]] root into the generation layout,
-    * publishing generation 0 atomically.
-    */
-  def adopt(
-      spark: SparkSession,
-      genRoot: String,
-      flatRoot: String,
-      numFiles: Int = 1): String =
-    FamilyMaintenance.adopt(spark, family, genRoot, flatRoot, numFiles)
-
-  /** Rewrite the LIVE generation into the next one and atomically repoint
-    * readers. A crash anywhere before the final pointer write leaves
-    * readers on the old generation; the retry takes a fresh generation
-    * number. `postingBuckets` / `idBuckets` re-size the bucket counts on
-    * the way through (the grown-store path); None carries the source
-    * counts.
-    */
-  def compact(
-      spark: SparkSession,
-      genRoot: String,
-      numFiles: Int = 1,
-      postingBuckets: Option[Int] = None,
-      idBuckets: Option[Int] = None): String =
-    FamilyMaintenance.compact(spark, family, genRoot, numFiles,
-      postingBuckets.map("postings" -> _).toMap ++
-        idBuckets.map("decided" -> _).toMap)
-
-  /** Measure-then-act: list the live generation's posting store and
-    * compact iff its file count passed `maxFiles`. Below threshold the
-    * cost is the listing alone — no reads, no writes. A triggered
-    * compaction RE-SIZES every bucketed store from its measured bytes
-    * (never shrinking below the source markers).
-    */
-  def maintain(
-      spark: SparkSession,
-      genRoot: String,
-      maxFiles: Long = DefaultMaxFiles,
-      numFiles: Int = 1,
-      targetBucketBytes: Long = TargetBucketBytes): Report = {
-    val r = FamilyMaintenance.maintain(
-      spark, family, genRoot, maxFiles, numFiles, targetBucketBytes)
-    Report(r.files, r.bytes, r.compacted, r.generation)
-  }
-}
+object Bm25Maintenance extends FamilyMaintenance.Facts(
+  "Bm25Maintenance",
+  Seq(
+    StoreSpec("postings", IncrementalBm25.postingsPath _,
+      Carry.Rows(Some("term"), IncrementalBm25.NumBuckets)),
+    StoreSpec("stats", IncrementalBm25.statsPath _,
+      Carry.Fold(Nil, Seq("n_docs", "sum_dl"))),
+    StoreSpec("decided", IncrementalBm25.decidedPath _,
+      Carry.Rows(Some("doc_id"), IncrementalBm25.NumBuckets))),
+  IncrementalBm25.storePaths _)

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 import graft.streaming.FamilyMaintenance.{Carry, StoreSpec}
 
 /** The compaction loop for [[IncrementalBoilerplate]]'s accumulating
@@ -14,9 +12,10 @@ import graft.streaming.FamilyMaintenance.{Carry, StoreSpec}
   * `df_docs`, land one row per distinct chunk ever seen — lossless by
   * counter additivity, verified by exact total equality, and it RESETS
   * the per-probe fold cost (a bucket holds one row per digest instead
-  * of one per digest × touching batch). The corpus, its doc-id sidecar,
-  * and the yield ledger carry row-preserving; the carry list is pinned
-  * against [[IncrementalBoilerplate.storePaths]].
+  * of one per digest × touching batch). Adopt folds the deltas on the
+  * way in. The corpus, its doc-id sidecar, and the yield ledger carry
+  * row-preserving; the carry list is pinned against
+  * [[IncrementalBoilerplate.storePaths]].
   *
   * Folding cannot change any verdict: an occurrence's keep decision is
   * `prior_df + batch_df < minDf`, and prior_df is the same sum whether
@@ -30,82 +29,18 @@ import graft.streaming.FamilyMaintenance.{Carry, StoreSpec}
   * REFUSES a fresh checkpoint while `batch>=0` directories remain —
   * one fresh era per compaction.
   */
-object BoilerplateMaintenance {
-
-  /** Compact when the df store holds more files than this. */
-  val DefaultMaxFiles = 512L
-
-  /** Target bytes per bucket after compaction — the unit a df probe
-    * reads.
-    */
-  val TargetBucketBytes: Long = 64L << 20
-
-  final case class Report(
-      dfFiles: Long,
-      dfBytes: Long,
-      compacted: Boolean,
-      generation: Option[String])
-
-  private val family = FamilyMaintenance.Family(
-    what = "BoilerplateMaintenance",
-    measureStore = "df",
-    stores = Seq(
-      StoreSpec("df", IncrementalBoilerplate.dfPathOf _,
-        Carry.Fold(Seq("chunk_hash", "chunk_hash2"), Seq("df_docs"),
-          Some("chunk_hash"), IncrementalBoilerplate.NumDfBuckets)),
-      StoreSpec("corpus", IncrementalBoilerplate.corpusPathOf _,
-        Carry.Rows()),
-      StoreSpec("ids",
-        (root: String) => IncrementalChunkDedup.docIdIndexPath(
-          IncrementalBoilerplate.corpusPathOf(root)),
-        Carry.Rows(Some("doc_id"), IncrementalBoilerplate.NumDfBuckets)),
-      StoreSpec("metrics", IncrementalBoilerplate.metricsPathOf _,
-        Carry.Rows(), optional = true)),
-    pinStorePaths = Some(IncrementalBoilerplate.storePaths _))
-
-  /** The live generation's path — a full [[IncrementalBoilerplate]]
-    * family root for [[IncrementalBoilerplate.runRoot]].
-    */
-  def currentRoot(spark: SparkSession, genRoot: String): String =
-    FamilyMaintenance.currentRoot(spark, genRoot)
-
-  /** Adopt a flat [[IncrementalBoilerplate]] family root into the
-    * generation layout, publishing generation 0 atomically (and folding
-    * the df deltas on the way in).
-    */
-  def adopt(
-      spark: SparkSession,
-      genRoot: String,
-      flatRoot: String,
-      numFiles: Int = 1): String =
-    FamilyMaintenance.adopt(spark, family, genRoot, flatRoot, numFiles)
-
-  /** Rewrite the LIVE generation into the next one and atomically
-    * repoint readers. `dfBuckets` / `idBuckets` re-size the bucket
-    * counts on the way through; None carries the source counts.
-    */
-  def compact(
-      spark: SparkSession,
-      genRoot: String,
-      numFiles: Int = 1,
-      dfBuckets: Option[Int] = None,
-      idBuckets: Option[Int] = None): String =
-    FamilyMaintenance.compact(spark, family, genRoot, numFiles,
-      dfBuckets.map("df" -> _).toMap ++ idBuckets.map("ids" -> _).toMap)
-
-  /** Measure-then-act: list the live generation's df store and compact
-    * iff its file count passed `maxFiles`. A triggered compaction
-    * re-sizes every bucketed store from its measured bytes (never
-    * shrinking below the source markers).
-    */
-  def maintain(
-      spark: SparkSession,
-      genRoot: String,
-      maxFiles: Long = DefaultMaxFiles,
-      numFiles: Int = 1,
-      targetBucketBytes: Long = TargetBucketBytes): Report = {
-    val r = FamilyMaintenance.maintain(
-      spark, family, genRoot, maxFiles, numFiles, targetBucketBytes)
-    Report(r.files, r.bytes, r.compacted, r.generation)
-  }
-}
+object BoilerplateMaintenance extends FamilyMaintenance.Facts(
+  "BoilerplateMaintenance",
+  Seq(
+    StoreSpec("df", IncrementalBoilerplate.dfPathOf _,
+      Carry.Fold(Seq("chunk_hash", "chunk_hash2"), Seq("df_docs"),
+        Some("chunk_hash"), IncrementalBoilerplate.NumDfBuckets)),
+    StoreSpec("corpus", IncrementalBoilerplate.corpusPathOf _,
+      Carry.Rows()),
+    StoreSpec("ids",
+      (root: String) => IncrementalChunkDedup.docIdIndexPath(
+        IncrementalBoilerplate.corpusPathOf(root)),
+      Carry.Rows(Some("doc_id"), IncrementalBoilerplate.NumDfBuckets)),
+    StoreSpec("metrics", IncrementalBoilerplate.metricsPathOf _,
+      Carry.Rows(), optional = true)),
+  IncrementalBoilerplate.storePaths _)

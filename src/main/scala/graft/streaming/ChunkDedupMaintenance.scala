@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 import graft.streaming.FamilyMaintenance.{Carry, StoreSpec}
 
 /** The compaction loop for [[IncrementalChunkDedup]]'s accumulating
@@ -24,80 +22,16 @@ import graft.streaming.FamilyMaintenance.{Carry, StoreSpec}
   * a fresh checkpoint while `batch>=0` directories remain — one fresh
   * era per compaction.
   */
-object ChunkDedupMaintenance {
-
-  /** Compact when the chunk store holds more files than this. */
-  val DefaultMaxFiles = 512L
-
-  /** Target bytes per bucket after compaction — the unit a membership
-    * probe reads.
-    */
-  val TargetBucketBytes: Long = 64L << 20
-
-  final case class Report(
-      chunkFiles: Long,
-      chunkBytes: Long,
-      compacted: Boolean,
-      generation: Option[String])
-
-  private val family = FamilyMaintenance.Family(
-    what = "ChunkDedupMaintenance",
-    measureStore = "chunks",
-    stores = Seq(
-      StoreSpec("chunks", IncrementalChunkDedup.chunkPathOf _,
-        Carry.Rows(Some("chunk_hash"), IncrementalChunkDedup.NumChunkBuckets)),
-      StoreSpec("corpus", IncrementalChunkDedup.corpusPathOf _, Carry.Rows()),
-      StoreSpec("ids",
-        (root: String) => IncrementalChunkDedup.docIdIndexPath(
-          IncrementalChunkDedup.corpusPathOf(root)),
-        Carry.Rows(Some("doc_id"), IncrementalChunkDedup.NumChunkBuckets)),
-      StoreSpec("metrics", IncrementalChunkDedup.metricsPathOf _,
-        Carry.Rows(), optional = true)),
-    pinStorePaths = Some(IncrementalChunkDedup.storePaths _))
-
-  /** The live generation's path — a full [[IncrementalChunkDedup]]
-    * family root for [[IncrementalChunkDedup.runRoot]].
-    */
-  def currentRoot(spark: SparkSession, genRoot: String): String =
-    FamilyMaintenance.currentRoot(spark, genRoot)
-
-  /** Adopt a flat [[IncrementalChunkDedup]] family root into the
-    * generation layout, publishing generation 0 atomically.
-    */
-  def adopt(
-      spark: SparkSession,
-      genRoot: String,
-      flatRoot: String,
-      numFiles: Int = 1): String =
-    FamilyMaintenance.adopt(spark, family, genRoot, flatRoot, numFiles)
-
-  /** Rewrite the LIVE generation into the next one and atomically
-    * repoint readers. `chunkBuckets` / `idBuckets` re-size the bucket
-    * counts on the way through; None carries the source counts.
-    */
-  def compact(
-      spark: SparkSession,
-      genRoot: String,
-      numFiles: Int = 1,
-      chunkBuckets: Option[Int] = None,
-      idBuckets: Option[Int] = None): String =
-    FamilyMaintenance.compact(spark, family, genRoot, numFiles,
-      chunkBuckets.map("chunks" -> _).toMap ++
-        idBuckets.map("ids" -> _).toMap)
-
-  /** Measure-then-act: list the live generation's chunk store and
-    * compact iff its file count passed `maxFiles`. A triggered
-    * compaction re-sizes every bucketed store from its measured bytes
-    * (never shrinking below the source markers).
-    */
-  def maintain(
-      spark: SparkSession,
-      genRoot: String,
-      maxFiles: Long = DefaultMaxFiles,
-      numFiles: Int = 1,
-      targetBucketBytes: Long = TargetBucketBytes): Report = {
-    val r = FamilyMaintenance.maintain(
-      spark, family, genRoot, maxFiles, numFiles, targetBucketBytes)
-    Report(r.files, r.bytes, r.compacted, r.generation)
-  }
-}
+object ChunkDedupMaintenance extends FamilyMaintenance.Facts(
+  "ChunkDedupMaintenance",
+  Seq(
+    StoreSpec("chunks", IncrementalChunkDedup.chunkPathOf _,
+      Carry.Rows(Some("chunk_hash"), IncrementalChunkDedup.NumChunkBuckets)),
+    StoreSpec("corpus", IncrementalChunkDedup.corpusPathOf _, Carry.Rows()),
+    StoreSpec("ids",
+      (root: String) => IncrementalChunkDedup.docIdIndexPath(
+        IncrementalChunkDedup.corpusPathOf(root)),
+      Carry.Rows(Some("doc_id"), IncrementalChunkDedup.NumChunkBuckets)),
+    StoreSpec("metrics", IncrementalChunkDedup.metricsPathOf _,
+      Carry.Rows(), optional = true)),
+  IncrementalChunkDedup.storePaths _)

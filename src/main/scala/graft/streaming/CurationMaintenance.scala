@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 import graft.streaming.FamilyMaintenance.{Carry, StoreSpec}
 
 /** The compaction loop for [[IncrementalCuration]]'s accumulating
@@ -26,102 +24,36 @@ import graft.streaming.FamilyMaintenance.{Carry, StoreSpec}
   * landed first) — where a carried copy could silently drift from a
   * carried store. Its `bucketMarker` opts it into the engine's
   * byte-driven re-sizing, so BOTH bucket families grow from their own
-  * measured bytes.
+  * measured bytes (signature buckets for membership and the estimate
+  * leg, band buckets for the LSH join's reference side). Adopt is also
+  * the migration path for a legacy store without a band sidecar: the
+  * custom carry gives the adopted generation one.
   *
   * A compacted generation is a complete [[IncrementalCuration]] family
   * root at `batch=-1` (including the rebuilt sidecar), and
   * [[IncrementalCuration.run]] REFUSES a fresh checkpoint while
   * `batch>=0` directories remain — one fresh era per compaction.
   */
-object CurationMaintenance {
-
-  /** Compact when the signature store holds more files than this. */
-  val DefaultMaxFiles = 512L
-
-  /** Target bytes per bucket after compaction — the unit a probe reads
-    * (signature buckets for membership and the estimate leg, band
-    * buckets for the LSH join's reference side).
-    */
-  val TargetBucketBytes: Long = 64L << 20
-
-  final case class Report(
-      sigFiles: Long,
-      sigBytes: Long,
-      compacted: Boolean,
-      generation: Option[String])
-
-  private val family = FamilyMaintenance.Family(
-    what = "CurationMaintenance",
-    measureStore = "sigs",
-    stores = Seq(
-      StoreSpec("sigs", IncrementalCuration.sigPathOf _,
-        Carry.Rows(Some("doc_id"), IncrementalCuration.NumSigIdBuckets)),
-      StoreSpec("bands",
-        (root: String) => IncrementalCuration.bandIndexPath(
-          IncrementalCuration.sigPathOf(root)),
-        Carry.Custom(
-          (spark, _, dest, _, buckets) =>
-            // dest sig path is the sibling the `.bands` suffix names
-            // (the bandIndexPath convention); the rebuild reads IT, not
-            // the source sidecar — which may not even exist (legacy
-            // migration through adopt)
-            IncrementalCuration.rebuildBandIndex(spark,
-              dest.stripSuffix(".bands"),
-              buckets.getOrElse(IncrementalCuration.NumBandBuckets)),
-          bucketMarker = Some(IncrementalCuration.BandBucketsMarker),
-          defaultBuckets = IncrementalCuration.NumBandBuckets)),
-      StoreSpec("corpus", IncrementalCuration.corpusPathOf _, Carry.Rows()),
-      StoreSpec("metrics", IncrementalCuration.metricsPathOf _,
-        Carry.Rows(), optional = true)),
-    pinStorePaths = Some(IncrementalCuration.storePaths _))
-
-  /** The live generation's path — a full [[IncrementalCuration]] family
-    * root for [[IncrementalCuration.runRoot]].
-    */
-  def currentRoot(spark: SparkSession, genRoot: String): String =
-    FamilyMaintenance.currentRoot(spark, genRoot)
-
-  /** Adopt a flat [[IncrementalCuration]] family root into the
-    * generation layout, publishing generation 0 atomically. Also the
-    * migration path for a legacy store without a band sidecar: the
-    * custom carry gives the adopted generation one.
-    */
-  def adopt(
-      spark: SparkSession,
-      genRoot: String,
-      flatRoot: String,
-      numFiles: Int = 1): String =
-    FamilyMaintenance.adopt(spark, family, genRoot, flatRoot, numFiles)
-
-  /** Rewrite the LIVE generation into the next one and atomically
-    * repoint readers. `sigBuckets` / `bandBuckets` re-size the two
-    * bucket families on the way through; None carries the source
-    * counts.
-    */
-  def compact(
-      spark: SparkSession,
-      genRoot: String,
-      numFiles: Int = 1,
-      sigBuckets: Option[Int] = None,
-      bandBuckets: Option[Int] = None): String =
-    FamilyMaintenance.compact(spark, family, genRoot, numFiles,
-      sigBuckets.map("sigs" -> _).toMap ++
-        bandBuckets.map("bands" -> _).toMap)
-
-  /** Measure-then-act: list the live generation's signature store and
-    * compact iff its file count passed `maxFiles`. A triggered
-    * compaction re-sizes BOTH bucket families from their own measured
-    * bytes (never shrinking below the source markers), so each probe's
-    * unit of I/O holds the `targetBucketBytes` line independently.
-    */
-  def maintain(
-      spark: SparkSession,
-      genRoot: String,
-      maxFiles: Long = DefaultMaxFiles,
-      numFiles: Int = 1,
-      targetBucketBytes: Long = TargetBucketBytes): Report = {
-    val r = FamilyMaintenance.maintain(
-      spark, family, genRoot, maxFiles, numFiles, targetBucketBytes)
-    Report(r.files, r.bytes, r.compacted, r.generation)
-  }
-}
+object CurationMaintenance extends FamilyMaintenance.Facts(
+  "CurationMaintenance",
+  Seq(
+    StoreSpec("sigs", IncrementalCuration.sigPathOf _,
+      Carry.Rows(Some("doc_id"), IncrementalCuration.NumSigIdBuckets)),
+    StoreSpec("bands",
+      (root: String) => IncrementalCuration.bandIndexPath(
+        IncrementalCuration.sigPathOf(root)),
+      Carry.Custom(
+        (spark, _, dest, _, buckets) =>
+          // dest sig path is the sibling the `.bands` suffix names (the
+          // bandIndexPath convention); the rebuild reads IT, not the
+          // source sidecar — which may not even exist (legacy migration
+          // through adopt)
+          IncrementalCuration.rebuildBandIndex(spark,
+            dest.stripSuffix(".bands"),
+            buckets.getOrElse(IncrementalCuration.NumBandBuckets)),
+        bucketMarker = Some(IncrementalCuration.BandBucketsMarker),
+        defaultBuckets = IncrementalCuration.NumBandBuckets)),
+    StoreSpec("corpus", IncrementalCuration.corpusPathOf _, Carry.Rows()),
+    StoreSpec("metrics", IncrementalCuration.metricsPathOf _,
+      Carry.Rows(), optional = true)),
+  IncrementalCuration.storePaths _)

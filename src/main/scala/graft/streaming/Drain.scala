@@ -16,9 +16,10 @@ import org.apache.spark.sql.streaming.Trigger
   *     the previous era left in the family's stores. A drain under a
   *     fresh checkpoint is refused while any guarded store still holds
   *     one ([[StoragePaths.hasEpochDirs]]); re-entry is via the family's
-  *     maintenance carry, which folds history to `batch=-1`
-  *     ([[StoreMaintenance.CompactedBatch]]) — one fresh era per
-  *     compaction. A genuine crash-replay keeps its checkpoint and passes.
+  *     [[FamilyMaintenance]] carry, which folds history to `batch=-1`
+  *     ([[StoreMaintenance.CompactedBatch]]) in a new generation — one
+  *     fresh era per generation. A genuine crash-replay keeps its
+  *     checkpoint and passes.
   *  2. the STREAM PLUMBING: checkpoint location, `foreachBatch`, the
   *     empty-batch skip, `Trigger.AvailableNow` (drain what has landed,
   *     then stop — the scheduled-run shape) and the blocking wait.

@@ -4,10 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Dsir
-import graft.streaming.DriftMaintenance.{Kind, Outcome, Store}
+import graft.streaming.FamilyMaintenance.{Carry, Outcome, StoreSpec}
 
 /** The recalibration loop for [[IncrementalDsir]]'s frozen ratio table —
-  * the [[DriftMaintenance]] engine instantiated for importance weighting:
+  * the [[FamilyMaintenance]] engine instantiated for importance weighting:
   * the table freezes the (target, raw) estimate at bootstrap, so a crawl
   * whose RAW distribution drifts is scored against statistics that no
   * longer describe it — the achieved selection fraction slides away from
@@ -26,7 +26,15 @@ import graft.streaming.DriftMaintenance.{Kind, Outcome, Store}
   * checkpoint; [[IncrementalDsir.run]]'s bootstrap guard sees the ratio
   * store and adopts it.
   */
-object DsirMaintenance {
+object DsirMaintenance extends FamilyMaintenance(
+  "DsirMaintenance",
+  Seq(
+    // the frozen table is the model, the ledger and selected stream are
+    // history (pinned against the writer's storePaths)
+    StoreSpec("ratio", IncrementalDsir.ratioPath _, Carry.Model),
+    StoreSpec("ledger", IncrementalDsir.ledgerPath _, Carry.Rows()),
+    StoreSpec("selected", IncrementalDsir.selectedPath _, Carry.Rows())),
+  Some(IncrementalDsir.storePaths _)) {
 
   /** Retrain when the achieved selection fraction under the frozen table
     * differs from the candidate table's by more than this (absolute).
@@ -38,40 +46,6 @@ object DsirMaintenance {
       candidateFraction: Double,
       retrained: Boolean,
       generation: Option[String])
-
-  /** The live generation's path — a full [[IncrementalDsir]] root. */
-  def currentRoot(spark: SparkSession, genRoot: String): String =
-    DriftMaintenance.currentRoot(spark, genRoot)
-
-  /** The engine description: the frozen table is the model, the ledger
-    * and selected stream are history (pinned against the writer's
-    * `storePaths`); the measurement rides along as the retained value.
-    */
-  private val base = DriftMaintenance.Family[(Double, Double, DataFrame)](
-    what = "DsirMaintenance",
-    stores = Seq(
-      Store("ratio", IncrementalDsir.ratioPath _, Kind.Model),
-      Store("ledger", IncrementalDsir.ledgerPath _, Kind.History()),
-      Store("selected", IncrementalDsir.selectedPath _, Kind.History())),
-    counterfactual = (_, _) => throw new IllegalStateException(
-      "DsirMaintenance: direct retrain carries no counterfactual"),
-    retrainInto = (_, m, _, dest, _) => {
-      require(!m._3.isEmpty,
-        "DsirMaintenance.retrain: the current corpus produced an empty " +
-          "ratio table — nothing to recalibrate against")
-      IncrementalDsir.writeRatioTable(m._3, IncrementalDsir.ratioPath(dest))
-    },
-    pinStorePaths = Some(IncrementalDsir.storePaths _))
-
-  /** Adopt a flat [[IncrementalDsir]] root into the generation layout,
-    * publishing generation 0 atomically.
-    */
-  def adopt(
-      spark: SparkSession,
-      genRoot: String,
-      flatRoot: String,
-      numFiles: Int = 1): String =
-    DriftMaintenance.adopt(spark, base, genRoot, flatRoot, numFiles)
 
   /** The achieved selection fraction of `docs` under an explicit ratio
     * table — one aggregate over the shared scoring path, no global rank.
@@ -108,8 +82,12 @@ object DsirMaintenance {
       genRoot: String,
       lr: DataFrame,
       numFiles: Int = 1): String =
-    DriftMaintenance.retrainWith(spark, base, genRoot,
-      (Double.NaN, Double.NaN, lr), numFiles)
+    rewrite(spark, genRoot, numFiles, Set("ratio")) { (_, dest) =>
+      require(!lr.isEmpty,
+        "DsirMaintenance.retrain: the current corpus produced an empty " +
+          "ratio table — nothing to recalibrate against")
+      IncrementalDsir.writeRatioTable(lr, IncrementalDsir.ratioPath(dest))
+    }
 
   /** Measure-then-act: read the live generation's frozen table, score
     * `docs` under it and under the candidate, retrain iff the achieved
@@ -122,7 +100,7 @@ object DsirMaintenance {
       docs: DataFrame,
       threshold: Double = DefaultFractionDriftThreshold,
       numFiles: Int = 1): Report = {
-    val fam = base.copy(counterfactual = (spark, cur) => {
+    val ((fFrozen, fCand, _), gen) = whenDrifted(spark, genRoot) { cur =>
       val frozen = IncrementalDsir.readRatioTable(
         spark, IncrementalDsir.ratioPath(cur))
       val fFrozen = achievedFraction(docs, frozen)
@@ -132,8 +110,7 @@ object DsirMaintenance {
       val cand = Dsir.ratioTable(Dsir.featureCounts(docs)).localCheckpoint()
       val fCand = achievedFraction(docs, cand)
       Outcome(math.abs(fFrozen - fCand) > threshold, (fFrozen, fCand, cand))
-    })
-    val (m, gen) = DriftMaintenance.maintain(spark, fam, genRoot, numFiles)
-    Report(m._1, m._2, gen.isDefined, gen)
+    } { case (_, _, cand) => retrainWith(spark, genRoot, cand, numFiles) }
+    Report(fFrozen, fCand, gen.isDefined, gen)
   }
 }

@@ -53,13 +53,14 @@ import graft.ops.{Dedup, Similarity}
   * directories, so a replay of batch N re-reads the pre-N head), and all
   * writes are per-batch overwrites.
   *
-  * Resuming under a FRESH checkpoint (epoch ids restart at 0) requires
-  * [[StoreMaintenance.reenterSuperseded]] on the heads store first — it
-  * carries the newest head to `batch=-1` so the new era's generations
-  * supersede it; without the re-entry the new era's low batch ids sort
-  * under the old era's and the head silently freezes. The accumulating
-  * stores (lists / decided / ledger) follow the ordinary
-  * [[StoreMaintenance.compact]] re-entry convention.
+  * Resuming under a FRESH checkpoint (epoch ids restart at 0) goes
+  * through [[SemDedupMaintenance]]'s carry (`adopt` / `compact`): the
+  * accumulating stores (lists / decided / ledger) land at `batch=-1`
+  * and the newest head becomes the `batch=-1` relation, so the new era's
+  * generations supersede it. [[run]] refuses a fresh checkpoint while
+  * the accumulating stores still hold `batch>=0` directories — the new
+  * era's batch 0 would overwrite the old era's first ledger rows,
+  * admitted vectors and decided ids.
   */
 object IncrementalSemDedup {
 
@@ -190,10 +191,12 @@ object IncrementalSemDedup {
           s"contain the seed vec_ids (< ${Similarity.NumLists})")
       trained.write.mode("overwrite").parquet(leaderPath(root))
     }(IncrementalAnnIndex.readLeaders(spark, leaderPath(root)))
-    // unguarded: its re-entry (reenterSuperseded) carries only the heads
+    // the superseding heads store needs no guard of its own: every batch
+    // writes it beside the three guarded stores, and the carry lands its
+    // newest relation at batch=-1
     Drain.run(spark, "IncrementalSemDedup.run",
       spark.readStream.schema(embSchema).parquet(landingDir), checkpointDir,
-      stores = Nil) { (batch, batchId) =>
+      stores = Seq(ledger, lists, decided)) { (batch, batchId) =>
       val uniq = batch.dropDuplicates("vec_id")
       val cents = leaders(uniq)
       // first-write-wins on vec_id against the DECIDED store (kept

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, Similarity}
-import graft.streaming.DriftMaintenance.{Kind, Outcome, Store}
+import graft.streaming.FamilyMaintenance.{Carry, Outcome, StoreSpec}
 
-/** The IVF maintenance POLICY loop — the [[DriftMaintenance]] engine
+/** The IVF maintenance POLICY loop — the [[FamilyMaintenance]] engine
   * instantiated for the frozen-leader ANN index, closing the circle
   * around [[IncrementalAnnIndex]] (frozen-leader adds) and
   * [[StoreMaintenance.listBalance]] (the health report): when the stored
@@ -104,47 +104,13 @@ object IvfMaintenance {
     seeds
   }
 
-  /** The engine description: leaders are the model, the list store is
-    * REBUILT on retrain (reassigned under the written leaders, row-count
-    * verified against the stored corpus — which is also the retrain's
-    * training source: unlike the lossy code stores, the lists carry
-    * their vectors).
+  /** The engine description: leaders are the model; the list store is
+    * carried in its bucket layout by adopt and REASSIGNED by a retrain.
     */
-  private def fam(kmeansIters: Int) = DriftMaintenance.Family[Double](
-    what = "IvfMaintenance",
-    stores = Seq(
-      Store("leaders", leadersPath _, Kind.Model),
-      Store("lists", listsPath _, Kind.Rebuilt("vec_id"))),
-    counterfactual = (_, _) => throw new IllegalStateException(
-      "IvfMaintenance: direct retrain carries no counterfactual"),
-    retrainInto = (spark, _, cur, dest, numFiles) => {
-      val stored = spark.read.parquet(listsPath(cur))
-        .drop("batch", "id_bucket")
-      val srcRows = stored.count()
-      val emb = stored.select("vec_id", "embedding")
-      val seeds = hashTileSeeds(emb, Similarity.NumLists)
-      val nSeeds = seeds.count()
-      require(nSeeds == Similarity.NumLists.toLong,
-        s"IvfMaintenance.retrain: seed election produced $nSeeds of " +
-          s"${Similarity.NumLists} tiles — corpus too small to retrain")
-      val cents = Similarity.kmeansFromSeeds(emb, seeds, kmeansIters)
-      cents.coalesce(1).write.mode("errorifexists")
-        .parquet(leadersPath(dest))
-      val reassigned = Similarity
-        .assignWithLeadersRetaining(emb,
-          spark.read.parquet(leadersPath(dest)))
-        .select("vec_id", "list_id", "list_cos", "embedding", "norm")
-      // keep the source store's bucket modulus: the corpus didn't grow,
-      // so the membership-probe unit (bucket size) is unchanged
-      val buckets = IncrementalAnnIndex.bucketCount(spark, listsPath(cur))
-        .getOrElse(IncrementalAnnIndex.NumIdBuckets)
-      StoreMaintenance.writeStoreLayout(spark, reassigned, listsPath(dest),
-        numFiles, bucketBy = Some(("vec_id", buckets)))
-      val written = spark.read.parquet(listsPath(dest)).count()
-      require(written == srcRows,
-        s"IvfMaintenance.retrain: reassigned $written of $srcRows rows — " +
-          "not publishing; readers stay on the current generation")
-    })
+  private object engine extends FamilyMaintenance("IvfMaintenance", Seq(
+    StoreSpec("leaders", leadersPath _, Carry.Model),
+    StoreSpec("lists", listsPath _,
+      Carry.Rows(Some("vec_id"), IncrementalAnnIndex.NumIdBuckets))))
 
   /** Adopt a FLAT store pair — the layout [[IncrementalAnnIndex.run]]
     * maintains — into the generation layout under `root`, publishing the
@@ -159,26 +125,54 @@ object IvfMaintenance {
       listSrc: String,
       numFiles: Int,
       idBuckets: Int = IncrementalAnnIndex.NumIdBuckets): String =
-    DriftMaintenance.adopt(spark, fam(DefaultKmeansIters), root,
-      flatRoot = "", numFiles,
-      srcOf = Map("leaders" -> leaderSrc, "lists" -> listSrc),
-      bucketsOverride = Map("lists" -> idBuckets))
+    engine.adoptFrom(spark, root,
+      Map("leaders" -> leaderSrc, "lists" -> listSrc), numFiles,
+      Map("lists" -> idBuckets))
 
   /** Retrain the live generation's quantizer on its CURRENT corpus and
     * reassign every stored vector, into the next generation; publish only
     * after the row count verifies. Seeds come from [[hashTileSeeds]];
     * the reassigned lists are written through the compaction layout
     * ([[StoreMaintenance.writeStoreLayout]]), so the new generation is
-    * re-enterable by the stream exactly like a compacted store. Returns
-    * the new generation's path.
+    * re-enterable by the stream exactly like a compacted store. The
+    * stored corpus is also the training source: unlike the lossy code
+    * stores, the lists carry their vectors. Returns the new generation's
+    * path.
     */
   def retrain(
       spark: SparkSession,
       root: String,
       kmeansIters: Int = DefaultKmeansIters,
       numFiles: Int = 1): String =
-    DriftMaintenance.retrainWith(spark, fam(kmeansIters), root,
-      Double.NaN, numFiles)
+    engine.rewrite(spark, root, numFiles, Set("leaders", "lists")) {
+      (cur, dest) =>
+        val stored = spark.read.parquet(listsPath(cur))
+          .drop("batch", "id_bucket")
+        val srcRows = stored.count()
+        val emb = stored.select("vec_id", "embedding")
+        val seeds = hashTileSeeds(emb, Similarity.NumLists)
+        val nSeeds = seeds.count()
+        require(nSeeds == Similarity.NumLists.toLong,
+          s"IvfMaintenance.retrain: seed election produced $nSeeds of " +
+            s"${Similarity.NumLists} tiles — corpus too small to retrain")
+        val cents = Similarity.kmeansFromSeeds(emb, seeds, kmeansIters)
+        cents.coalesce(1).write.mode("errorifexists")
+          .parquet(leadersPath(dest))
+        val reassigned = Similarity
+          .assignWithLeadersRetaining(emb,
+            spark.read.parquet(leadersPath(dest)))
+          .select("vec_id", "list_id", "list_cos", "embedding", "norm")
+        // keep the source store's bucket modulus: the corpus didn't grow,
+        // so the membership-probe unit (bucket size) is unchanged
+        val buckets = IncrementalAnnIndex.bucketCount(spark, listsPath(cur))
+          .getOrElse(IncrementalAnnIndex.NumIdBuckets)
+        StoreMaintenance.writeStoreLayout(spark, reassigned, listsPath(dest),
+          numFiles, bucketBy = Some(("vec_id", buckets)))
+        val written = spark.read.parquet(listsPath(dest)).count()
+        require(written == srcRows,
+          s"IvfMaintenance.retrain: reassigned $written of $srcRows rows — " +
+            "not publishing; readers stay on the current generation")
+    }
 
   /** The maintenance policy: measure the live generation's imbalance and
     * retrain iff it exceeds `threshold`. Idempotent below the threshold
@@ -192,12 +186,11 @@ object IvfMaintenance {
       threshold: Double = DefaultImbalanceThreshold,
       kmeansIters: Int = DefaultKmeansIters,
       numFiles: Int = 1): Report = {
-    val f = fam(kmeansIters).copy(counterfactual = (spark, cur) => {
+    val (imb, gen) = engine.whenDrifted(spark, root) { cur =>
       val imb = imbalanceFactor(
         spark.read.parquet(listsPath(cur)).select("list_id"))
       Outcome(imb > threshold, imb)
-    })
-    val (imb, gen) = DriftMaintenance.maintain(spark, f, root, numFiles)
+    }(_ => retrain(spark, root, kmeansIters, numFiles))
     Report(imb, gen.isDefined, gen)
   }
 

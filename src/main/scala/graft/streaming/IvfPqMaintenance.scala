@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Pq, Similarity}
-import graft.streaming.DriftMaintenance.{Kind, Outcome, Store}
+import graft.streaming.FamilyMaintenance.{Carry, Outcome, StoreSpec}
 
-/** The RESIDUAL IVFPQ maintenance POLICY loop — the [[DriftMaintenance]]
+/** The RESIDUAL IVFPQ maintenance POLICY loop — the [[FamilyMaintenance]]
   * engine instantiated over BOTH frozen quantizers:
   * [[IncrementalIvfPqIndex]] freezes both at bootstrap (the FAISS
   * train-once contract), so when the crawl drifts, two decays compound
@@ -39,7 +39,8 @@ import graft.streaming.DriftMaintenance.{Kind, Outcome, Store}
   * Generation layout — each generation is a complete FLAT
   * [[IncrementalIvfPqIndex]] root, so the stream re-enters the published
   * generation directly (its bootstrap guard keys on book existence) and
-  * [[IncrementalIvfPqIndex.searchStore]] serves it unchanged:
+  * [[IncrementalIvfPqIndex.searchStore]] serves it unchanged (`adopt`
+  * takes a flat root of the same shape):
   * {{{
   *   root/_current            → "gen-00001"              (pointer, written last)
   *   root/gen-00001/leaders/                              (list_id, lvec, lnorm)
@@ -47,7 +48,13 @@ import graft.streaming.DriftMaintenance.{Kind, Outcome, Store}
   *   root/gen-00001/codes/batch=-1/id_bucket=B/           (+ _id_buckets marker)
   * }}}
   */
-object IvfPqMaintenance {
+object IvfPqMaintenance extends FamilyMaintenance("IvfPqMaintenance", Seq(
+  // leaders and book are the model pair (written together — a split pair
+  // misroutes every query); the codes are RE-ENCODED by a retrain
+  StoreSpec("leaders", IncrementalIvfPqIndex.leaderPath _, Carry.Model),
+  StoreSpec("book", IncrementalIvfPqIndex.bookPath _, Carry.Model),
+  StoreSpec("codes", IncrementalIvfPqIndex.codePath _,
+    Carry.Rows(Some("vec_id"), IncrementalAnnIndex.NumIdBuckets)))) {
 
   /** Retrain when live mean residual quantization error exceeds this
     * multiple of the candidate pair's. Higher than [[PqMaintenance]]'s
@@ -117,22 +124,28 @@ object IvfPqMaintenance {
     if (r.isNullAt(1)) 0.0 else r.getDouble(1)
   }
 
-  /** The engine description, closed over the vector source of record:
-    * leaders and book are the model pair (written together — a split
-    * pair misroutes every query), the codes REBUILT on retrain (residual
-    * re-encode against the WRITTEN leaders, row-count verified).
+  /** Retrain BOTH quantizers on the CURRENT vector corpus and re-encode
+    * every vector, into the next generation; publish only after the row
+    * count verifies. Returns the new generation's path.
     */
-  private def fam(vectors: DataFrame) =
-    DriftMaintenance.Family[(Double, DataFrame, Seq[Pq.CodebookEntry])](
-      what = "IvfPqMaintenance",
-      stores = Seq(
-        Store("leaders", leaderPath _, Kind.Model),
-        Store("book", bookPath _, Kind.Model),
-        Store("codes", codePath _, Kind.Rebuilt("vec_id"))),
-      counterfactual = (_, _) => throw new IllegalStateException(
-        "IvfPqMaintenance: direct retrain carries no counterfactual"),
-      retrainInto = (spark, m, cur, dest, numFiles) => {
-        val (candLeaders, candBook) = (m._2, m._3)
+  def retrain(
+      spark: SparkSession,
+      root: String,
+      vectors: DataFrame,
+      kmeansIters: Int = DefaultKmeansIters,
+      numFiles: Int = 1): String = {
+    val (candLeaders, candBook) = candidateQuantizers(vectors, kmeansIters)
+    retrainWith(spark, root, vectors, candLeaders, candBook, numFiles)
+  }
+
+  /** Write the candidate pair and the residual codes re-encoded against
+    * the WRITTEN leaders into the next generation, row-count verified.
+    */
+  private def retrainWith(spark: SparkSession, root: String,
+      vectors: DataFrame, candLeaders: DataFrame,
+      candBook: Seq[Pq.CodebookEntry], numFiles: Int): String =
+    rewrite(spark, root, numFiles, Set("leaders", "book", "codes")) {
+      (cur, dest) =>
         require(candBook.size == Pq.NumSubspaces * Pq.CodebookSize,
           s"IvfPqMaintenance.retrain: seed election produced " +
             s"${candBook.size} of ${Pq.NumSubspaces * Pq.CodebookSize} " +
@@ -158,35 +171,7 @@ object IvfPqMaintenance {
         require(written == srcRows,
           s"IvfPqMaintenance.retrain: re-encoded $written of $srcRows " +
             "rows — not publishing; readers stay on the current generation")
-      })
-
-  /** Adopt a FLAT [[IncrementalIvfPqIndex]] root — (leaders, book, codes)
-    * under one directory — into the generation layout, publishing the
-    * first generation atomically. One-time migration; thereafter the
-    * stream appends to the live generation's paths and [[maintain]] owns
-    * the swaps.
-    */
-  def adopt(
-      spark: SparkSession,
-      root: String,
-      srcRoot: String,
-      numFiles: Int = 1): String =
-    DriftMaintenance.adopt(spark, fam(null), root, srcRoot, numFiles)
-
-  /** Retrain BOTH quantizers on the CURRENT vector corpus and re-encode
-    * every vector, into the next generation; publish only after the row
-    * count verifies. Returns the new generation's path.
-    */
-  def retrain(
-      spark: SparkSession,
-      root: String,
-      vectors: DataFrame,
-      kmeansIters: Int = DefaultKmeansIters,
-      numFiles: Int = 1): String = {
-    val (candLeaders, candBook) = candidateQuantizers(vectors, kmeansIters)
-    DriftMaintenance.retrainWith(spark, fam(vectors), root,
-      (Double.NaN, candLeaders, candBook), numFiles)
-  }
+    }
 
   /** The maintenance policy: measure mean residual quantization error on
     * the current vector corpus under the live quantizer pair and under a
@@ -202,7 +187,7 @@ object IvfPqMaintenance {
       threshold: Double = DefaultErrorRatioThreshold,
       kmeansIters: Int = DefaultKmeansIters,
       numFiles: Int = 1): Report = {
-    val f = fam(vectors).copy(counterfactual = (spark, cur) => {
+    val ((ratio, _, _), gen) = whenDrifted(spark, root) { cur =>
       val liveLeaders = IncrementalIvfPqIndex.readLeaders(spark, cur)
       val liveBook = IncrementalPqIndex.readCodebook(spark, bookPath(cur))
       val liveErr = meanErr(vectors, liveLeaders, liveBook)
@@ -215,9 +200,10 @@ object IvfPqMaintenance {
         else if (liveErr > 0.0) Double.PositiveInfinity
         else 1.0
       Outcome(ratio > threshold, (ratio, candLeaders, candBook))
-    })
-    val (m, gen) = DriftMaintenance.maintain(spark, f, root, numFiles)
-    Report(m._1, gen.isDefined, gen)
+    } { case (_, leaders, book) =>
+      retrainWith(spark, root, vectors, leaders, book, numFiles)
+    }
+    Report(ratio, gen.isDefined, gen)
   }
 
   /** Residual ADC top-k against the LIVE generation — resolve the pointer

@@ -3,10 +3,10 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.ops.{Dsir, LmPerplexity, QualityClassifier}
-import graft.streaming.DriftMaintenance.{Kind, Outcome, Store}
+import graft.streaming.FamilyMaintenance.{Carry, Outcome, StoreSpec}
 
 /** Drift maintenance for [[IncrementalLearnedEnsemble]]'s frozen table
-  * set — the [[DriftMaintenance]] engine composing the three families'
+  * set — the [[FamilyMaintenance]] engine composing the three families'
   * counterfactuals ([[QualityFilterMaintenance]] /
   * [[LmFilterMaintenance]] / [[DsirMaintenance]]) over ONE generation
   * swap, because the ensemble root is ONE artifact: its ledger records
@@ -26,10 +26,27 @@ import graft.streaming.DriftMaintenance.{Kind, Outcome, Store}
   * verdicts for no reason), the ensemble ledger and admitted stream are
   * carried count-verified (decisions already made stay made), and the
   * generation publishes behind the atomic `_current` pointer. The drain
-  * re-enters on [[currentRoot]] under a fresh checkpoint; the bootstrap
+  * re-enters on `currentRoot` under a fresh checkpoint; the bootstrap
   * guard sees the NB model present and adopts the whole table set.
   */
-object LearnedEnsembleMaintenance {
+object LearnedEnsembleMaintenance extends FamilyMaintenance(
+  "LearnedEnsembleMaintenance",
+  Seq(
+    StoreSpec("nb model", r => IncrementalQualityFilter.modelPath(
+      IncrementalLearnedEnsemble.nbRoot(r)), Carry.Model),
+    StoreSpec("nb prior", r => IncrementalQualityFilter.priorPath(
+      IncrementalLearnedEnsemble.nbRoot(r)), Carry.Model),
+    StoreSpec("lm model", r => IncrementalLmFilter.modelPath(
+      IncrementalLearnedEnsemble.lmRoot(r)), Carry.Model),
+    StoreSpec("lm contexts", r => IncrementalLmFilter.contextsPath(
+      IncrementalLearnedEnsemble.lmRoot(r)), Carry.Model),
+    StoreSpec("dsir ratio", r => IncrementalDsir.ratioPath(
+      IncrementalLearnedEnsemble.dsirRoot(r)), Carry.Model),
+    StoreSpec("ledger", IncrementalLearnedEnsemble.ledgerPath _,
+      Carry.Rows()),
+    StoreSpec("admitted", IncrementalLearnedEnsemble.admittedPath _,
+      Carry.Rows())),
+  Some(IncrementalLearnedEnsemble.storePaths _)) {
 
   /** Retrain a family when its achieved admission fraction under the
     * frozen tables differs from the candidate's by more than this
@@ -56,74 +73,6 @@ object LearnedEnsembleMaintenance {
       candNbModel: DataFrame, candNbPrior: DataFrame,
       candLmModel: DataFrame, candLmCtx: DataFrame, candLr: DataFrame)
 
-  /** The live generation's path — a full [[IncrementalLearnedEnsemble]]
-    * root.
-    */
-  def currentRoot(spark: SparkSession, genRoot: String): String =
-    DriftMaintenance.currentRoot(spark, genRoot)
-
-  private def nbModelPath(root: String) =
-    IncrementalQualityFilter.modelPath(IncrementalLearnedEnsemble.nbRoot(root))
-  private def nbPriorPath(root: String) =
-    IncrementalQualityFilter.priorPath(IncrementalLearnedEnsemble.nbRoot(root))
-  private def lmModelPath(root: String) =
-    IncrementalLmFilter.modelPath(IncrementalLearnedEnsemble.lmRoot(root))
-  private def lmCtxPath(root: String) =
-    IncrementalLmFilter.contextsPath(IncrementalLearnedEnsemble.lmRoot(root))
-  private def dsirRatioPath(root: String) =
-    IncrementalDsir.ratioPath(IncrementalLearnedEnsemble.dsirRoot(root))
-
-  private val base = DriftMaintenance.Family[Retained](
-    what = "LearnedEnsembleMaintenance",
-    stores = Seq(
-      Store("nb model", nbModelPath _, Kind.Model),
-      Store("nb prior", nbPriorPath _, Kind.Model),
-      Store("lm model", lmModelPath _, Kind.Model),
-      Store("lm contexts", lmCtxPath _, Kind.Model),
-      Store("dsir ratio", dsirRatioPath _, Kind.Model),
-      Store("ledger", IncrementalLearnedEnsemble.ledgerPath _,
-        Kind.History()),
-      Store("admitted", IncrementalLearnedEnsemble.admittedPath _,
-        Kind.History())),
-    counterfactual = (_, _) => throw new IllegalStateException(
-      "LearnedEnsembleMaintenance: maintain is the only entry point"),
-    retrainInto = (spark, m, cur, dest, _) => {
-      // drifted families ship their measured candidates; stable families'
-      // tables carry VERBATIM (count-verified) — their estimates still
-      // describe the crawl, and retraining them would move verdicts for
-      // no reason
-      def carry(path: String => String, what: String): Unit =
-        DriftMaintenance.carryTable(spark, path(cur), path(dest), what)
-      if (m.nb.retrained)
-        IncrementalQualityFilter.writeModel(m.candNbModel, m.candNbPrior,
-          IncrementalLearnedEnsemble.nbRoot(dest))
-      else {
-        carry(nbModelPath, "ensemble nb model")
-        carry(nbPriorPath, "ensemble nb prior")
-      }
-      if (m.lm.retrained)
-        IncrementalLmFilter.writeModel(m.candLmModel, m.candLmCtx,
-          IncrementalLearnedEnsemble.lmRoot(dest))
-      else {
-        carry(lmModelPath, "ensemble lm model")
-        carry(lmCtxPath, "ensemble lm contexts")
-      }
-      if (m.dsir.retrained)
-        IncrementalDsir.writeRatioTable(m.candLr, dsirRatioPath(dest))
-      else carry(dsirRatioPath, "ensemble dsir ratio")
-    },
-    pinStorePaths = Some(IncrementalLearnedEnsemble.storePaths _))
-
-  /** Adopt a flat [[IncrementalLearnedEnsemble]] root into the generation
-    * layout, publishing generation 0 atomically.
-    */
-  def adopt(
-      spark: SparkSession,
-      genRoot: String,
-      flatRoot: String,
-      numFiles: Int = 1): String =
-    DriftMaintenance.adopt(spark, base, genRoot, flatRoot, numFiles)
-
   /** Measure-then-act over all three families: read the live generation's
     * tables (each validated by its own family module), train candidates
     * on `docs` — the current LABELED corpus window, which must carry
@@ -140,12 +89,13 @@ object LearnedEnsembleMaintenance {
     require(docs.columns.contains("source") && docs.columns.contains("lang"),
       "LearnedEnsembleMaintenance.maintain: the measurement window must " +
         "carry the `source` and `lang` label columns (candidate training)")
-    val f = base.copy(counterfactual = (spark, cur) => {
+    val (m, gen) = whenDrifted(spark, genRoot) { cur =>
       val (nbModel, nbPrior) = IncrementalQualityFilter.readModel(
         spark, IncrementalLearnedEnsemble.nbRoot(cur))
       val (lmModel, lmContexts) = IncrementalLmFilter.readModel(
         spark, IncrementalLearnedEnsemble.lmRoot(cur))
-      val lr = IncrementalDsir.readRatioTable(spark, dsirRatioPath(cur))
+      val lr = IncrementalDsir.readRatioTable(spark,
+        IncrementalDsir.ratioPath(IncrementalLearnedEnsemble.dsirRoot(cur)))
 
       // candidates, trained once on the window and materialized (bounded
       // relations): the counterfactual scoring and — on drift — the
@@ -175,8 +125,32 @@ object LearnedEnsembleMaintenance {
       Outcome(nb.retrained || lm.retrained || dsir.retrained,
         Retained(nb, lm, dsir, candNbModel, candNbPrior,
           candLmModel, candLmCtx, candLr))
-    })
-    val (m, gen) = DriftMaintenance.maintain(spark, f, genRoot, numFiles)
+    }(retrain(spark, genRoot, _, numFiles))
     Report(m.nb, m.lm, m.dsir, gen)
+  }
+
+  /** One generation from the measured verdicts: drifted families ship
+    * their measured candidates; stable families' tables are CARRIED
+    * verbatim (count-verified) by the engine — their estimates still
+    * describe the crawl, and retraining them would move verdicts for no
+    * reason.
+    */
+  private def retrain(spark: SparkSession, genRoot: String, m: Retained,
+      numFiles: Int): String = {
+    val written =
+      (if (m.nb.retrained) Set("nb model", "nb prior") else Set.empty) ++
+        (if (m.lm.retrained) Set("lm model", "lm contexts") else Set.empty) ++
+        (if (m.dsir.retrained) Set("dsir ratio") else Set.empty)
+    rewrite(spark, genRoot, numFiles, written) { (_, dest) =>
+      if (m.nb.retrained)
+        IncrementalQualityFilter.writeModel(m.candNbModel, m.candNbPrior,
+          IncrementalLearnedEnsemble.nbRoot(dest))
+      if (m.lm.retrained)
+        IncrementalLmFilter.writeModel(m.candLmModel, m.candLmCtx,
+          IncrementalLearnedEnsemble.lmRoot(dest))
+      if (m.dsir.retrained)
+        IncrementalDsir.writeRatioTable(m.candLr, IncrementalDsir.ratioPath(
+          IncrementalLearnedEnsemble.dsirRoot(dest)))
+    }
   }
 }

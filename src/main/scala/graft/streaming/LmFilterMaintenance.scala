@@ -4,10 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.LmPerplexity
-import graft.streaming.DriftMaintenance.{Kind, Outcome, Store}
+import graft.streaming.FamilyMaintenance.{Carry, Outcome, StoreSpec}
 
 /** The recalibration loop for [[IncrementalLmFilter]]'s frozen bigram LM
-  * — the [[DriftMaintenance]] engine instantiated for perplexity
+  * — the [[FamilyMaintenance]] engine instantiated for perplexity
   * filtering: the tables freeze the target's sequence statistics at
   * bootstrap, so when the curated target itself evolves (new seed
   * snapshots, topic drift) arriving text is priced against a stale LM —
@@ -27,7 +27,14 @@ import graft.streaming.DriftMaintenance.{Kind, Outcome, Store}
   * [[IncrementalLmFilter.run]]'s bootstrap guard sees the model store and
   * adopts it.
   */
-object LmFilterMaintenance {
+object LmFilterMaintenance extends FamilyMaintenance(
+  "LmFilterMaintenance",
+  Seq(
+    StoreSpec("model", IncrementalLmFilter.modelPath _, Carry.Model),
+    StoreSpec("contexts", IncrementalLmFilter.contextsPath _, Carry.Model),
+    StoreSpec("ledger", IncrementalLmFilter.ledgerPath _, Carry.Rows()),
+    StoreSpec("admitted", IncrementalLmFilter.admittedPath _, Carry.Rows())),
+  Some(IncrementalLmFilter.storePaths _)) {
 
   /** Retrain when the achieved admission fraction under the frozen LM
     * differs from the candidate's by more than this (absolute).
@@ -39,40 +46,6 @@ object LmFilterMaintenance {
       candidateFraction: Double,
       retrained: Boolean,
       generation: Option[String])
-
-  /** Retained measurement: fractions + the candidate (model, contexts). */
-  private type M = (Double, Double, DataFrame, DataFrame)
-
-  /** The live generation's path — a full [[IncrementalLmFilter]] root. */
-  def currentRoot(spark: SparkSession, genRoot: String): String =
-    DriftMaintenance.currentRoot(spark, genRoot)
-
-  private val base = DriftMaintenance.Family[M](
-    what = "LmFilterMaintenance",
-    stores = Seq(
-      Store("model", IncrementalLmFilter.modelPath _, Kind.Model),
-      Store("contexts", IncrementalLmFilter.contextsPath _, Kind.Model),
-      Store("ledger", IncrementalLmFilter.ledgerPath _, Kind.History()),
-      Store("admitted", IncrementalLmFilter.admittedPath _, Kind.History())),
-    counterfactual = (_, _) => throw new IllegalStateException(
-      "LmFilterMaintenance: direct retrain carries no counterfactual"),
-    retrainInto = (_, m, _, dest, _) => {
-      require(!m._3.isEmpty,
-        "LmFilterMaintenance.retrain: the current window produced an " +
-          "empty LM — nothing to recalibrate against")
-      IncrementalLmFilter.writeModel(m._3, m._4, dest)
-    },
-    pinStorePaths = Some(IncrementalLmFilter.storePaths _))
-
-  /** Adopt a flat [[IncrementalLmFilter]] root into the generation
-    * layout, publishing generation 0 atomically.
-    */
-  def adopt(
-      spark: SparkSession,
-      genRoot: String,
-      flatRoot: String,
-      numFiles: Int = 1): String =
-    DriftMaintenance.adopt(spark, base, genRoot, flatRoot, numFiles)
 
   /** The achieved admission fraction of `docs` under explicit tables —
     * one aggregate over the shared scoring path, no global rank.
@@ -97,8 +70,13 @@ object LmFilterMaintenance {
       model: DataFrame,
       contexts: DataFrame,
       numFiles: Int = 1): String =
-    DriftMaintenance.retrainWith(spark, base, genRoot,
-      (Double.NaN, Double.NaN, model, contexts), numFiles)
+    rewrite(spark, genRoot, numFiles, Set("model", "contexts")) {
+      (_, dest) =>
+        require(!model.isEmpty,
+          "LmFilterMaintenance.retrain: the current window produced an " +
+            "empty LM — nothing to recalibrate against")
+        IncrementalLmFilter.writeModel(model, contexts, dest)
+    }
 
   /** Measure-then-act: read the live generation's frozen tables, score
     * `docs` under them and under the candidate trained on `docs`' own
@@ -112,7 +90,7 @@ object LmFilterMaintenance {
       docs: DataFrame,
       threshold: Double = DefaultFractionDriftThreshold,
       numFiles: Int = 1): Report = {
-    val fam = base.copy(counterfactual = (spark, cur) => {
+    val ((fFrozen, fCand, _, _), gen) = whenDrifted(spark, genRoot) { cur =>
       val (frozenModel, frozenCtx) = IncrementalLmFilter.readModel(spark, cur)
       val fFrozen = achievedFraction(docs, frozenModel, frozenCtx)
       // materialize the bounded candidate counts ONCE: both derived
@@ -125,8 +103,9 @@ object LmFilterMaintenance {
       val fCand = achievedFraction(docs, candModel, candCtx)
       Outcome(math.abs(fFrozen - fCand) > threshold,
         (fFrozen, fCand, candModel, candCtx))
-    })
-    val (m, gen) = DriftMaintenance.maintain(spark, fam, genRoot, numFiles)
-    Report(m._1, m._2, gen.isDefined, gen)
+    } { case (_, _, model, ctx) =>
+      retrainWith(spark, genRoot, model, ctx, numFiles)
+    }
+    Report(fFrozen, fCand, gen.isDefined, gen)
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.streaming.FamilyMaintenance.{Carry, StoreSpec}
 
@@ -31,65 +31,19 @@ import graft.streaming.FamilyMaintenance.{Carry, StoreSpec}
   * while `batch>=0` directories remain — one fresh era per compaction,
   * the house contract.
   */
-object MediaCatalogMaintenance {
-
-  /** Compact when the media store holds more files than this. */
-  val DefaultMaxFiles = 512L
-
-  /** Bucket-size target the byte-driven re-size holds (the unit one
-    * window fetch reads; payload rows are wide, so the default matches
-    * the comfortable-task-read line the other bucketed stores use).
-    */
-  val DefaultTargetBucketBytes: Long = 64L << 20
-
-  final case class Report(
-      files: Long,
-      bytes: Long,
-      compacted: Boolean,
-      generation: Option[String])
-
-  private val family = FamilyMaintenance.Family(
-    what = "MediaCatalogMaintenance",
-    measureStore = "media",
-    stores = Seq(
-      StoreSpec("media", MediaCatalogStore.mediaPath _,
-        Carry.Rows(Some("media_id"), MediaCatalogStore.DefaultBuckets)),
-      // the takedown ledger crosses every generation boundary with the
-      // catalog — a compaction that dropped tombstones would re-open the
-      // door [[retract]] closed. Optional: a catalog nothing was ever
-      // retracted from has no ledger.
-      StoreSpec("tombstones", MediaCatalogStore.tombstonesPath _,
-        Carry.Rows(Some("media_id"), MediaCatalogStore.DefaultBuckets),
-        optional = true)),
-    pinStorePaths = Some(MediaCatalogStore.storePaths _))
-
-  /** The live generation's path — a full [[MediaCatalogStore]] root. */
-  def currentRoot(spark: SparkSession, genRoot: String): String =
-    FamilyMaintenance.currentRoot(spark, genRoot)
-
-  /** Adopt a flat [[MediaCatalogStore]] root into the generation layout,
-    * publishing generation 0 atomically.
-    */
-  def adopt(
-      spark: SparkSession,
-      genRoot: String,
-      flatRoot: String,
-      numFiles: Int = 1,
-      buckets: Map[String, Int] = Map.empty): String =
-    FamilyMaintenance.adopt(spark, family, genRoot, flatRoot, numFiles,
-      buckets)
-
-  /** Rewrite the LIVE generation into the next one and atomically
-    * repoint readers. `buckets` re-sizes the media store's bucket count
-    * on the way through (the grown-catalog path); unnamed carries keep
-    * the source marker.
-    */
-  def compact(
-      spark: SparkSession,
-      genRoot: String,
-      numFiles: Int = 1,
-      buckets: Map[String, Int] = Map.empty): String =
-    FamilyMaintenance.compact(spark, family, genRoot, numFiles, buckets)
+object MediaCatalogMaintenance extends FamilyMaintenance.Facts(
+  "MediaCatalogMaintenance",
+  Seq(
+    StoreSpec("media", MediaCatalogStore.mediaPath _,
+      Carry.Rows(Some("media_id"), MediaCatalogStore.DefaultBuckets)),
+    // the takedown ledger crosses every generation boundary with the
+    // catalog — a compaction that dropped tombstones would re-open the
+    // door [[retract]] closed. Optional: a catalog nothing was ever
+    // retracted from has no ledger.
+    StoreSpec("tombstones", MediaCatalogStore.tombstonesPath _,
+      Carry.Rows(Some("media_id"), MediaCatalogStore.DefaultBuckets),
+      optional = true)),
+  MediaCatalogStore.storePaths _) {
 
   /** TAKEDOWN — the retraction runbook a served training corpus
     * eventually needs (a licensing claim, a right-to-be-forgotten
@@ -115,67 +69,48 @@ object MediaCatalogMaintenance {
   def retract(
       spark: SparkSession,
       genRoot: String,
-      ids: org.apache.spark.sql.DataFrame,
-      numFiles: Int = 1): String = {
-    val cur = currentRoot(spark, genRoot)
-    val gen = StoreMaintenance.nextGeneration(spark, genRoot)
-    val dest = s"$genRoot/$gen"
-    val retractIds = ids.select("media_id").distinct().localCheckpoint()
-    val srcMedia = MediaCatalogStore.mediaPath(cur)
-    val buckets = IncrementalAnnIndex.bucketCount(spark, srcMedia)
-      .getOrElse(MediaCatalogStore.DefaultBuckets)
-    val src = spark.read.parquet(srcMedia).drop("batch", "id_bucket")
-    val srcN = src.count()
-    val matchedN = src.join(retractIds, Seq("media_id"), "left_semi").count()
-    StoreMaintenance.writeStoreLayout(spark,
-      src.join(retractIds, Seq("media_id"), "left_anti"),
-      MediaCatalogStore.mediaPath(dest), numFiles,
-      Some(("media_id", buckets)))
-    val keptN = spark.read.parquet(MediaCatalogStore.mediaPath(dest)).count()
-    require(keptN == srcN - matchedN,
-      s"MediaCatalogMaintenance.retract: carried $keptN of $srcN rows " +
-        s"with $matchedN retracted — not publishing; readers stay on " +
-        "the current generation")
-    // the ledger: old tombstones (if any) ∪ the new ids, union-verified
-    val srcTomb = MediaCatalogStore.tombstonesPath(cur)
-    val oldTomb =
-      if (StoragePaths.exists(spark, srcTomb))
-        spark.read.parquet(srcTomb).drop("batch", "id_bucket")
-          .select("media_id")
-      else retractIds.limit(0)
-    val newLedger = oldTomb.unionByName(retractIds).distinct()
-      .localCheckpoint()
-    StoreMaintenance.writeStoreLayout(spark, newLedger,
-      MediaCatalogStore.tombstonesPath(dest), numFiles,
-      Some(("media_id", buckets)))
-    require(spark.read.parquet(MediaCatalogStore.tombstonesPath(dest))
-      .count() == newLedger.count(),
-      "MediaCatalogMaintenance.retract: tombstone ledger carry lost " +
-        "rows — not publishing")
-    // sanity: every retracted id is in the published ledger
-    require(retractIds.join(
-      spark.read.parquet(MediaCatalogStore.tombstonesPath(dest))
-        .select("media_id"), Seq("media_id"), "left_anti").isEmpty,
-      "MediaCatalogMaintenance.retract: a retracted id is missing from " +
-        "the ledger — not publishing")
-    StoreMaintenance.publishGeneration(spark, genRoot, gen)
-    dest
-  }
-
-  /** Measure-then-act: list the live generation's media store and
-    * compact iff its file count passed `maxFiles`. A triggered compaction
-    * re-sizes the bucket count from the measured payload bytes (never
-    * below the source marker), so the bounded-window-fetch contract
-    * survives catalog growth.
-    */
-  def maintain(
-      spark: SparkSession,
-      genRoot: String,
-      maxFiles: Long = DefaultMaxFiles,
-      numFiles: Int = 1,
-      targetBucketBytes: Long = DefaultTargetBucketBytes): Report = {
-    val r = FamilyMaintenance.maintain(
-      spark, family, genRoot, maxFiles, numFiles, targetBucketBytes)
-    Report(r.files, r.bytes, r.compacted, r.generation)
-  }
+      ids: DataFrame,
+      numFiles: Int = 1): String =
+    rewrite(spark, genRoot, numFiles, Set("media", "tombstones")) {
+      (cur, dest) =>
+        val retractIds = ids.select("media_id").distinct().localCheckpoint()
+        val srcMedia = MediaCatalogStore.mediaPath(cur)
+        val buckets = IncrementalAnnIndex.bucketCount(spark, srcMedia)
+          .getOrElse(MediaCatalogStore.DefaultBuckets)
+        val src = spark.read.parquet(srcMedia).drop("batch", "id_bucket")
+        val srcN = src.count()
+        val matchedN = src.join(retractIds, Seq("media_id"), "left_semi").count()
+        StoreMaintenance.writeStoreLayout(spark,
+          src.join(retractIds, Seq("media_id"), "left_anti"),
+          MediaCatalogStore.mediaPath(dest), numFiles,
+          Some(("media_id", buckets)))
+        val keptN =
+          spark.read.parquet(MediaCatalogStore.mediaPath(dest)).count()
+        require(keptN == srcN - matchedN,
+          s"MediaCatalogMaintenance.retract: carried $keptN of $srcN rows " +
+            s"with $matchedN retracted — not publishing; readers stay on " +
+            "the current generation")
+        // the ledger: old tombstones (if any) ∪ the new ids, union-verified
+        val srcTomb = MediaCatalogStore.tombstonesPath(cur)
+        val oldTomb =
+          if (StoragePaths.exists(spark, srcTomb))
+            spark.read.parquet(srcTomb).drop("batch", "id_bucket")
+              .select("media_id")
+          else retractIds.limit(0)
+        val newLedger = oldTomb.unionByName(retractIds).distinct()
+          .localCheckpoint()
+        StoreMaintenance.writeStoreLayout(spark, newLedger,
+          MediaCatalogStore.tombstonesPath(dest), numFiles,
+          Some(("media_id", buckets)))
+        require(spark.read.parquet(MediaCatalogStore.tombstonesPath(dest))
+          .count() == newLedger.count(),
+          "MediaCatalogMaintenance.retract: tombstone ledger carry lost " +
+            "rows — not publishing")
+        // sanity: every retracted id is in the published ledger
+        require(retractIds.join(
+          spark.read.parquet(MediaCatalogStore.tombstonesPath(dest))
+            .select("media_id"), Seq("media_id"), "left_anti").isEmpty,
+          "MediaCatalogMaintenance.retract: a retracted id is missing from " +
+            "the ledger — not publishing")
+    }
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 import graft.streaming.FamilyMaintenance.{Carry, StoreSpec}
 
 /** The compaction loop for [[IncrementalPacking]]'s accumulating
@@ -13,11 +11,12 @@ import graft.streaming.FamilyMaintenance.{Carry, StoreSpec}
   * draining for a year pays a per-drain listing of thousands of tiny
   * snapshot files before its first cursor read.
   *
-  * Both stores carry row-preserving and flat: the bin relation is
-  * id-width rows read whole (epoch plans aggregate it; no bucket probe
-  * to size), and the cursor snapshots stay correct under any fold
-  * because the read is `MAX(cum_tokens)` per shard — deliberately not
-  * `max_by(·, batch)`, so rows tying at `batch=-1` resolve identically
+  * Both stores carry row-preserving and flat (no bucketed store, so
+  * nothing to re-size): the bin relation is id-width rows read whole
+  * (epoch plans aggregate it; no bucket probe to size), and the cursor
+  * snapshots stay correct under any fold because the read is
+  * `MAX(cum_tokens)` per shard — deliberately not `max_by(·, batch)`, so
+  * rows tying at `batch=-1` resolve identically
   * ([[IncrementalPacking.cursor]]). What MUST also cross the boundary
   * is the frozen configuration: the `_shards`, `_budget`,
   * `_tokens_source`, and `_payloads` markers live at the root beside the
@@ -32,81 +31,29 @@ import graft.streaming.FamilyMaintenance.{Carry, StoreSpec}
   * checkpoint while `batch>=0` directories remain — one fresh era per
   * compaction.
   */
-object PackingMaintenance {
-
-  /** Compact when the bins store holds more files than this. */
-  val DefaultMaxFiles = 512L
-
-  final case class Report(
-      binFiles: Long,
-      binBytes: Long,
-      compacted: Boolean,
-      generation: Option[String])
-
-  private val family = FamilyMaintenance.Family(
-    what = "PackingMaintenance",
-    measureStore = "bins",
-    stores = Seq(
-      StoreSpec("bins", IncrementalPacking.binsPath _, Carry.Rows()),
-      StoreSpec("cursor", IncrementalPacking.cursorPath _, Carry.Rows()),
-      // payload fragments CANNOT carry row-preserving: landing every
-      // fragment at one batch id erases the batch order their
-      // concatenation depends on, so the carry pre-concatenates per bin
-      // (token-total verified) — see IncrementalPacking.foldPayloads.
-      // Optional: the store only exists when run() was given a vocabulary.
-      StoreSpec("payloads", IncrementalPacking.payloadsPath _,
-        Carry.Custom((spark, src, dest, numFiles, _) =>
-          IncrementalPacking.foldPayloads(spark, src, dest, numFiles)),
-        optional = true)),
-    pinStorePaths = Some(IncrementalPacking.storePaths _),
-    postCarry = (spark, src, dest) =>
-      // the frozen-config markers are root-level, not store-level, so
-      // they ride the hook: absent markers (a legacy pre-marker store)
-      // stay absent — run()'s own heal path owns that case
-      Seq(IncrementalPacking.shardsMarker _,
-        IncrementalPacking.budgetMarker _,
-        IncrementalPacking.tokensSourceMarker _,
-        IncrementalPacking.payloadsMarker _).foreach { m =>
-        StoragePaths.readSmallFile(spark, m(src)).foreach(v =>
-          StoragePaths.writeSmallFile(spark, m(dest), v))
-      })
-
-  /** The live generation's path — a full [[IncrementalPacking]] root. */
-  def currentRoot(spark: SparkSession, genRoot: String): String =
-    FamilyMaintenance.currentRoot(spark, genRoot)
-
-  /** Adopt a flat [[IncrementalPacking]] root into the generation
-    * layout, publishing generation 0 atomically.
-    */
-  def adopt(
-      spark: SparkSession,
-      genRoot: String,
-      flatRoot: String,
-      numFiles: Int = 1): String =
-    FamilyMaintenance.adopt(spark, family, genRoot, flatRoot, numFiles)
-
-  /** Rewrite the LIVE generation into the next one and atomically
-    * repoint readers.
-    */
-  def compact(
-      spark: SparkSession,
-      genRoot: String,
-      numFiles: Int = 1): String =
-    FamilyMaintenance.compact(spark, family, genRoot, numFiles)
-
-  /** Measure-then-act: list the live generation's bins store and
-    * compact iff its file count passed `maxFiles`. Below threshold the
-    * cost is the listing alone — no reads, no writes. (No bucketed
-    * store in this family, so there is nothing to re-size.)
-    */
-  def maintain(
-      spark: SparkSession,
-      genRoot: String,
-      maxFiles: Long = DefaultMaxFiles,
-      numFiles: Int = 1): Report = {
-    val r = FamilyMaintenance.maintain(
-      spark, family, genRoot, maxFiles, numFiles,
-      targetBucketBytes = 64L << 20)
-    Report(r.files, r.bytes, r.compacted, r.generation)
-  }
-}
+object PackingMaintenance extends FamilyMaintenance.Facts(
+  "PackingMaintenance",
+  Seq(
+    StoreSpec("bins", IncrementalPacking.binsPath _, Carry.Rows()),
+    StoreSpec("cursor", IncrementalPacking.cursorPath _, Carry.Rows()),
+    // payload fragments CANNOT carry row-preserving: landing every
+    // fragment at one batch id erases the batch order their
+    // concatenation depends on, so the carry pre-concatenates per bin
+    // (token-total verified) — see IncrementalPacking.foldPayloads.
+    // Optional: the store only exists when run() was given a vocabulary.
+    StoreSpec("payloads", IncrementalPacking.payloadsPath _,
+      Carry.Custom((spark, src, dest, numFiles, _) =>
+        IncrementalPacking.foldPayloads(spark, src, dest, numFiles)),
+      optional = true)),
+  IncrementalPacking.storePaths _,
+  postCarry = (spark, src, dest) =>
+    // the frozen-config markers are root-level, not store-level, so they
+    // ride the hook: absent markers (a legacy pre-marker store) stay
+    // absent — run()'s own heal path owns that case
+    Seq(IncrementalPacking.shardsMarker _,
+      IncrementalPacking.budgetMarker _,
+      IncrementalPacking.tokensSourceMarker _,
+      IncrementalPacking.payloadsMarker _).foreach { m =>
+      StoragePaths.readSmallFile(spark, m(src)).foreach(v =>
+        StoragePaths.writeSmallFile(spark, m(dest), v))
+    })

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Pq, Similarity}
-import graft.streaming.DriftMaintenance.{Kind, Outcome, Store}
+import graft.streaming.FamilyMaintenance.{Carry, Outcome, StoreSpec}
 
-/** The PQ maintenance POLICY loop — the [[DriftMaintenance]] engine
+/** The PQ maintenance POLICY loop — the [[FamilyMaintenance]] engine
   * instantiated for the compressed-code index: [[IncrementalPqIndex]]
   * freezes its sub-quantizer codebooks at bootstrap (the FAISS train-once
   * contract), so a corpus that drifts away from the bootstrap
@@ -80,21 +80,46 @@ object PqMaintenance {
     if (r.isNullAt(1)) 0.0 else r.getDouble(1)
   }
 
-  /** The engine description, closed over the vector source of record:
-    * the codebook is the model; the codes are REBUILT on retrain
-    * (re-encoded against the written candidate book, row-count verified
-    * against the source) and carried in their bucket layout on adopt.
+  /** The engine description: the codebook is the model; the codes are
+    * carried in their bucket layout by adopt and RE-ENCODED by a retrain
+    * (codes from different codebooks are not comparable).
     */
-  private def fam(vectors: DataFrame) =
-    DriftMaintenance.Family[(Double, Seq[Pq.CodebookEntry])](
-      what = "PqMaintenance",
-      stores = Seq(
-        Store("book", bookPath _, Kind.Model),
-        Store("codes", codesPath _, Kind.Rebuilt("vec_id"))),
-      counterfactual = (_, _) => throw new IllegalStateException(
-        "PqMaintenance: direct retrain carries no counterfactual"),
-      retrainInto = (spark, m, cur, dest, numFiles) => {
-        val book = m._2
+  private object engine extends FamilyMaintenance("PqMaintenance", Seq(
+    StoreSpec("book", bookPath _, Carry.Model),
+    StoreSpec("codes", codesPath _,
+      Carry.Rows(Some("vec_id"), IncrementalAnnIndex.NumIdBuckets))))
+
+  /** Adopt a FLAT (book, codes) pair — the layout [[IncrementalPqIndex
+    * .run]] maintains — into the generation layout under `root`,
+    * publishing the first generation atomically.
+    */
+  def adopt(
+      spark: SparkSession,
+      root: String,
+      bookSrc: String,
+      codesSrc: String,
+      numFiles: Int = 1): String =
+    engine.adoptFrom(spark, root,
+      Map("book" -> bookSrc, "codes" -> codesSrc), numFiles, Map.empty)
+
+  /** Retrain the codebook on the CURRENT vector corpus and re-encode every
+    * vector, into the next generation; publish only after the row count
+    * verifies. Returns the new generation's path.
+    */
+  def retrain(
+      spark: SparkSession,
+      root: String,
+      vectors: DataFrame,
+      numFiles: Int = 1): String =
+    retrainWith(spark, root, vectors, candidateBook(vectors), numFiles)
+
+  /** Write `book` and the codes re-encoded against it into the next
+    * generation, the re-encode row-count verified against `vectors`.
+    */
+  private def retrainWith(spark: SparkSession, root: String,
+      vectors: DataFrame, book: Seq[Pq.CodebookEntry], numFiles: Int): String =
+    engine.rewrite(spark, root, numFiles, Set("book", "codes")) {
+      (cur, dest) =>
         require(book.size == Pq.NumSubspaces * Pq.CodebookSize,
           s"PqMaintenance.retrain: seed election produced ${book.size} of " +
             s"${Pq.NumSubspaces * Pq.CodebookSize} entries — corpus too small")
@@ -111,32 +136,7 @@ object PqMaintenance {
         require(written == srcRows,
           s"PqMaintenance.retrain: re-encoded $written of $srcRows rows — " +
             "not publishing; readers stay on the current generation")
-      })
-
-  /** Adopt a FLAT (book, codes) pair — the layout [[IncrementalPqIndex
-    * .run]] maintains — into the generation layout under `root`,
-    * publishing the first generation atomically.
-    */
-  def adopt(
-      spark: SparkSession,
-      root: String,
-      bookSrc: String,
-      codesSrc: String,
-      numFiles: Int = 1): String =
-    DriftMaintenance.adopt(spark, fam(null), root, flatRoot = "",
-      numFiles, srcOf = Map("book" -> bookSrc, "codes" -> codesSrc))
-
-  /** Retrain the codebook on the CURRENT vector corpus and re-encode every
-    * vector, into the next generation; publish only after the row count
-    * verifies. Returns the new generation's path.
-    */
-  def retrain(
-      spark: SparkSession,
-      root: String,
-      vectors: DataFrame,
-      numFiles: Int = 1): String =
-    DriftMaintenance.retrainWith(spark, fam(vectors), root,
-      (Double.NaN, candidateBook(vectors)), numFiles)
+    }
 
   /** The maintenance policy: measure the live codebook's mean quantization
     * error against the candidate book's on the current vector corpus, and
@@ -149,7 +149,7 @@ object PqMaintenance {
       vectors: DataFrame,
       threshold: Double = DefaultErrorRatioThreshold,
       numFiles: Int = 1): Report = {
-    val f = fam(vectors).copy(counterfactual = (spark, cur) => {
+    val ((ratio, _), gen) = engine.whenDrifted(spark, root) { cur =>
       val live = IncrementalPqIndex.readCodebook(spark, bookPath(cur))
       val liveErr = meanErr(vectors, live)
       val cand = candidateBook(vectors)
@@ -163,9 +163,8 @@ object PqMaintenance {
         else if (liveErr > 0.0) Double.PositiveInfinity
         else 1.0
       Outcome(ratio > threshold, (ratio, cand))
-    })
-    val (m, gen) = DriftMaintenance.maintain(spark, f, root, numFiles)
-    Report(m._1, gen.isDefined, gen)
+    } { case (_, cand) => retrainWith(spark, root, vectors, cand, numFiles) }
+    Report(ratio, gen.isDefined, gen)
   }
 
   /** ADC top-k against the LIVE generation — resolve the pointer once,

@@ -4,10 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.QualityClassifier
-import graft.streaming.DriftMaintenance.{Kind, Outcome, Store}
+import graft.streaming.FamilyMaintenance.{Carry, Outcome, StoreSpec}
 
 /** The recalibration loop for [[IncrementalQualityFilter]]'s frozen NB
-  * model — the [[DriftMaintenance]] engine instantiated for model-based
+  * model — the [[FamilyMaintenance]] engine instantiated for model-based
   * quality filtering: the model freezes the (seed, crawl) estimate at
   * bootstrap, so a crawl whose vocabulary mix drifts is scored against
   * statistics that no longer describe it — the achieved admission
@@ -26,7 +26,15 @@ import graft.streaming.DriftMaintenance.{Kind, Outcome, Store}
   * [[IncrementalQualityFilter.run]]'s bootstrap guard sees the model
   * store and adopts it.
   */
-object QualityFilterMaintenance {
+object QualityFilterMaintenance extends FamilyMaintenance(
+  "QualityFilterMaintenance",
+  Seq(
+    StoreSpec("model", IncrementalQualityFilter.modelPath _, Carry.Model),
+    StoreSpec("prior", IncrementalQualityFilter.priorPath _, Carry.Model),
+    StoreSpec("ledger", IncrementalQualityFilter.ledgerPath _, Carry.Rows()),
+    StoreSpec("admitted", IncrementalQualityFilter.admittedPath _,
+      Carry.Rows())),
+  Some(IncrementalQualityFilter.storePaths _)) {
 
   /** Retrain when the achieved admission fraction under the frozen model
     * differs from the candidate model's by more than this (absolute).
@@ -38,43 +46,6 @@ object QualityFilterMaintenance {
       candidateFraction: Double,
       retrained: Boolean,
       generation: Option[String])
-
-  /** Retained measurement: fractions + the candidate (model, prior). */
-  private type M = (Double, Double, DataFrame, DataFrame)
-
-  /** The live generation's path — a full [[IncrementalQualityFilter]]
-    * root.
-    */
-  def currentRoot(spark: SparkSession, genRoot: String): String =
-    DriftMaintenance.currentRoot(spark, genRoot)
-
-  private val base = DriftMaintenance.Family[M](
-    what = "QualityFilterMaintenance",
-    stores = Seq(
-      Store("model", IncrementalQualityFilter.modelPath _, Kind.Model),
-      Store("prior", IncrementalQualityFilter.priorPath _, Kind.Model),
-      Store("ledger", IncrementalQualityFilter.ledgerPath _, Kind.History()),
-      Store("admitted", IncrementalQualityFilter.admittedPath _,
-        Kind.History())),
-    counterfactual = (_, _) => throw new IllegalStateException(
-      "QualityFilterMaintenance: direct retrain carries no counterfactual"),
-    retrainInto = (_, m, _, dest, _) => {
-      require(!m._3.isEmpty,
-        "QualityFilterMaintenance.retrain: the current corpus produced an " +
-          "empty model — nothing to recalibrate against")
-      IncrementalQualityFilter.writeModel(m._3, m._4, dest)
-    },
-    pinStorePaths = Some(IncrementalQualityFilter.storePaths _))
-
-  /** Adopt a flat [[IncrementalQualityFilter]] root into the generation
-    * layout, publishing generation 0 atomically.
-    */
-  def adopt(
-      spark: SparkSession,
-      genRoot: String,
-      flatRoot: String,
-      numFiles: Int = 1): String =
-    DriftMaintenance.adopt(spark, base, genRoot, flatRoot, numFiles)
 
   /** The achieved admission fraction of `docs` under an explicit model —
     * one aggregate over the shared scoring path, no global rank.
@@ -113,8 +84,12 @@ object QualityFilterMaintenance {
       model: DataFrame,
       prior: DataFrame,
       numFiles: Int = 1): String =
-    DriftMaintenance.retrainWith(spark, base, genRoot,
-      (Double.NaN, Double.NaN, model, prior), numFiles)
+    rewrite(spark, genRoot, numFiles, Set("model", "prior")) { (_, dest) =>
+      require(!model.isEmpty,
+        "QualityFilterMaintenance.retrain: the current corpus produced an " +
+          "empty model — nothing to recalibrate against")
+      IncrementalQualityFilter.writeModel(model, prior, dest)
+    }
 
   /** Measure-then-act: read the live generation's frozen model, score
     * `docs` under it and under the candidate, retrain iff the achieved
@@ -127,7 +102,7 @@ object QualityFilterMaintenance {
       docs: DataFrame,
       threshold: Double = DefaultFractionDriftThreshold,
       numFiles: Int = 1): Report = {
-    val fam = base.copy(counterfactual = (spark, cur) => {
+    val ((fFrozen, fCand, _, _), gen) = whenDrifted(spark, genRoot) { cur =>
       val (model, prior) = IncrementalQualityFilter.readModel(spark, cur)
       val fFrozen = achievedFraction(docs, model, prior)
       // materialize the bounded candidate ONCE: the counterfactual scoring
@@ -138,8 +113,9 @@ object QualityFilterMaintenance {
       val fCand = achievedFraction(docs, candModel, candPrior)
       Outcome(math.abs(fFrozen - fCand) > threshold,
         (fFrozen, fCand, candModel, candPrior))
-    })
-    val (m, gen) = DriftMaintenance.maintain(spark, fam, genRoot, numFiles)
-    Report(m._1, m._2, gen.isDefined, gen)
+    } { case (_, _, model, prior) =>
+      retrainWith(spark, genRoot, model, prior, numFiles)
+    }
+    Report(fFrozen, fCand, gen.isDefined, gen)
   }
 }

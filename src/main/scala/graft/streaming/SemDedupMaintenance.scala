@@ -5,10 +5,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
-import graft.streaming.DriftMaintenance.{Kind, Outcome, Store}
+import graft.streaming.FamilyMaintenance.{Carry, Outcome, StoreSpec}
 
 /** The retrain loop for [[IncrementalSemDedup]]'s stores — the
-  * [[DriftMaintenance]] engine over the semantic-dedup root, the missing
+  * [[FamilyMaintenance]] engine over the semantic-dedup root, the missing
   * half of the [[IvfMaintenance]] circle: the incremental semantic dedup
   * freezes its IVF leaders at bootstrap, so a drifted embedding stream
   * crowds into a few lists and the bounded head (the per-list
@@ -43,45 +43,56 @@ import graft.streaming.DriftMaintenance.{Kind, Outcome, Store}
   * is represented by its tau-similar keeper instead. Decisions already
   * made are carried in the decided store and stay made; only FUTURE
   * comparisons see the new head.
+  *
+  * Re-entry WITHOUT a retrain (a lost checkpoint, a routine fold of the
+  * per-batch directories) is the inherited `compact`: every store lands
+  * at `batch=-1` in the next generation — the head store as its newest
+  * relation — and the stream resumes on it under a fresh checkpoint.
   */
-object SemDedupMaintenance {
+object SemDedupMaintenance extends FamilyMaintenance(
+  "SemDedupMaintenance",
+  Seq(
+    // leaders are the model; lists and heads are re-derived by a retrain
+    StoreSpec("leaders", IncrementalSemDedup.leaderPath _, Carry.Model),
+    StoreSpec("lists", IncrementalSemDedup.listPath _,
+      Carry.Rows(Some("vec_id"), IncrementalAnnIndex.NumIdBuckets)),
+    // the heads store is SUPERSEDING (readers resolve the newest batch
+    // only) — the carry resolves it and lands that one relation at
+    // batch=-1, the re-entry position
+    StoreSpec("heads", IncrementalSemDedup.headsPath _,
+      Carry.Custom((spark, src, dst, numFiles, _) => {
+        val root = src.stripSuffix("/heads")
+        IncrementalSemDedup.readHeads(spark, root, Long.MinValue)
+          .getOrElse(throw new IllegalStateException(
+            s"SemDedupMaintenance: no head generations under $root"))
+          .coalesce(numFiles).write.mode("errorifexists")
+          .parquet(s"$dst/batch=${StoreMaintenance.CompactedBatch}")
+      })),
+    // decision history: a lossy carry of the DECIDED store would
+    // re-decide old ids in the next era, and a lossy ledger carry
+    // silently truncates the audit history
+    StoreSpec("decided", IncrementalSemDedup.decidedPath _,
+      Carry.Rows(Some("vec_id"), IncrementalAnnIndex.NumIdBuckets)),
+    StoreSpec("ledger", IncrementalSemDedup.ledgerPath _, Carry.Rows()))) {
 
-  /** The live generation's path — a full [[IncrementalSemDedup]] root. */
-  def currentRoot(spark: SparkSession, genRoot: String): String =
-    DriftMaintenance.currentRoot(spark, genRoot)
-
-  /** The engine description: leaders are the model; lists and heads are
-    * re-derived on retrain (heads via the bespoke superseding-read adopt
-    * carry); decided ids and the ledger are history — a lossy carry of
-    * the DECIDED store would re-decide old ids in the next era, and a
-    * lossy ledger carry silently truncates the audit history.
+  /** Retrain the live generation's quantizer on its CURRENT admitted
+    * corpus ([[IvfMaintenance.hashTileSeeds]] →
+    * [[Similarity.kmeansFromSeeds]]), reassign every admitted vector,
+    * re-elect the bounded head under the new assignment (the same
+    * id-width two-phase election as [[Similarity.semDedup]] — rank on
+    * `(list_id, vec_id)`, embeddings joined back for the elected head
+    * only), and carry the decided/ledger history — all into the next
+    * generation, published only after the row counts verify. Returns the
+    * new generation's path.
     */
-  private def fam(kmeansIters: Int, maxListOccupancy: Int) =
-    DriftMaintenance.Family[Double](
-      what = "SemDedupMaintenance",
-      stores = Seq(
-        Store("leaders", IncrementalSemDedup.leaderPath _, Kind.Model),
-        Store("lists", IncrementalSemDedup.listPath _,
-          Kind.Rebuilt("vec_id")),
-        // the heads store is SUPERSEDING (readers resolve the newest batch
-        // only) — the adopt carry resolves it and lands that one relation
-        // at batch=-1, the re-entry position
-        Store("heads", IncrementalSemDedup.headsPath _,
-          Kind.Custom((spark, src, dst, numFiles) => {
-            val flatRoot = src.stripSuffix("/heads")
-            IncrementalSemDedup.readHeads(spark, flatRoot, Long.MinValue)
-              .getOrElse(throw new IllegalStateException(
-                s"SemDedupMaintenance.adopt: no head generations under " +
-                  s"$flatRoot"))
-              .coalesce(numFiles).write.mode("errorifexists")
-              .parquet(s"$dst/batch=${StoreMaintenance.CompactedBatch}")
-          })),
-        Store("decided", IncrementalSemDedup.decidedPath _,
-          Kind.History(Some("vec_id"))),
-        Store("ledger", IncrementalSemDedup.ledgerPath _, Kind.History())),
-      counterfactual = (_, _) => throw new IllegalStateException(
-        "SemDedupMaintenance: direct retrain carries no counterfactual"),
-      retrainInto = (spark, _, cur, dest, numFiles) => {
+  def retrain(
+      spark: SparkSession,
+      genRoot: String,
+      kmeansIters: Int = IvfMaintenance.DefaultKmeansIters,
+      numFiles: Int = 1,
+      maxListOccupancy: Int = Similarity.MaxListOccupancy): String =
+    rewrite(spark, genRoot, numFiles, Set("leaders", "lists", "heads")) {
+      (cur, dest) =>
         val stored = spark.read.parquet(IncrementalSemDedup.listPath(cur))
           .drop("batch", "id_bucket")
         val srcRows = stored.count()
@@ -138,40 +149,7 @@ object SemDedupMaintenance {
           .coalesce(numFiles).write.mode("errorifexists")
           .parquet(s"${IncrementalSemDedup.headsPath(dest)}/" +
             s"batch=${StoreMaintenance.CompactedBatch}")
-      })
-
-  /** Adopt a flat [[IncrementalSemDedup]] root into the generation layout,
-    * publishing generation 0 atomically. One-time migration; thereafter
-    * the stream drains into the live generation's paths and [[maintain]]
-    * owns the swaps.
-    */
-  def adopt(
-      spark: SparkSession,
-      genRoot: String,
-      flatRoot: String,
-      numFiles: Int): String =
-    DriftMaintenance.adopt(spark,
-      fam(IvfMaintenance.DefaultKmeansIters, Similarity.MaxListOccupancy),
-      genRoot, flatRoot, numFiles)
-
-  /** Retrain the live generation's quantizer on its CURRENT admitted
-    * corpus ([[IvfMaintenance.hashTileSeeds]] →
-    * [[Similarity.kmeansFromSeeds]]), reassign every admitted vector,
-    * re-elect the bounded head under the new assignment (the same
-    * id-width two-phase election as [[Similarity.semDedup]] — rank on
-    * `(list_id, vec_id)`, embeddings joined back for the elected head
-    * only), and carry the decided/ledger history — all into the next
-    * generation, published only after the row counts verify. Returns the
-    * new generation's path.
-    */
-  def retrain(
-      spark: SparkSession,
-      genRoot: String,
-      kmeansIters: Int = IvfMaintenance.DefaultKmeansIters,
-      numFiles: Int = 1,
-      maxListOccupancy: Int = Similarity.MaxListOccupancy): String =
-    DriftMaintenance.retrainWith(spark, fam(kmeansIters, maxListOccupancy),
-      genRoot, Double.NaN, numFiles)
+    }
 
   /** Measure-then-act, the [[IvfMaintenance.maintain]] policy applied to
     * the semdedup store: read the live generation's imbalance factor
@@ -185,13 +163,11 @@ object SemDedupMaintenance {
       kmeansIters: Int = IvfMaintenance.DefaultKmeansIters,
       numFiles: Int = 1,
       maxListOccupancy: Int = Similarity.MaxListOccupancy): IvfMaintenance.Report = {
-    val f = fam(kmeansIters, maxListOccupancy)
-      .copy(counterfactual = (spark, cur) => {
-        val imb = IvfMaintenance.imbalanceFactor(spark.read
-          .parquet(IncrementalSemDedup.listPath(cur)).select("list_id"))
-        Outcome(imb > threshold, imb)
-      })
-    val (imb, gen) = DriftMaintenance.maintain(spark, f, genRoot, numFiles)
+    val (imb, gen) = whenDrifted(spark, genRoot) { cur =>
+      val imb = IvfMaintenance.imbalanceFactor(spark.read
+        .parquet(IncrementalSemDedup.listPath(cur)).select("list_id"))
+      Outcome(imb > threshold, imb)
+    }(_ => retrain(spark, genRoot, kmeansIters, numFiles, maxListOccupancy))
     IvfMaintenance.Report(imb, gen.isDefined, gen)
   }
 }

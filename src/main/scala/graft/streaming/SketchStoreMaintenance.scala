@@ -1,120 +1,47 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 import graft.streaming.FamilyMaintenance.{Carry, StoreSpec}
 
 /** The one-call maintenance loop for [[IncrementalSketchStore]]'s two
-  * mergeable-summary stores — the last fact family to move off bespoke
-  * hand-wired folds onto the shared [[FamilyMaintenance]] engine. The
-  * verified folds themselves predate this loop
-  * ([[IncrementalSketchStore.foldDaily]] /
-  * [[IncrementalSketchStore.foldCms]]); what they lacked was everything
+  * mergeable-summary stores on the shared [[FamilyMaintenance]] engine.
+  * The verified folds themselves are [[IncrementalSketchStore.foldDaily]]
+  * and [[IncrementalSketchStore.foldCms]]; the engine adds everything
   * around them: a measure-then-act trigger, a generation root, an atomic
   * `_current` pointer, and a published destination the drains can
   * re-enter without hand-wiring a path swap.
   *
   * Both stores are [[FamilyMaintenance.Carry.Custom]] wrappers over the
-  * existing folds — the sketches are MERGEABLE summaries, so the carry is
-  * a fold, not a row copy, and each fold verifies its own invariant
-  * before the engine may publish (exact counter totals for both; an
-  * IDENTICAL all-time HLL estimate for the daily store, because identical
-  * register states survive any merge order). Neither store is bucketed:
-  * the daily store is one row per (batch, day) and the CMS store one
-  * ~160 KB row per batch, so the maintenance hazard is purely the
-  * per-read fold and listing cost of thousands of batch files — which the
-  * fold resets to one row (CMS) / one row per day (daily).
+  * folds — the sketches are MERGEABLE summaries, so the carry is a fold,
+  * not a row copy, and each fold verifies its own invariant before the
+  * engine may publish (exact counter totals for both; an IDENTICAL
+  * all-time HLL estimate for the daily store, because identical register
+  * states survive any merge order). Neither store is bucketed: the daily
+  * store is one row per (batch, day) and the CMS store one ~160 KB row
+  * per batch, so the maintenance hazard is purely the per-read fold and
+  * listing cost of thousands of batch files — which the fold resets to
+  * one row (CMS) / one row per day (daily). Both are optional: a store
+  * the deployment never ran is simply absent and skipped.
   *
-  * The measure-then-act trigger reads the DAILY store's file count (both
-  * drains append one file per batch, so either store's count tracks drain
-  * history; the daily store is the one every deployment runs). A
-  * compacted generation holds both stores at `batch=-1` — below every
-  * streaming epoch — so the drains re-enter the published generation
-  * under a fresh checkpoint via [[IncrementalSketchStore.dailyPath]] /
-  * [[IncrementalSketchStore.cmsPath]] of [[currentRoot]], and the
+  * The trigger measures the first store present — the daily store, or
+  * the CMS store in a CMS-only deployment (both drains append one file
+  * per batch, so either count tracks drain history), firing when the
+  * per-read fold spans more than `maxFiles` batches. A compacted
+  * generation holds both stores at `batch=-1` — below every streaming
+  * epoch — so the drains re-enter the published generation under a fresh
+  * checkpoint via [[IncrementalSketchStore.dailyPath]] /
+  * [[IncrementalSketchStore.cmsPath]] of `currentRoot`, and the
   * fresh-era guard accepts it.
   */
-object SketchStoreMaintenance {
-
-  /** Compact when the daily store holds more files than this — at one
-    * partial file per drained batch the trigger fires when the per-read
-    * fold spans that many batches.
-    */
-  val DefaultMaxFiles = 256L
-
-  final case class Report(
-      dailyFiles: Long,
-      dailyBytes: Long,
-      compacted: Boolean,
-      generation: Option[String])
-
-  private val family = FamilyMaintenance.Family(
-    what = "SketchStoreMaintenance",
-    measureStore = "daily",
-    stores = Seq(
-      StoreSpec("daily", IncrementalSketchStore.dailyPath _,
-        Carry.Custom((s, src, dst, _, _) =>
-          IncrementalSketchStore.foldDaily(s, src, dst)),
-        optional = true),
-      StoreSpec("cms", IncrementalSketchStore.cmsPath _,
-        Carry.Custom((s, src, dst, _, _) =>
-          IncrementalSketchStore.foldCms(s, src, dst)),
-        optional = true)),
-    pinStorePaths = Some(IncrementalSketchStore.storePaths _))
-
-  /** The live generation's path — a sketch family root whose
-    * `daily`/`cms` children the drains write.
-    */
-  def currentRoot(spark: SparkSession, genRoot: String): String =
-    FamilyMaintenance.currentRoot(spark, genRoot)
-
-  /** Adopt a flat sketch family root (a directory whose `daily`/`cms`
-    * children the drains have been writing) into the generation layout,
-    * folding both stores and publishing generation 0 atomically. A store
-    * the deployment never ran is simply absent and skipped.
-    */
-  def adopt(
-      spark: SparkSession,
-      genRoot: String,
-      flatRoot: String,
-      numFiles: Int = 1): String =
-    FamilyMaintenance.adopt(spark, family, genRoot, flatRoot, numFiles)
-
-  /** Fold the LIVE generation into the next one and atomically repoint
-    * readers. A crash anywhere before the pointer write leaves readers on
-    * the old generation; the retry takes a fresh generation number.
-    */
-  def compact(
-      spark: SparkSession,
-      genRoot: String,
-      numFiles: Int = 1): String =
-    FamilyMaintenance.compact(spark, family, genRoot, numFiles)
-
-  /** Measure-then-act: list the live generation's daily store and fold
-    * both stores iff its file count passed `maxFiles`. Below threshold
-    * the cost is the listing alone — no reads, no writes. A CMS-ONLY
-    * deployment (no daily store) measures the CMS store instead — both
-    * drains append one file per batch, so either store's count tracks
-    * drain history, and a store that exists must be able to trigger its
-    * own fold. A root with neither store no-ops.
-    */
-  def maintain(
-      spark: SparkSession,
-      genRoot: String,
-      maxFiles: Long = DefaultMaxFiles,
-      numFiles: Int = 1): Report = {
-    val cur = currentRoot(spark, genRoot)
-    if (StoragePaths.exists(spark, IncrementalSketchStore.dailyPath(cur))) {
-      val r = FamilyMaintenance.maintain(spark, family, genRoot, maxFiles,
-        numFiles, targetBucketBytes = 64L << 20)
-      return Report(r.files, r.bytes, r.compacted, r.generation)
-    }
-    val cmsStore = IncrementalSketchStore.cmsPath(cur)
-    if (!StoragePaths.exists(spark, cmsStore))
-      return Report(0L, 0L, compacted = false, None)
-    val (files, bytes) = StoreMaintenance.fileStats(spark, cmsStore)
-    if (files <= maxFiles) Report(files, bytes, compacted = false, None)
-    else Report(files, bytes, compacted = true,
-      Some(compact(spark, genRoot, numFiles)))
-  }
-}
+object SketchStoreMaintenance extends FamilyMaintenance.Facts(
+  "SketchStoreMaintenance",
+  Seq(
+    StoreSpec("daily", IncrementalSketchStore.dailyPath _,
+      Carry.Custom((s, src, dst, _, _) =>
+        IncrementalSketchStore.foldDaily(s, src, dst)),
+      optional = true),
+    StoreSpec("cms", IncrementalSketchStore.cmsPath _,
+      Carry.Custom((s, src, dst, _, _) =>
+        IncrementalSketchStore.foldCms(s, src, dst)),
+      optional = true)),
+  IncrementalSketchStore.storePaths _,
+  DefaultMaxFiles = 256L)

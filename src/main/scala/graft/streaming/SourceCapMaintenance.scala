@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 import graft.streaming.FamilyMaintenance.{Carry, StoreSpec}
 
 /** The compaction loop for [[IncrementalSourceCap]]'s accumulating
@@ -13,92 +11,29 @@ import graft.streaming.FamilyMaintenance.{Carry, StoreSpec}
   * [[IncrementalSourceCap.spentBudget]]'s touched-bucket probe never
   * looks), so its carry routes through `compactCounts` — one summed
   * delta per source ever admitted, sum-verified before the marker lands
-  * (a lost delta silently re-opens an exhausted source's budget). The
-  * decided ids re-bucket by `doc_id` and the corpus folds flat, both
-  * row-count verified; the carry list is pinned against
-  * [[IncrementalSourceCap.storePaths]].
+  * (a lost delta silently re-opens an exhausted source's budget). Adopt
+  * folds the spent deltas on the way in. The decided ids re-bucket by
+  * `doc_id` and the corpus folds flat, both row-count verified; the
+  * carry list is pinned against [[IncrementalSourceCap.storePaths]].
   *
   * A compacted generation is a complete [[IncrementalSourceCap]] root
   * at `batch=-1`, and [[IncrementalSourceCap.run]] REFUSES a fresh
   * checkpoint while `batch>=0` directories remain — one fresh era per
   * compaction.
   */
-object SourceCapMaintenance {
-
-  /** Compact when the counts store holds more files than this. */
-  val DefaultMaxFiles = 512L
-
-  /** Target bytes per bucket after compaction — the unit a budget or
-    * re-crawl probe reads.
-    */
-  val TargetBucketBytes: Long = 64L << 20
-
-  final case class Report(
-      countFiles: Long,
-      countBytes: Long,
-      compacted: Boolean,
-      generation: Option[String])
-
-  private val family = FamilyMaintenance.Family(
-    what = "SourceCapMaintenance",
-    measureStore = "counts",
-    stores = Seq(
-      StoreSpec("counts", IncrementalSourceCap.countsPath _,
-        Carry.Custom(
-          (spark, src, dest, numFiles, buckets) => {
-            IncrementalSourceCap.compactCounts(
-              spark, src, dest, numFiles, buckets)
-            ()
-          },
-          bucketMarker = Some(IncrementalAnnIndex.IdBucketsMarker),
-          defaultBuckets = IncrementalSourceCap.NumSourceBuckets)),
-      StoreSpec("decided", IncrementalSourceCap.decidedPath _,
-        Carry.Rows(Some("doc_id"), IncrementalSourceCap.NumSourceBuckets)),
-      StoreSpec("corpus", IncrementalSourceCap.corpusPath _, Carry.Rows())),
-    pinStorePaths = Some(IncrementalSourceCap.storePaths _))
-
-  /** The live generation's path — a full [[IncrementalSourceCap]] root. */
-  def currentRoot(spark: SparkSession, genRoot: String): String =
-    FamilyMaintenance.currentRoot(spark, genRoot)
-
-  /** Adopt a flat [[IncrementalSourceCap]] root into the generation
-    * layout, publishing generation 0 atomically (and folding the spent
-    * deltas on the way in).
-    */
-  def adopt(
-      spark: SparkSession,
-      genRoot: String,
-      flatRoot: String,
-      numFiles: Int = 1): String =
-    FamilyMaintenance.adopt(spark, family, genRoot, flatRoot, numFiles)
-
-  /** Rewrite the LIVE generation into the next one and atomically
-    * repoint readers. `countBuckets` / `idBuckets` re-size the bucket
-    * counts on the way through; None carries the source counts.
-    */
-  def compact(
-      spark: SparkSession,
-      genRoot: String,
-      numFiles: Int = 1,
-      countBuckets: Option[Int] = None,
-      idBuckets: Option[Int] = None): String =
-    FamilyMaintenance.compact(spark, family, genRoot, numFiles,
-      countBuckets.map("counts" -> _).toMap ++
-        idBuckets.map("decided" -> _).toMap)
-
-  /** Measure-then-act: list the live generation's counts store and
-    * compact iff its file count passed `maxFiles`. A triggered
-    * compaction re-sizes both bucketed stores from their measured bytes
-    * (never shrinking below the source markers).
-    */
-  def maintain(
-      spark: SparkSession,
-      genRoot: String,
-      maxFiles: Long = DefaultMaxFiles,
-      numFiles: Int = 1,
-      targetBucketBytes: Long = TargetBucketBytes): Report = {
-    val r = FamilyMaintenance.maintain(
-      spark, family, genRoot, maxFiles, numFiles, targetBucketBytes)
-    Report(r.files, r.bytes, r.compacted, r.generation)
-  }
-}
+object SourceCapMaintenance extends FamilyMaintenance.Facts(
+  "SourceCapMaintenance",
+  Seq(
+    StoreSpec("counts", IncrementalSourceCap.countsPath _,
+      Carry.Custom(
+        (spark, src, dest, numFiles, buckets) => {
+          IncrementalSourceCap.compactCounts(
+            spark, src, dest, numFiles, buckets)
+          ()
+        },
+        bucketMarker = Some(IncrementalAnnIndex.IdBucketsMarker),
+        defaultBuckets = IncrementalSourceCap.NumSourceBuckets)),
+    StoreSpec("decided", IncrementalSourceCap.decidedPath _,
+      Carry.Rows(Some("doc_id"), IncrementalSourceCap.NumSourceBuckets)),
+    StoreSpec("corpus", IncrementalSourceCap.corpusPath _, Carry.Rows())),
+  IncrementalSourceCap.storePaths _)

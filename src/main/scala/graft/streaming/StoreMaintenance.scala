@@ -13,7 +13,9 @@ import org.apache.spark.sql.functions._
   * Compaction rewrites the accumulated generations into a NEW directory
   * and leaves the source untouched — the caller swaps paths when the new
   * generation is verified (the only crash-safe contract without an atomic
-  * multi-directory commit; a failed compaction is simply re-run).
+  * multi-directory commit; a failed compaction is simply re-run). These
+  * are the single-store primitives; [[FamilyMaintenance]] carries a whole
+  * family's stores through them into one published generation.
   *
   * The re-enterable output keeps the store's `batch=N` directory shape by
   * landing everything under `batch=-1` (streaming epochs are ≥ 0, so no
@@ -215,11 +217,10 @@ object StoreMaintenance {
   }
 
   /** [[compact]] the LIVE generation into the next one and atomically
-    * repoint readers — the full maintenance cycle. The row count is
-    * verified against the source BEFORE the pointer moves, so a lossy
-    * compaction never publishes; a crash anywhere before the final
-    * pointer write leaves readers on the old generation and the next
-    * retry simply takes a fresh generation number. Returns the new
+    * repoint readers — the full maintenance cycle for a single-store root,
+    * through the one generation step ([[FamilyMaintenance.generation]]).
+    * The row count is verified against the source BEFORE the pointer
+    * moves, so a lossy compaction never publishes. Returns the new
     * generation's path.
     */
   def compactCurrent(
@@ -228,11 +229,10 @@ object StoreMaintenance {
       numFiles: Int,
       bucketBy: Option[(String, Int)] = None): String = {
     val src = resolveCurrent(spark, root)
-    val gen = nextGeneration(spark, root)
-    val dest = s"$root/$gen"
-    compactVerified(spark, src, dest, "compactCurrent", numFiles, bucketBy)
-    publishGeneration(spark, root, gen)
-    dest
+    FamilyMaintenance.generation(spark, root) { dest =>
+      compactVerified(spark, src, dest, "compactCurrent", numFiles, bucketBy)
+      ()
+    }
   }
 
   /** (files, bytes) under a store path — the signal that schedules
@@ -272,37 +272,6 @@ object StoreMaintenance {
         (col("n_vectors") / col("mean_occ")).as("occ_ratio"),
         (col("max_occ") / col("mean_occ")).as("imbalance_factor"))
       .orderBy("list_id")
-  }
-
-  /** Re-enter a superseding-generation store under a FRESH checkpoint:
-    * rewrite the newest generation as `batch=-1` ([[CompactedBatch]],
-    * below every streaming epoch) and delete the rest. A stream
-    * restarting at epoch 0 then resolves the carried relation as
-    * "newest ≠ own", and its first write (`batch=0`) supersedes it.
-    * Without this, generations written by the new checkpoint era land
-    * at LOW batch ids underneath the old era's high ids and are never
-    * resolved again — the store silently freezes at the old era's
-    * newest. Crash-safe by ordering: the `batch=-1` rewrite lands
-    * before any deletion, so an interrupted re-entry leaves the old
-    * newest in place and a re-run converges. On a SECOND re-entry (a
-    * prior `batch=-1` exists under newer-era generations) the listing
-    * includes that `batch=-1` path — it must be excluded from the
-    * deletion pass, or the freshly carried generation is wiped and the
-    * next era dedups against an empty head.
-    */
-  def reenterSuperseded(spark: SparkSession, path: String): Unit = {
-    val hp = new Path(path)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(hp)) return
-    val gens = fs.listStatus(hp).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("batch="))
-      .sortBy(_.getName.stripPrefix("batch=").toLong)
-    val newest = gens.lastOption.getOrElse(return)
-    if (newest.getName == s"batch=$CompactedBatch") return // already re-entered
-    spark.read.parquet(newest.toString)
-      .write.mode("overwrite").parquet(s"$path/batch=$CompactedBatch")
-    gens.filterNot(_.getName == s"batch=$CompactedBatch")
-      .foreach(p => fs.delete(p, true))
   }
 
   /** Vacuum a SUPERSEDING-generation store — one whose readers only ever

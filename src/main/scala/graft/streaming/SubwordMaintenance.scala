@@ -4,11 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.SubwordTrain
-import graft.streaming.DriftMaintenance.{Kind, Outcome, Store}
+import graft.streaming.FamilyMaintenance.{Carry, Outcome, StoreSpec}
 
 /** The retrain loop for [[IncrementalSubword]]'s frozen vocabulary — the
-  * TENTH [[DriftMaintenance]] family, closing the one model the codebase
-  * froze without a drift watch: the subword inventory every token budget
+  * tenth model family on the [[FamilyMaintenance]] engine, closing the
+  * one model the codebase froze without a drift watch: the subword inventory every token budget
   * (packing bins, shard sizing, epoch plans) now prices against. A
   * vocabulary trained at bootstrap describes THAT corpus; a crawl whose
   * character or word inventory moves (a new language, a code-heavy
@@ -39,7 +39,14 @@ import graft.streaming.DriftMaintenance.{Kind, Outcome, Store}
   * the combined trainer feed across the era boundary, each bin priced
   * in its own era's unit.
   */
-object SubwordMaintenance {
+object SubwordMaintenance extends FamilyMaintenance(
+  "SubwordMaintenance",
+  Seq(
+    // the frozen vocabulary is the model, the pricing ledger is history
+    // (pinned against the writer's storePaths)
+    StoreSpec("vocab", IncrementalSubword.vocabPath _, Carry.Model),
+    StoreSpec("ledger", IncrementalSubword.ledgerPath _, Carry.Rows())),
+  Some(IncrementalSubword.storePaths _)) {
 
   /** Retrain when the window's [UNK] rate under the frozen vocabulary
     * exceeds the candidate's by more than this (absolute, per word).
@@ -58,48 +65,6 @@ object SubwordMaintenance {
       candidateTokensPerWord: Double,
       retrained: Boolean,
       generation: Option[String])
-
-  /** The live generation's path — a full [[IncrementalSubword]] root. */
-  def currentRoot(spark: SparkSession, genRoot: String): String =
-    DriftMaintenance.currentRoot(spark, genRoot)
-
-  /** The engine description: the frozen vocabulary is the model (carried
-    * verbatim-verified by adopt), the pricing ledger is history (pinned
-    * against the writer's `storePaths`); the measurement rides along as
-    * the retained value.
-    */
-  private val base =
-    DriftMaintenance.Family[(Double, Double, Double, Double, Seq[String])](
-      what = "SubwordMaintenance",
-      stores = Seq(
-        Store("vocab", IncrementalSubword.vocabPath _, Kind.Model),
-        Store("ledger", IncrementalSubword.ledgerPath _, Kind.History())),
-      counterfactual = (_, _) => throw new IllegalStateException(
-        "SubwordMaintenance: direct retrain carries no counterfactual"),
-      retrainInto = (spark, m, _, dest, _) => {
-        require(m._5.nonEmpty,
-          "SubwordMaintenance.retrain: the current window trained an " +
-            "empty vocabulary — nothing to retrain against")
-        IncrementalSubword.writeVocab(spark, m._5,
-          IncrementalSubword.vocabPath(dest))
-        // the write round-trips the reader's own validation — a lossy or
-        // malformed candidate must not publish
-        require(IncrementalSubword.readVocab(spark,
-          IncrementalSubword.vocabPath(dest)) == m._5,
-          "SubwordMaintenance.retrain: written vocabulary does not " +
-            "round-trip — not publishing the generation")
-      },
-      pinStorePaths = Some(IncrementalSubword.storePaths _))
-
-  /** Adopt a flat [[IncrementalSubword]] root into the generation layout,
-    * publishing generation 0 atomically.
-    */
-  def adopt(
-      spark: SparkSession,
-      genRoot: String,
-      flatRoot: String,
-      numFiles: Int = 1): String =
-    DriftMaintenance.adopt(spark, base, genRoot, flatRoot, numFiles)
 
   /** The window's ([UNK] rate, tokens-per-word) under an explicit
     * vocabulary — one aggregate over the shared pricing path.
@@ -123,8 +88,19 @@ object SubwordMaintenance {
       genRoot: String,
       vocab: Seq[String],
       numFiles: Int = 1): String =
-    DriftMaintenance.retrainWith(spark, base, genRoot,
-      (Double.NaN, Double.NaN, Double.NaN, Double.NaN, vocab), numFiles)
+    rewrite(spark, genRoot, numFiles, Set("vocab")) { (_, dest) =>
+      require(vocab.nonEmpty,
+        "SubwordMaintenance.retrain: the current window trained an " +
+          "empty vocabulary — nothing to retrain against")
+      IncrementalSubword.writeVocab(spark, vocab,
+        IncrementalSubword.vocabPath(dest))
+      // the write round-trips the reader's own validation — a lossy or
+      // malformed candidate must not publish
+      require(IncrementalSubword.readVocab(spark,
+        IncrementalSubword.vocabPath(dest)) == vocab,
+        "SubwordMaintenance.retrain: written vocabulary does not " +
+          "round-trip — not publishing the generation")
+    }
 
   /** Measure-then-act: read the live generation's frozen vocabulary,
     * price `docs` (the current window) under it and under a candidate
@@ -140,17 +116,19 @@ object SubwordMaintenance {
       tpwFactor: Double = DefaultTpwDriftFactor,
       nMerges: Int = SubwordTrain.DefaultMerges,
       numFiles: Int = 1): Report = {
-    val fam = base.copy(counterfactual = (spark, cur) => {
-      val frozen = IncrementalSubword.readVocab(
-        spark, IncrementalSubword.vocabPath(cur))
-      val (unkF, tpwF) = windowRates(docs, frozen)
-      val cand = SubwordTrain.trainedVocab(docs, nMerges)
-      val (unkC, tpwC) = windowRates(docs, cand)
-      val drifted = (unkF - unkC) > unkThreshold ||
-        (tpwC > 0.0 && tpwF / tpwC > tpwFactor)
-      Outcome(drifted, (unkF, unkC, tpwF, tpwC, cand))
-    })
-    val (m, gen) = DriftMaintenance.maintain(spark, fam, genRoot, numFiles)
-    Report(m._1, m._2, m._3, m._4, gen.isDefined, gen)
+    val ((unkF, unkC, tpwF, tpwC, _), gen) =
+      whenDrifted(spark, genRoot) { cur =>
+        val frozen = IncrementalSubword.readVocab(
+          spark, IncrementalSubword.vocabPath(cur))
+        val (unkF, tpwF) = windowRates(docs, frozen)
+        val cand = SubwordTrain.trainedVocab(docs, nMerges)
+        val (unkC, tpwC) = windowRates(docs, cand)
+        val drifted = (unkF - unkC) > unkThreshold ||
+          (tpwC > 0.0 && tpwF / tpwC > tpwFactor)
+        Outcome(drifted, (unkF, unkC, tpwF, tpwC, cand))
+      } { case (_, _, _, _, cand) =>
+        retrainWith(spark, genRoot, cand, numFiles)
+      }
+    Report(unkF, unkC, tpwF, tpwC, gen.isDefined, gen)
   }
 }

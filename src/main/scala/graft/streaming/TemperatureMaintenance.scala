@@ -4,10 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Sampling
-import graft.streaming.DriftMaintenance.{Kind, Outcome, Store}
+import graft.streaming.FamilyMaintenance.{Carry, Outcome, StoreSpec}
 
 /** The recalibration loop for [[IncrementalTemperature]]'s frozen
-  * threshold table — the [[DriftMaintenance]] engine instantiated for mix
+  * threshold table — the [[FamilyMaintenance]] engine instantiated for mix
   * rebalancing: the table freezes the stratum proportions at bootstrap,
   * so a crawl whose language/source mix drifts is thinned against
   * proportions that no longer describe it — the achieved keep fraction
@@ -26,7 +26,14 @@ import graft.streaming.DriftMaintenance.{Kind, Outcome, Store}
   * fresh checkpoint; [[IncrementalTemperature.run]]'s bootstrap guard
   * sees the threshold store and adopts it.
   */
-object TemperatureMaintenance {
+object TemperatureMaintenance extends FamilyMaintenance(
+  "TemperatureMaintenance",
+  Seq(
+    StoreSpec("thresholds", IncrementalTemperature.thresholdsPath _,
+      Carry.Model),
+    StoreSpec("ledger", IncrementalTemperature.ledgerPath _, Carry.Rows()),
+    StoreSpec("kept", IncrementalTemperature.keptPath _, Carry.Rows())),
+  Some(IncrementalTemperature.storePaths _)) {
 
   /** Retrain when the achieved keep fraction under the frozen table
     * differs from the candidate table's by more than this (absolute).
@@ -38,40 +45,6 @@ object TemperatureMaintenance {
       candidateFraction: Double,
       retrained: Boolean,
       generation: Option[String])
-
-  /** The live generation's path — a full [[IncrementalTemperature]]
-    * root.
-    */
-  def currentRoot(spark: SparkSession, genRoot: String): String =
-    DriftMaintenance.currentRoot(spark, genRoot)
-
-  private val base = DriftMaintenance.Family[(Double, Double, DataFrame)](
-    what = "TemperatureMaintenance",
-    stores = Seq(
-      Store("thresholds", IncrementalTemperature.thresholdsPath _,
-        Kind.Model),
-      Store("ledger", IncrementalTemperature.ledgerPath _, Kind.History()),
-      Store("kept", IncrementalTemperature.keptPath _, Kind.History())),
-    counterfactual = (_, _) => throw new IllegalStateException(
-      "TemperatureMaintenance: direct retrain carries no counterfactual"),
-    retrainInto = (_, m, _, dest, _) => {
-      require(!m._3.isEmpty,
-        "TemperatureMaintenance.retrain: the current window produced an " +
-          "empty threshold table — nothing to recalibrate against")
-      IncrementalTemperature.writeThresholds(
-        m._3, IncrementalTemperature.thresholdsPath(dest))
-    },
-    pinStorePaths = Some(IncrementalTemperature.storePaths _))
-
-  /** Adopt a flat [[IncrementalTemperature]] root into the generation
-    * layout, publishing generation 0 atomically.
-    */
-  def adopt(
-      spark: SparkSession,
-      genRoot: String,
-      flatRoot: String,
-      numFiles: Int = 1): String =
-    DriftMaintenance.adopt(spark, base, genRoot, flatRoot, numFiles)
 
   /** The achieved keep fraction of `docs` under an explicit threshold
     * table — one aggregate over the shared assignment path, no global
@@ -98,8 +71,13 @@ object TemperatureMaintenance {
       genRoot: String,
       th: DataFrame,
       numFiles: Int = 1): String =
-    DriftMaintenance.retrainWith(spark, base, genRoot,
-      (Double.NaN, Double.NaN, th), numFiles)
+    rewrite(spark, genRoot, numFiles, Set("thresholds")) { (_, dest) =>
+      require(!th.isEmpty,
+        "TemperatureMaintenance.retrain: the current window produced an " +
+          "empty threshold table — nothing to recalibrate against")
+      IncrementalTemperature.writeThresholds(
+        th, IncrementalTemperature.thresholdsPath(dest))
+    }
 
   /** Measure-then-act: read the live generation's frozen table, assign
     * `docs` under it and under the candidate, retrain iff the achieved
@@ -113,7 +91,7 @@ object TemperatureMaintenance {
       threshold: Double = DefaultFractionDriftThreshold,
       numFiles: Int = 1,
       stratumCol: String = "lang"): Report = {
-    val fam = base.copy(counterfactual = (spark, cur) => {
+    val ((fFrozen, fCand, _), gen) = whenDrifted(spark, genRoot) { cur =>
       val frozen = IncrementalTemperature.readThresholds(
         spark, IncrementalTemperature.thresholdsPath(cur))
       val fFrozen = achievedFraction(docs, frozen, stratumCol)
@@ -124,8 +102,7 @@ object TemperatureMaintenance {
         .localCheckpoint()
       val fCand = achievedFraction(docs, cand, stratumCol)
       Outcome(math.abs(fFrozen - fCand) > threshold, (fFrozen, fCand, cand))
-    })
-    val (m, gen) = DriftMaintenance.maintain(spark, fam, genRoot, numFiles)
-    Report(m._1, m._2, gen.isDefined, gen)
+    } { case (_, _, cand) => retrainWith(spark, genRoot, cand, numFiles) }
+    Report(fFrozen, fCand, gen.isDefined, gen)
   }
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 import graft.streaming.FamilyMaintenance.{Carry, StoreSpec}
 
 /** The compaction loop for [[IncrementalWinnow]]'s accumulating stores —
@@ -13,105 +11,29 @@ import graft.streaming.FamilyMaintenance.{Carry, StoreSpec}
   * re-derived, so the whole carry is lossless by row-count identity
   * alone.
   *
-  * Fingerprints re-bucket by `h`, sizes and decided ids by `doc_id`,
-  * corpus and ledger fold flat; the carry list is pinned against
-  * [[IncrementalWinnow.storePaths]] so a store added to the writer
-  * cannot silently miss maintenance. A compacted generation is a
-  * complete [[IncrementalWinnow]] root at `batch=-1`, and
-  * [[IncrementalWinnow.run]] REFUSES a fresh checkpoint while
-  * `batch>=0` directories remain — one fresh era per compaction.
+  * Fingerprints re-bucket by `h`, sizes and decided ids by `doc_id`
+  * (the two doc_id-keyed stores probe together, so re-size them
+  * together), corpus and ledger fold flat; the carry list is pinned
+  * against [[IncrementalWinnow.storePaths]]. The fingerprint store is
+  * measured: bucket re-sizing keeps per-probe fingerprint I/O bounded
+  * by the batch's touched fingerprints instead of total corpus bulk. A
+  * compacted generation is a complete [[IncrementalWinnow]] root at
+  * `batch=-1`, and [[IncrementalWinnow.run]] REFUSES a fresh checkpoint
+  * while `batch>=0` directories remain — one fresh era per compaction.
   *
   * The source root must have drained at least one non-empty batch: the
   * five stores are written together per admitted batch, and a carry of
   * an absent store has nothing to verify against.
   */
-object WinnowMaintenance {
-
-  /** Compact when the fingerprint store holds more files than this. At
-    * ~one directory per drained batch × touched buckets, the default
-    * trips after the store's listing cost — not its data — dominates a
-    * containment probe.
-    */
-  val DefaultMaxFiles = 512L
-
-  /** Target bytes per bucket after compaction — the unit a probe reads.
-    * [[maintain]] grows a store's bucket count to hold this line, which
-    * is what keeps per-probe fingerprint I/O bounded by the batch's
-    * touched fingerprints instead of total corpus bulk: a frozen bucket
-    * count over a 100× corpus means every probe reads 100× more
-    * unrelated fingerprints, however healthy the file count looks.
-    */
-  val TargetBucketBytes: Long = 64L << 20
-
-  final case class Report(
-      fpFiles: Long,
-      fpBytes: Long,
-      compacted: Boolean,
-      generation: Option[String])
-
-  /** The family description: store names key the bucket re-size map,
-    * and the pin keeps this list and the writer's in lockstep.
-    */
-  private val family = FamilyMaintenance.Family(
-    what = "WinnowMaintenance",
-    measureStore = "fps",
-    stores = Seq(
-      StoreSpec("fps", IncrementalWinnow.fpPath _,
-        Carry.Rows(Some("h"), IncrementalWinnow.NumBuckets)),
-      StoreSpec("sizes", IncrementalWinnow.sizesPath _,
-        Carry.Rows(Some("doc_id"), IncrementalWinnow.NumBuckets)),
-      StoreSpec("decided", IncrementalWinnow.decidedPath _,
-        Carry.Rows(Some("doc_id"), IncrementalWinnow.NumBuckets)),
-      StoreSpec("docs", IncrementalWinnow.corpusPath _, Carry.Rows()),
-      StoreSpec("ledger", IncrementalWinnow.ledgerPath _, Carry.Rows())),
-    pinStorePaths = Some(IncrementalWinnow.storePaths _))
-
-  /** The live generation's path — a full [[IncrementalWinnow]] root. */
-  def currentRoot(spark: SparkSession, genRoot: String): String =
-    FamilyMaintenance.currentRoot(spark, genRoot)
-
-  /** Adopt a flat [[IncrementalWinnow]] root into the generation layout,
-    * publishing generation 0 atomically.
-    */
-  def adopt(
-      spark: SparkSession,
-      genRoot: String,
-      flatRoot: String,
-      numFiles: Int = 1): String =
-    FamilyMaintenance.adopt(spark, family, genRoot, flatRoot, numFiles)
-
-  /** Rewrite the LIVE generation into the next one and atomically repoint
-    * readers. A crash anywhere before the final pointer write leaves
-    * readers on the old generation; the retry takes a fresh generation
-    * number. `fpBuckets` / `idBuckets` re-size the bucket counts on the
-    * way through (the grown-store path — `idBuckets` covers both
-    * doc_id-keyed stores, sizes and decided, which probe together); None
-    * carries the source counts.
-    */
-  def compact(
-      spark: SparkSession,
-      genRoot: String,
-      numFiles: Int = 1,
-      fpBuckets: Option[Int] = None,
-      idBuckets: Option[Int] = None): String =
-    FamilyMaintenance.compact(spark, family, genRoot, numFiles,
-      fpBuckets.map("fps" -> _).toMap ++
-        idBuckets.toSeq.flatMap(b => Seq("sizes" -> b, "decided" -> b)))
-
-  /** Measure-then-act: list the live generation's fingerprint store and
-    * compact iff its file count passed `maxFiles`. Below threshold the
-    * cost is the listing alone — no reads, no writes. A triggered
-    * compaction RE-SIZES every bucketed store from its measured bytes
-    * (never shrinking below the source markers).
-    */
-  def maintain(
-      spark: SparkSession,
-      genRoot: String,
-      maxFiles: Long = DefaultMaxFiles,
-      numFiles: Int = 1,
-      targetBucketBytes: Long = TargetBucketBytes): Report = {
-    val r = FamilyMaintenance.maintain(
-      spark, family, genRoot, maxFiles, numFiles, targetBucketBytes)
-    Report(r.files, r.bytes, r.compacted, r.generation)
-  }
-}
+object WinnowMaintenance extends FamilyMaintenance.Facts(
+  "WinnowMaintenance",
+  Seq(
+    StoreSpec("fps", IncrementalWinnow.fpPath _,
+      Carry.Rows(Some("h"), IncrementalWinnow.NumBuckets)),
+    StoreSpec("sizes", IncrementalWinnow.sizesPath _,
+      Carry.Rows(Some("doc_id"), IncrementalWinnow.NumBuckets)),
+    StoreSpec("decided", IncrementalWinnow.decidedPath _,
+      Carry.Rows(Some("doc_id"), IncrementalWinnow.NumBuckets)),
+    StoreSpec("docs", IncrementalWinnow.corpusPath _, Carry.Rows()),
+    StoreSpec("ledger", IncrementalWinnow.ledgerPath _, Carry.Rows())),
+  IncrementalWinnow.storePaths _)

@@ -44,7 +44,7 @@ class Bm25MaintenanceSpec extends SparkSpec {
     val gen0 = StoreMaintenance.currentGeneration(spark, genRoot)
     val r = Bm25Maintenance.maintain(spark, genRoot, maxFiles = 1000000L)
     assert(!r.compacted && r.generation.isEmpty)
-    assert(r.postingFiles > 0 && r.postingBytes > 0)
+    assert(r.files > 0 && r.bytes > 0)
     assert(StoreMaintenance.currentGeneration(spark, genRoot) == gen0,
       "a no-op maintain must not move the generation pointer")
   }
@@ -68,7 +68,7 @@ class Bm25MaintenanceSpec extends SparkSpec {
       spark, IncrementalBm25.postingsPath(cur))
     assert(after._1 < flatFiles,
       s"compaction did not shrink the store: $flatFiles -> ${after._1}")
-    assert(after._1 <= r.postingFiles)
+    assert(after._1 <= r.files)
     // the additive stats deltas folded to their single-row sum
     val stats = spark.read.parquet(IncrementalBm25.statsPath(cur))
     assert(stats.count() == 1)
@@ -76,7 +76,7 @@ class Bm25MaintenanceSpec extends SparkSpec {
       == docs.count())
     // a grown-store re-size: compacting to MORE term buckets rewrites the
     // marker and leaves search bit-identical
-    Bm25Maintenance.compact(spark, genRoot, postingBuckets = Some(96))
+    Bm25Maintenance.compact(spark, genRoot, buckets = Map("postings" -> 96))
     val cur2 = StoreMaintenance.resolveCurrent(spark, genRoot)
     assert(graft.streaming.IncrementalAnnIndex.bucketCount(
       spark, IncrementalBm25.postingsPath(cur2)).contains(96))

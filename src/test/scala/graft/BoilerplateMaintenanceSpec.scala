@@ -81,7 +81,7 @@ class BoilerplateMaintenanceSpec extends SparkSpec {
     val gen0 = StoreMaintenance.currentGeneration(spark, genRoot)
     val r = BoilerplateMaintenance.maintain(spark, genRoot, maxFiles = 1000000L)
     assert(!r.compacted && r.generation.isEmpty)
-    assert(r.dfFiles > 0 && r.dfBytes > 0)
+    assert(r.files > 0 && r.bytes > 0)
     assert(StoreMaintenance.currentGeneration(spark, genRoot) == gen0,
       "a no-op maintain must not move the generation pointer")
   }
@@ -136,7 +136,7 @@ class BoilerplateMaintenanceSpec extends SparkSpec {
   test("a triggered compaction re-sizes bucket counts from measured bytes") {
     val (genRoot, _) = adoptedStore()
     BoilerplateMaintenance.compact(
-      spark, genRoot, dfBuckets = Some(8), idBuckets = Some(8))
+      spark, genRoot, buckets = Map("df" -> 8, "ids" -> 8))
     val cur = StoreMaintenance.resolveCurrent(spark, genRoot)
     val dfPath = IncrementalBoilerplate.dfPathOf(cur)
     assert(IncrementalAnnIndex.bucketCount(spark, dfPath).contains(8))

@@ -58,7 +58,7 @@ class ChunkDedupMaintenanceSpec extends SparkSpec {
     val gen0 = StoreMaintenance.currentGeneration(spark, genRoot)
     val r = ChunkDedupMaintenance.maintain(spark, genRoot, maxFiles = 1000000L)
     assert(!r.compacted && r.generation.isEmpty)
-    assert(r.chunkFiles > 0 && r.chunkBytes > 0)
+    assert(r.files > 0 && r.bytes > 0)
     assert(StoreMaintenance.currentGeneration(spark, genRoot) == gen0,
       "a no-op maintain must not move the generation pointer")
   }
@@ -105,7 +105,7 @@ class ChunkDedupMaintenanceSpec extends SparkSpec {
   test("a triggered compaction re-sizes bucket counts from measured bytes") {
     val (genRoot, _) = adoptedStore()
     ChunkDedupMaintenance.compact(
-      spark, genRoot, chunkBuckets = Some(8), idBuckets = Some(8))
+      spark, genRoot, buckets = Map("chunks" -> 8, "ids" -> 8))
     val cur = StoreMaintenance.resolveCurrent(spark, genRoot)
     val chunkPath = IncrementalChunkDedup.chunkPathOf(cur)
     assert(IncrementalAnnIndex.bucketCount(spark, chunkPath).contains(8))

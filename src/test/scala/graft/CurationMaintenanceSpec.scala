@@ -70,7 +70,7 @@ class CurationMaintenanceSpec extends SparkSpec {
     val gen0 = StoreMaintenance.currentGeneration(spark, genRoot)
     val r = CurationMaintenance.maintain(spark, genRoot, maxFiles = 1000000L)
     assert(!r.compacted && r.generation.isEmpty)
-    assert(r.sigFiles > 0 && r.sigBytes > 0)
+    assert(r.files > 0 && r.bytes > 0)
     assert(StoreMaintenance.currentGeneration(spark, genRoot) == gen0,
       "a no-op maintain must not move the generation pointer")
   }
@@ -123,7 +123,7 @@ class CurationMaintenanceSpec extends SparkSpec {
     val (genRoot, _) = adoptedStore()
     // an explicit re-size down to 8 signature buckets…
     CurationMaintenance.compact(
-      spark, genRoot, sigBuckets = Some(8), bandBuckets = Some(8))
+      spark, genRoot, buckets = Map("sigs" -> 8, "bands" -> 8))
     val cur = StoreMaintenance.resolveCurrent(spark, genRoot)
     val sigPath = IncrementalCuration.sigPathOf(cur)
     assert(IncrementalAnnIndex.bucketCount(spark, sigPath).contains(8))

@@ -4,15 +4,16 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{DriftMaintenance, StoreMaintenance}
-import graft.streaming.DriftMaintenance.{Kind, Outcome, Store}
+import graft.streaming.{FamilyMaintenance, StoreMaintenance}
+import graft.streaming.FamilyMaintenance.{Carry, Outcome, StoreSpec}
 
-/** The shared model-maintenance engine itself — the contracts the nine
-  * family instantiations lean on: the history-store pin fails loudly on a
-  * list that diverges from the writer's storePaths, a no-drift
-  * counterfactual never moves the pointer, a drift ships the RETAINED
-  * candidate with history carried verified, and a retrain that fails its
-  * own verification publishes nothing.
+/** The shared generation engine itself — the contracts every family
+  * object leans on: the pin fails loudly on a store list that diverges
+  * from the writer's storePaths (model and fact families alike), bucket
+  * overrides must name a bucketed store, a no-drift counterfactual never
+  * moves the pointer, a drift ships the RETAINED candidate with history
+  * carried verified, and a retrain that fails its own verification
+  * publishes nothing.
   */
 class DriftMaintenanceSpec extends SparkSpec {
 
@@ -20,9 +21,10 @@ class DriftMaintenanceSpec extends SparkSpec {
 
   private def modelPath(root: String) = s"$root/model"
   private def ledgerPath(root: String) = s"$root/ledger"
+  private def totalsPath(root: String) = s"$root/totals"
 
-  /** A minimal flat writer root: one frozen model table and one
-    * epoch-layout history store.
+  /** A minimal flat writer root: one frozen model table, one epoch-layout
+    * history store, and one epoch-layout additive store.
     */
   private def flatRoot(): String = {
     val root = Files.createTempDirectory("drift-flat").toString + "/fam"
@@ -30,61 +32,107 @@ class DriftMaintenanceSpec extends SparkSpec {
       .write.parquet(modelPath(root))
     spark.range(10L).select(col("id").as("doc_id"))
       .write.parquet(s"${ledgerPath(root)}/batch=0")
+    spark.range(3L).select(col("id").as("n"))
+      .write.parquet(s"${totalsPath(root)}/batch=0")
     root
   }
 
+  /** A model family: the frozen table plus the history store. */
   private def famOf(
-      cf: (org.apache.spark.sql.SparkSession, String) => Outcome[String],
-      pin: Option[String => Seq[String]] = Some(r => Seq(ledgerPath(r))),
-      lossyRetrain: Boolean = false) = DriftMaintenance.Family[String](
-    what = "TestFamily",
-    stores = Seq(
-      Store("model", modelPath _, Kind.Model),
-      Store("ledger", ledgerPath _, Kind.History())),
-    counterfactual = cf,
-    retrainInto = (spark, m, _, dest, _) => {
-      import spark.implicits._
+      pin: Option[String => Seq[String]] = Some(r => Seq(ledgerPath(r)))) =
+    new FamilyMaintenance("TestFamily", Seq(
+      StoreSpec("model", modelPath _, Carry.Model),
+      StoreSpec("ledger", ledgerPath _, Carry.Rows())), pin) {}
+
+  /** A fact family: a row-preserving store plus an additive one. */
+  private def factsOf(pin: String => Seq[String] =
+      r => Seq(ledgerPath(r), totalsPath(r))) =
+    new FamilyMaintenance.Facts("TestFacts", Seq(
+      StoreSpec("ledger", ledgerPath _, Carry.Rows()),
+      StoreSpec("totals", totalsPath _, Carry.Fold(Nil, Seq("n")))), pin) {}
+
+  /** The model family's retrain: write the candidate model table. */
+  private def retrain(fam: FamilyMaintenance, genRoot: String, m: String,
+      lossyRetrain: Boolean = false): String =
+    fam.rewrite(spark, genRoot, 1, Set("model")) { (_, dest) =>
       Seq((1L, m)).toDF("k", "v").write.parquet(modelPath(dest))
       if (lossyRetrain) throw new IllegalStateException(
         "TestFamily.retrain: lossy re-derive — not publishing")
-    },
-    pinStorePaths = pin)
+    }
 
-  private val never = (_: org.apache.spark.sql.SparkSession, _: String) =>
-    Outcome(drifted = false, "unused")
-  private val always = (_: org.apache.spark.sql.SparkSession, _: String) =>
-    Outcome(drifted = true, "candidate")
+  private def maintain(fam: FamilyMaintenance, genRoot: String,
+      cf: Outcome[String], lossyRetrain: Boolean = false) =
+    fam.whenDrifted(spark, genRoot)(_ => cf)(
+      retrain(fam, genRoot, _, lossyRetrain))
+
+  private val never = Outcome(drifted = false, "unused")
+  private val always = Outcome(drifted = true, "candidate")
 
   test("a history list diverging from the writer's storePaths fails loudly") {
     val flat = flatRoot()
-    val genRoot = Files.createTempDirectory("drift-gen").toString + "/fam"
     // the writer grew a second accumulating store the family's carry
-    // does not know about — both adopt and retrain must refuse before
-    // writing anything
-    val diverged = famOf(always,
-      pin = Some(r => Seq(ledgerPath(r), s"$r/extra")))
-    val err = intercept[IllegalArgumentException] {
-      DriftMaintenance.adopt(spark, diverged, genRoot, flat)
+    // does not know about — a model family and a fact family alike must
+    // refuse before writing anything, on adopt and on the next generation
+    // (the model family's retrain, the fact family's compaction)
+    def grown(pin: String => Seq[String]) =
+      (r: String) => pin(r) :+ s"$r/extra"
+    val cases = Seq(
+      (famOf(), famOf(Some(grown(r => Seq(ledgerPath(r))))),
+        (f: FamilyMaintenance, g: String) => retrain(f, g, "candidate")),
+      (factsOf(), factsOf(grown(r => Seq(ledgerPath(r), totalsPath(r)))),
+        (f: FamilyMaintenance, g: String) => f.compact(spark, g)))
+    cases.foreach { case (aligned, diverged, next) =>
+      val genRoot = Files.createTempDirectory("drift-gen").toString + "/fam"
+      val err = intercept[IllegalArgumentException] {
+        diverged.adopt(spark, genRoot, flat)
+      }
+      assert(err.getMessage.contains("diverged"), err.getMessage)
+      assert(!new java.io.File(genRoot).exists(),
+        "a refused adopt must write nothing")
+      // an aligned pin adopts fine…
+      aligned.adopt(spark, genRoot, flat)
+      // …and the same divergence then blocks the next generation too
+      val err2 = intercept[IllegalArgumentException] {
+        next(diverged, genRoot)
+      }
+      assert(err2.getMessage.contains("diverged"), err2.getMessage)
+      assert(StoreMaintenance.staleGenerations(spark, genRoot).isEmpty,
+        "a refused generation must write nothing")
     }
-    assert(err.getMessage.contains("diverged"), err.getMessage)
-    // an aligned pin adopts fine…
-    DriftMaintenance.adopt(spark, famOf(always), genRoot, flat)
-    // …and the same divergence then blocks the retrain path too
-    val err2 = intercept[IllegalArgumentException] {
-      DriftMaintenance.retrainWith(spark, diverged, genRoot, "candidate")
+  }
+
+  test("a bucket override naming no bucketed store is refused before any write") {
+    val flat = flatRoot()
+    val genRoot = Files.createTempDirectory("drift-gen4").toString + "/fam"
+    val fam = factsOf()
+    // a typo, and a store that has no bucket layout to re-size
+    Seq(Map("ledgr" -> 8), Map("totals" -> 8)).foreach { b =>
+      intercept[IllegalArgumentException] {
+        fam.adopt(spark, genRoot, flat, buckets = b)
+      }
+      assert(!new java.io.File(genRoot).exists())
     }
-    assert(err2.getMessage.contains("diverged"), err2.getMessage)
+    fam.adopt(spark, genRoot, flat)
+    val gen0 = StoreMaintenance.currentGeneration(spark, genRoot)
+    Seq(Map("ledgr" -> 8), Map("totals" -> 8)).foreach { b =>
+      intercept[IllegalArgumentException] {
+        fam.compact(spark, genRoot, buckets = b)
+      }
+    }
+    assert(StoreMaintenance.currentGeneration(spark, genRoot) == gen0)
+    assert(StoreMaintenance.staleGenerations(spark, genRoot).isEmpty)
   }
 
   test("no drift never moves the pointer; drift ships the retained candidate") {
     val genRoot = Files.createTempDirectory("drift-gen2").toString + "/fam"
-    DriftMaintenance.adopt(spark, famOf(never), genRoot, flatRoot())
+    val fam = famOf()
+    fam.adopt(spark, genRoot, flatRoot())
     val gen0 = StoreMaintenance.currentGeneration(spark, genRoot)
-    val (m0, g0) = DriftMaintenance.maintain(spark, famOf(never), genRoot)
+    val (m0, g0) = maintain(fam, genRoot, never)
     assert(m0 == "unused" && g0.isEmpty)
     assert(StoreMaintenance.currentGeneration(spark, genRoot) == gen0)
     // drift: the measured candidate is the one shipped, history carried
-    val (m1, g1) = DriftMaintenance.maintain(spark, famOf(always), genRoot)
+    val (m1, g1) = maintain(fam, genRoot, always)
     assert(m1 == "candidate" && g1.isDefined)
     val cur = StoreMaintenance.resolveCurrent(spark, genRoot)
     assert(g1.contains(cur))
@@ -98,11 +146,11 @@ class DriftMaintenanceSpec extends SparkSpec {
 
   test("a retrain that fails its own verification publishes nothing") {
     val genRoot = Files.createTempDirectory("drift-gen3").toString + "/fam"
-    DriftMaintenance.adopt(spark, famOf(never), genRoot, flatRoot())
+    val fam = famOf()
+    fam.adopt(spark, genRoot, flatRoot())
     val gen0 = StoreMaintenance.currentGeneration(spark, genRoot)
     intercept[IllegalStateException] {
-      DriftMaintenance.maintain(spark,
-        famOf(always, lossyRetrain = true), genRoot)
+      maintain(fam, genRoot, always, lossyRetrain = true)
     }
     // readers stay on the old generation; the crashed partial is abandoned
     assert(StoreMaintenance.currentGeneration(spark, genRoot) == gen0)

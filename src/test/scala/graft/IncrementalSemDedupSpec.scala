@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
 import graft.ops.Similarity
-import graft.streaming.IncrementalSemDedup
+import graft.streaming.{IncrementalSemDedup, SemDedupMaintenance}
 
 /** Incremental SemDeDup against the bounded head store: per-batch
   * decisions replay the batch operator on ordered landings, duplicate
@@ -159,13 +159,14 @@ class IncrementalSemDedupSpec extends SparkSpec {
     land(landing, "b1.parquet", b1)
     IncrementalSemDedup.run(spark, landing.toString, ckpt, root, embSchema)
     land(landing, "b2.parquet", b2)
-    IncrementalSemDedup.run(spark, landing.toString, ckpt, root, embSchema)
-    val heads = IncrementalSemDedup.headsPath(root)
+    val era1 = IncrementalSemDedup.run(
+      spark, landing.toString, ckpt, root, embSchema).collect().toSet
     val headBefore = IncrementalSemDedup.readHeads(spark, root, -999L).get
       .collect().map(_.getLong(0)).toSet
-    graft.streaming.StoreMaintenance.reenterSuperseded(spark, heads)
+    val genRoot = Files.createTempDirectory("sd-gen").toString + "/gens"
+    val gen = SemDedupMaintenance.adopt(spark, genRoot, root)
     // one generation left, below every epoch, content carried intact
-    assert(IncrementalSemDedup.readHeads(spark, root, -999L).get
+    assert(IncrementalSemDedup.readHeads(spark, gen, -999L).get
       .collect().map(_.getLong(0)).toSet == headBefore)
     // resume under a FRESH checkpoint: the new era's batch 0 must resolve
     // the carried head (a dup of a pre-restart member is caught), and its
@@ -176,35 +177,59 @@ class IncrementalSemDedupSpec extends SparkSpec {
       row(40L, vec(1, 0.5).map(x => x * 3f)), // same direction family as 13
       row(41L, vec(3, -0.85))))
     val ledger = IncrementalSemDedup.run(
-      spark, landing2.toString, ckpt2, root, embSchema)
+      spark, landing2.toString, ckpt2, gen, embSchema)
     val d40 = ledger.filter(col("vec_id") === 40L).head()
     assert(!d40.getAs[Boolean]("kept") && d40.getAs[Long]("dup_of") == 13L,
       "post-re-entry batch must dedup against the carried head")
-    val newest = IncrementalSemDedup.readHeads(spark, root, -999L).get
+    val newest = IncrementalSemDedup.readHeads(spark, gen, -999L).get
     assert(newest.filter(col("vec_id") === 41L).count() == 1,
       "the new era's generation must supersede the carried one")
+    // era 1's ledger rows and decided ids are still there after era 2
+    assert(era1.subsetOf(ledger.collect().toSet),
+      "the new era must not overwrite the carried ledger")
+    val decided = spark.read.parquet(IncrementalSemDedup.decidedPath(gen))
+      .select("vec_id").collect().map(_.getLong(0)).toSet
+    assert(era1.map(_.getLong(0)).subsetOf(decided),
+      "the new era must not overwrite the carried decided ids")
+  }
+
+  test("a fresh checkpoint over a root still holding batch>=0 history is refused") {
+    val (landing, ckpt, root) = dirs()
+    land(landing, "b1.parquet", b1)
+    val era1 = IncrementalSemDedup.run(
+      spark, landing.toString, ckpt, root, embSchema).collect().toSet
+    val landing2 = Files.createTempDirectory("sd-landing2r")
+    val ckpt2 = Files.createTempDirectory("sd-ckpt2r").toString + "/c"
+    land(landing2, "b2.parquet", b2)
+    // the new era's batch 0 would overwrite era 1's ledger, admitted
+    // vectors and decided ids — refused until the carry folds them
+    val e = intercept[IllegalArgumentException] {
+      IncrementalSemDedup.run(spark, landing2.toString, ckpt2, root, embSchema)
+    }
+    assert(e.getMessage.contains("compact first"), e.getMessage)
+    assert(spark.read.parquet(IncrementalSemDedup.ledgerPath(root))
+      .drop("batch").collect().toSet == era1)
   }
 
   test("a SECOND re-entry (prior batch=-1 plus new-era generations) keeps the carried head") {
     val (landing, ckpt, root) = dirs()
     land(landing, "b1.parquet", b1)
     IncrementalSemDedup.run(spark, landing.toString, ckpt, root, embSchema)
-    val heads = IncrementalSemDedup.headsPath(root)
     // first checkpoint loss: carry to batch=-1, run one new-era batch
-    graft.streaming.StoreMaintenance.reenterSuperseded(spark, heads)
+    val genRoot = Files.createTempDirectory("sd-gen2").toString + "/gens"
+    val gen0 = SemDedupMaintenance.adopt(spark, genRoot, root)
     val landing2 = Files.createTempDirectory("sd-landing2b")
     val ckpt2 = Files.createTempDirectory("sd-ckpt2b").toString + "/c"
     land(landing2, "b2.parquet", b2)
-    IncrementalSemDedup.run(spark, landing2.toString, ckpt2, root, embSchema)
-    val headBefore = IncrementalSemDedup.readHeads(spark, root, -999L).get
+    IncrementalSemDedup.run(spark, landing2.toString, ckpt2, gen0, embSchema)
+    val headBefore = IncrementalSemDedup.readHeads(spark, gen0, -999L).get
       .collect().map(_.getLong(0)).toSet
     assert(headBefore.nonEmpty)
-    // SECOND checkpoint loss: the store now holds the stale batch=-1 AND
+    // SECOND checkpoint loss: the store now holds the carried batch=-1 AND
     // the new era's batch=0 — re-entry must carry batch=0's relation into
-    // batch=-1 without wiping it (the listing includes the old batch=-1,
-    // which must not be deleted after being overwritten)
-    graft.streaming.StoreMaintenance.reenterSuperseded(spark, heads)
-    val carried = IncrementalSemDedup.readHeads(spark, root, -999L)
+    // the next generation's batch=-1 without losing it
+    val gen1 = SemDedupMaintenance.compact(spark, genRoot)
+    val carried = IncrementalSemDedup.readHeads(spark, gen1, -999L)
     assert(carried.isDefined, "second re-entry must not leave an empty store")
     assert(carried.get.collect().map(_.getLong(0)).toSet == headBefore,
       "second re-entry must carry the newest generation intact")
@@ -214,7 +239,7 @@ class IncrementalSemDedupSpec extends SparkSpec {
     land(landing3, "b3.parquet", Seq(
       row(50L, vec(1, 0.5).map(x => x * 4f)))) // direction family of seed 13
     val ledger = IncrementalSemDedup.run(
-      spark, landing3.toString, ckpt3, root, embSchema)
+      spark, landing3.toString, ckpt3, gen1, embSchema)
     val d50 = ledger.filter(col("vec_id") === 50L).head()
     assert(!d50.getAs[Boolean]("kept") && d50.getAs[Long]("dup_of") == 13L,
       "third-era batch must dedup against the twice-carried head")

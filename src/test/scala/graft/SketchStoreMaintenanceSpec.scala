@@ -59,7 +59,7 @@ class SketchStoreMaintenanceSpec extends SparkSpec {
     val r = SketchStoreMaintenance.maintain(spark, genRoot,
       maxFiles = 1000000L)
     assert(!r.compacted && r.generation.isEmpty)
-    assert(r.dailyFiles > 0 && r.dailyBytes > 0)
+    assert(r.files > 0 && r.bytes > 0)
     assert(StoreMaintenance.currentGeneration(spark, genRoot) == gen0,
       "a no-op maintain must not move the generation pointer")
   }
@@ -140,7 +140,7 @@ class SketchStoreMaintenanceSpec extends SparkSpec {
     // ...maintain measures the CMS store: quiet under threshold...
     val r0 = SketchStoreMaintenance.maintain(spark, genRoot,
       maxFiles = 1000000L)
-    assert(!r0.compacted && r0.generation.isEmpty && r0.dailyFiles > 0L)
+    assert(!r0.compacted && r0.generation.isEmpty && r0.files > 0L)
     // ...and a trip folds it through the same engine carry
     val r = SketchStoreMaintenance.maintain(spark, genRoot, maxFiles = 0L)
     assert(r.compacted && r.generation.isDefined)
@@ -153,6 +153,6 @@ class SketchStoreMaintenanceSpec extends SparkSpec {
       new java.io.File(s"$bare/$g").mkdirs(); g
     })
     val rb = SketchStoreMaintenance.maintain(spark, bare, maxFiles = 0L)
-    assert(!rb.compacted && rb.generation.isEmpty && rb.dailyFiles == 0L)
+    assert(!rb.compacted && rb.generation.isEmpty && rb.files == 0L)
   }
 }

@@ -57,7 +57,7 @@ class SourceCapMaintenanceSpec extends SparkSpec {
     val gen0 = StoreMaintenance.currentGeneration(spark, genRoot)
     val r = SourceCapMaintenance.maintain(spark, genRoot, maxFiles = 1000000L)
     assert(!r.compacted && r.generation.isEmpty)
-    assert(r.countFiles > 0 && r.countBytes > 0)
+    assert(r.files > 0 && r.bytes > 0)
     assert(StoreMaintenance.currentGeneration(spark, genRoot) == gen0,
       "a no-op maintain must not move the generation pointer")
   }
@@ -94,7 +94,7 @@ class SourceCapMaintenanceSpec extends SparkSpec {
   test("a triggered compaction re-sizes bucket counts from measured bytes") {
     val (genRoot, _) = adoptedStore()
     SourceCapMaintenance.compact(
-      spark, genRoot, countBuckets = Some(8), idBuckets = Some(8))
+      spark, genRoot, buckets = Map("counts" -> 8, "decided" -> 8))
     val cur = StoreMaintenance.resolveCurrent(spark, genRoot)
     val countsPath = IncrementalSourceCap.countsPath(cur)
     assert(IncrementalAnnIndex.bucketCount(spark, countsPath).contains(8))

@@ -65,7 +65,7 @@ class WinnowMaintenanceSpec extends SparkSpec {
     val gen0 = StoreMaintenance.currentGeneration(spark, genRoot)
     val r = WinnowMaintenance.maintain(spark, genRoot, maxFiles = 1000000L)
     assert(!r.compacted && r.generation.isEmpty)
-    assert(r.fpFiles > 0 && r.fpBytes > 0)
+    assert(r.files > 0 && r.bytes > 0)
     assert(StoreMaintenance.currentGeneration(spark, genRoot) == gen0,
       "a no-op maintain must not move the generation pointer")
   }
@@ -107,7 +107,7 @@ class WinnowMaintenanceSpec extends SparkSpec {
   test("a triggered compaction re-sizes bucket counts from measured bytes") {
     val (genRoot, _) = adoptedStore()
     // an explicit re-size down to 8 fingerprint buckets…
-    WinnowMaintenance.compact(spark, genRoot, fpBuckets = Some(8))
+    WinnowMaintenance.compact(spark, genRoot, buckets = Map("fps" -> 8))
     val cur = StoreMaintenance.resolveCurrent(spark, genRoot)
     assert(IncrementalAnnIndex.bucketCount(
       spark, IncrementalWinnow.fpPath(cur)).contains(8))
